@@ -227,6 +227,58 @@ def clear_cache(force: bool = False) -> dict:
     return {"pins": n_pins, "local_tables": n_tbls, "dedup_caches": n_dedup}
 
 
+# Logical operators between a materialized leaf and a frame's output
+# that keep each row's order id AND its physical partition (narrow),
+# those that keep the id only (may shuffle), and the leaves an id can
+# be read from.
+_NARROW_NODES = {"Project", "Filter", "Generate", "SubqueryAlias",
+                 "ResolvedHint", "LocalRelation"}
+_ID_PASS_NODES = _NARROW_NODES | {"Window", "Join"}
+_ID_STORE_NODES = {"InMemoryRelation", "LogicalRDD"}
+
+
+def ids_frozen(sdf: SparkDataFrame, layout: bool = False) -> bool:
+    """True when ``sdf``'s ``__order__`` is READ from a materialized
+    relation (a pin, a user cache, a driver-built table) through
+    deterministic id-preserving operators only — every job over
+    ``sdf`` then sees the same ids without pinning ``sdf`` itself.
+    This is the case for a Series order op over an anchor an earlier
+    op augmented (Frame._augment): pinning that growing plan again per
+    op would nest cached plans, and Spark prints a cached AQE plan
+    with both its initial and final form — the plan strings every job
+    records double per nesting level. ``layout=True`` also requires
+    the physical partitioning to be stored: narrow operators only (no
+    Window/Join, which may shuffle)."""
+    passes = _NARROW_NODES if layout else _ID_PASS_NODES
+    try:
+        # a derived frame's own QueryExecution: resolving sdf's cache
+        # substitution now would freeze it before a later persist of sdf
+        plan = sdf.select("*")._jdf.queryExecution().withCachedData()
+        if not plan.deterministic():
+            return False
+        out = plan.output()
+        oid = next((out.apply(i).exprId() for i in range(out.size())
+                    if out.apply(i).name() == ORDER_COL), None)
+        if oid is None:
+            return False
+        found, stack = False, [plan]
+        while stack:
+            node = stack.pop()
+            kind = node.getClass().getSimpleName()
+            if kind in _ID_STORE_NODES:
+                o = node.output()
+                found = found or any(o.apply(i).exprId().equals(oid)
+                                     for i in range(o.size()))
+            elif kind in passes:
+                ch = node.children()
+                stack.extend(ch.apply(i) for i in range(ch.size()))
+            else:
+                return False
+        return found
+    except Exception:  # noqa: BLE001 — connect-mode or API drift
+        return False
+
+
 def pin_order(sdf: SparkDataFrame) -> SparkDataFrame:
     """Freeze the order-id assignment before any kernel collects
     order-derived literals.

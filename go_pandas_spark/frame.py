@@ -19,6 +19,7 @@ from . import _internal as I
 from .series import Series, _is_scalar_int, _is_scalar_zero
 
 _DUP_SEQ = itertools.count()
+_AUG_SEQ = itertools.count(1)
 
 
 def _dup_phys(label) -> str:
@@ -298,16 +299,48 @@ class Frame:
     def empty(self) -> bool:
         return self._sdf.isEmpty()
 
-    def _position_col(self) -> Column:
-        """TRUE 0-based row position along the frame order, as a pure
-        distributed expression (running count with block carries).
-        ``__order__`` itself is ``monotonically_increasing_id`` bits —
-        (partition << 33) + offset — NEVER a position on a
-        multi-partition frame; exposing it as a pandas label silently
-        corrupts every positional consumer."""
-        from .operators.distwindow import running_expr
+    def _augment(self, kernel) -> Column:
+        """Anchor augmentation — how Series order ops (shift/cum*/rank/
+        rolling/expanding) and row positions run on the frame kernels
+        while the result stays a Column of THIS frame:
+        ``kernel(sdf, tmp)`` returns the anchor's plan (rows and order
+        ids unchanged) plus an internal column ``tmp``; that becomes
+        the anchor's plan and the returned Column reads ``tmp``, so
+        assign()/to_frame()/filters keep composing without a join.
 
-        return running_expr(self._sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
+        SIDE EFFECT (deliberate): ``self._sdf`` is rebound IN PLACE —
+        even if the result is discarded, the anchor keeps the pinned
+        blocked plan plus one internal ``__index_serw*`` column. A
+        copy-on-write anchor would force an index-alignment JOIN
+        whenever the result meets the frame's own columns (the common
+        case). Callers must therefore read ``self._sdf`` AFTER this
+        returns. Cost: an internal column public projections never
+        see, and the kernel's pin of the anchor (released by
+        ``clear_cache()``).
+
+        The anchor is registered live (its plan reads pins) but NOT
+        tagged as a blocked output: the next op on it reads the ids
+        this op's kernel froze (``I.ids_frozen``) instead of pinning
+        the grown plan once more — a pin per op would nest cached
+        plans, whose printed form doubles per level."""
+        from .operators.distwindow import consume_chained
+
+        tmp = f"{I.INDEX_PREFIX}serw{next(_AUG_SEQ)}__"
+        self._sdf = kernel(consume_chained(self), tmp)
+        I.register_live_blocked(self)
+        return F.col(tmp)
+
+    def _position_col(self) -> Column:
+        """TRUE 0-based row position along the frame order, as an
+        internal column of this frame (``_augment`` over
+        ``distwindow.row_position``). ``__order__`` itself is
+        ``monotonically_increasing_id`` bits — (partition << 33) +
+        offset — NEVER a position on a multi-partition frame; exposing
+        it as a pandas label silently corrupts every positional
+        consumer."""
+        from .operators.distwindow import row_position
+
+        return self._augment(row_position)
 
     @property
     def index(self) -> "Series":
@@ -812,8 +845,9 @@ class Frame:
         """Positional row slice (``_iLocIndexer``, ``indexing.py:1912``):
         blocked distributed position + range filter (no single-task
         global window)."""
-        rn = self._position_col()
-        sdf = self._sdf.withColumn("__rn__", rn).filter(
+        from .operators.distwindow import row_position
+
+        sdf = row_position(self._sdf, "__rn__").filter(
             (F.col("__rn__") >= start) & (F.col("__rn__") < stop)).drop("__rn__")
         return self._copy(sdf)
 
@@ -2297,7 +2331,8 @@ class Frame:
     def _label_col(self) -> Column:
         """The per-row label pandas reductions report: the index column
         when one exists, else the TRUE 0-based position (see
-        _position_col — raw __order__ ids are not positions)."""
+        _position_col — raw __order__ ids are not positions; that path
+        rebinds ``self._sdf``, so read the plan after calling this)."""
         return F.col(I.index_col(0)) if self._index_names else self._position_col()
 
     def _row_idx_of(self, best) -> "Series":
@@ -2331,10 +2366,8 @@ class Frame:
         def key(c):
             return F.when(F.col(c).isNotNull(), F.struct(F.col(c), F.col(I.ORDER_COL)))
 
-        # materialize the label first: the position expression holds a
-        # window, which cannot sit inside an aggregate
-        base = self._sdf.withColumn("__lab__", self._label_col())
-        row = base.agg(*[F.min_by(F.col("__lab__"), key(c)).alias(c) for c in cols]).first()
+        lab = self._label_col()  # may rebind self._sdf: read it after
+        row = self._sdf.agg(*[F.min_by(lab, key(c)).alias(c) for c in cols]).first()
         return {c: row[c] for c in cols}
 
     def idxmax(self, axis: int = 0):
@@ -2349,8 +2382,8 @@ class Frame:
             # max over (value, -order): first occurrence wins ties
             return F.when(F.col(c).isNotNull(), F.struct(F.col(c), (-F.col(I.ORDER_COL)).alias("o")))
 
-        base = self._sdf.withColumn("__lab__", self._label_col())
-        row = base.agg(*[F.max_by(F.col("__lab__"), key(c)).alias(c) for c in cols]).first()
+        lab = self._label_col()  # may rebind self._sdf: read it after
+        row = self._sdf.agg(*[F.max_by(lab, key(c)).alias(c) for c in cols]).first()
         return {c: row[c] for c in cols}
 
     def mode(self):
@@ -2371,8 +2404,8 @@ class Frame:
     def equals(self, other: "Frame") -> bool:
         """Positional value equality (``generic.py:1354``): same shape,
         same columns, same values at the same positions. Positions come
-        from the distributed running count — no global window."""
-        from .operators.distwindow import running_expr
+        from ``distwindow.row_position`` — no global window."""
+        from .operators.distwindow import row_position
 
         if self.columns != other.columns:
             return False
@@ -2380,9 +2413,8 @@ class Frame:
             return False
 
         def with_pos(f: "Frame") -> SparkDataFrame:
-            pos = running_expr(f._sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
-            return f._sdf.select(pos.alias("__pos__"),
-                                 *[F.col(c) for c in f.columns])
+            return row_position(f._sdf, "__pos__").select(
+                "__pos__", *[F.col(c) for c in f.columns])
 
         a, b = with_pos(self), with_pos(other)
         joined = a.join(b, a["__pos__"] == b["__pos__"], "inner")
@@ -2394,9 +2426,9 @@ class Frame:
     def take(self, indices) -> "Frame":
         """``generic.py:3068`` — positional selection IN the requested
         order (unlike a boolean filter). Positions come from the
-        distributed running count; the (output_slot → position) map is
-        a broadcast literal frame."""
-        from .operators.distwindow import running_expr
+        ``distwindow.row_position``; the (output_slot → position) map
+        is a broadcast literal frame."""
+        from .operators.distwindow import row_position
 
         idx = list(indices)
         if not idx:
@@ -2404,8 +2436,7 @@ class Frame:
         neg = [i for i in idx if i < 0]
         total = self._sdf.count() if neg else None
         idx = [i if i >= 0 else total + i for i in idx]
-        pos = running_expr(self._sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
-        base = self._sdf.withColumn("__pos__", pos)
+        base = row_position(self._sdf, "__pos__")
         spark = self._sdf.sparkSession
         want = spark.createDataFrame(
             [(s, int(p)) for s, p in enumerate(idx)],
@@ -2649,7 +2680,8 @@ class Frame:
         cols = [cols] if isinstance(cols, str) else list(cols)
         scalar = not isinstance(where, (list, tuple))
         probes = [where] if scalar else list(where)
-        sdf = self._sdf.withColumn("__lbl__", self._label_col())
+        lbl = self._label_col()  # may rebind self._sdf: read it after
+        sdf = self._sdf.withColumn("__lbl__", lbl)
         ok = functools.reduce(op.and_, [F.col(c).isNotNull() for c in cols])
         rows = []
         for wv in probes:
@@ -2849,12 +2881,13 @@ class Frame:
             return self.rename(dict(zip(self.columns, labels)))
         import pandas as pd
 
+        from .operators.distwindow import row_position
+
         base = self.reset_index(drop=True) if self._index_names else self
         lab = pd.DataFrame({"__lab__": list(labels)})
         lf = Frame.from_pandas(self._sdf.sparkSession, lab)
-        left = base._sdf.withColumn("__pos__", base._position_col())
-        right = lf._sdf.withColumn("__pos__", lf._position_col()) \
-            .select("__pos__", "__lab__")
+        left = row_position(base._sdf, "__pos__")
+        right = row_position(lf._sdf, "__pos__").select("__pos__", "__lab__")
         joined = left.join(F.broadcast(right), "__pos__", "inner") \
             .drop("__pos__")
         return Frame(joined.withColumnsRenamed({"__lab__": I.index_col(0)}),

@@ -158,6 +158,10 @@ class GroupBy:
         return self._run_specs(specs, dup=out_dup or None)
 
     def _run_specs(self, specs: list[tuple[str, str, str]], dup=None):
+        # the positional label may rebind the frame's plan (Frame.
+        # _augment), so it is taken before the plan is read
+        idxlab = (self._idx_expr() if any(fn in ("idxmin", "idxmax")
+                                          for fn, _, _ in specs) else None)
         sdf = self._sdf()
         pre = []  # window pre-computations (mad)
         aggs: list[Column] = []
@@ -168,20 +172,14 @@ class GroupBy:
                     pre.append((mcol, F.avg(col).over(W.partitionBy(*self._keys))))
                 aggs.append(F.avg(F.abs(F.col(col) - F.col(mcol))).alias(alias))
             elif fn == "idxmin":
-                # label pre-computed: the position expression holds a
-                # window, which cannot sit inside an aggregate; ties
-                # break to FIRST occurrence via the (value, order) key
-                if "__idxlab__" not in [p[0] for p in pre]:
-                    pre.append(("__idxlab__", self._idx_expr()))
+                # ties break to FIRST occurrence via the (value, order) key
                 k = F.when(F.col(col).isNotNull(),
                            F.struct(F.col(col), F.col(I.ORDER_COL)))
-                aggs.append(F.min_by(F.col("__idxlab__"), k).alias(alias))
+                aggs.append(F.min_by(idxlab, k).alias(alias))
             elif fn == "idxmax":
-                if "__idxlab__" not in [p[0] for p in pre]:
-                    pre.append(("__idxlab__", self._idx_expr()))
                 k = F.when(F.col(col).isNotNull(),
                            F.struct(F.col(col), (-F.col(I.ORDER_COL)).alias("o")))
-                aggs.append(F.max_by(F.col("__idxlab__"), k).alias(alias))
+                aggs.append(F.max_by(idxlab, k).alias(alias))
             elif fn == "ohlc":
                 # min_by/max_by on the order id, NOT first/last: aggregate
                 # first() is order-undefined after a shuffle — it only

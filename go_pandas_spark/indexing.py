@@ -23,13 +23,13 @@ from . import _internal as I
 
 
 def _rn(sdf):
-    """0-based global position over the order contract — the BLOCKED
-    distributed running count (operators/distwindow), not a single
-    unpartitioned window: positional filters must not serialize the
-    frame through one task at scale."""
-    from .operators.distwindow import running_expr
+    """``sdf`` plus ``__rn__`` = 0-based global position over the order
+    contract (``distwindow.row_position``), not a single unpartitioned
+    window: positional filters must not serialize the frame through
+    one task at scale."""
+    from .operators.distwindow import row_position
 
-    return running_expr(sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
+    return row_position(sdf, "__rn__")
 
 
 class _LocIndexer:
@@ -176,8 +176,7 @@ class _ILocIndexer:
             out = f
         else:
             cond, reverse = self._positions(key)
-            sdf = (f._sdf.withColumn("__rn__", _rn(f._sdf))
-                   .filter(cond(F.col("__rn__"))).drop("__rn__"))
+            sdf = _rn(f._sdf).filter(cond(F.col("__rn__"))).drop("__rn__")
             if reverse:
                 sdf = (sdf.orderBy(F.col(I.ORDER_COL).desc())
                        .drop(I.ORDER_COL)

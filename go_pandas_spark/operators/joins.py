@@ -362,17 +362,14 @@ def concat(frames: list[Frame], axis: int = 0, join: str = "outer") -> Frame:
 
 def _align_keys(frame: Frame):
     """Alignment keys for positional (unindexed) frames: the TRUE
-    0-based position via the blocked running count — raw ``__order__``
+    0-based position (``distwindow.row_position``) — raw ``__order__``
     ids are (partition<<33)+offset, so two frames' ids never line up
     after independent repartitions (fuzz-caught)."""
     if frame.index_spark_cols:
         return frame._sdf, frame.index_spark_cols
-    from .distwindow import running_expr
+    from .distwindow import row_position
 
-    sdf = frame._sdf.withColumn(
-        "__apos__",
-        running_expr(frame._sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1)
-    return sdf, ["__apos__"]
+    return row_position(frame._sdf, "__apos__"), ["__apos__"]
 
 
 def combine_first(left: Frame, right: Frame) -> Frame:

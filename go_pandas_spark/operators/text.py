@@ -206,8 +206,9 @@ def pack_sequences(sdf, id_col: str, token_col: str, budget: int,
     first token lands in (the standard GPT-style packing layout).
 
     Grouped (``by``) packing uses a per-group window; the global tape
-    uses the blocked running-sum expression from operators/distwindow,
-    so no single task ever sees the whole corpus."""
+    is the blocked running sum of operators/distwindow
+    (``expanding_blocked``), so no single task ever sees the whole
+    corpus."""
     from pyspark.sql import Window as W
 
     tok = F.col(token_col).cast("long")
@@ -216,13 +217,16 @@ def pack_sequences(sdf, id_col: str, token_col: str, budget: int,
              .rowsBetween(W.unboundedPreceding, W.currentRow)
         cum = F.sum(tok).over(w)
     else:
-        from .distwindow import running_expr
-        cum = running_expr(sdf, F.col(id_col), tok, "sum")
+        from .distwindow import expanding_blocked
+
+        sdf = expanding_blocked(sdf.withColumn("__tok__", tok), F.col(id_col),
+                                {"__cum__": ("__tok__", "sum")})
+        cum = F.col("__cum__")
     start = cum - tok
     return sdf.withColumns({
         "seq_id": F.floor(start / F.lit(budget)),
         "seq_offset": start % F.lit(budget),
-    })
+    }).drop("__tok__", "__cum__")
 
 
 def bucket_by_length(sdf, id_col: str, token_col: str, batch_budget: int,

@@ -119,73 +119,40 @@ _MODULES = ["tpch", "tpch2", "relational", "aggregation", "windows", "reshape", 
             "missing", "llm", "extras", "surface2", "corpus"]
 
 # The driver hash-verifies the FIRST 50 entries of queries() each
-# round; the window rotates onto (a) queries whose engine paths
-# changed this round and (b) the stalest driver evidence. History:
-# r1-r3 tpch/relational/aggregation; r4 windows/asof/missing/LLM;
-# r5 aggregation/reshape/scalars tails; r6 everything then-registered;
-# r7 the new blocked-plan queries + r1-r4 staleness; r8 the widened
-# EWM oracles + the r2-r4 cohort; r9 the fused/approx engines + the
-# r4/r5 staleness tail; r10 the shift/multimodal changed paths + the
-# full r6-latest cohort (completing all-181 ever-sampled coverage).
-# Since r10 multimodal_decode_pipeline is hash-verified too
-# (closed-form pixel rule → DuckDB-recomputable decoded facts), so
-# every registered query is oracle-checkable. r11 rotated onto the
-# dup-label/merge/rank/to_datetime/pin-LRU changed paths + the full
-# r7-latest cohort. r12 rotated onto the dup-label-aggregation /
-# dup-input-merge / MultiIndex-depth-3 changed paths + the r8 cohort
-# (stalest; 38 of its 40 rows). r13 rotates onto this round's changed
-# paths — dup_tuple_concat is the NEW oracle for duplicate tuple
-# labels in MultiIndex columns; dup_label_agg/dup_label_pipeline ride
-# the _dup_key stranded-label resolution in sort/groupby/named-agg;
-# pivot_table_multi_values rides the _relabel_pivoted source-order
-# sort (numeric categories); to_datetime_parse rides the month-name
-# case canonicalization; concat_axis1_align rides the concat(axis=1)
-# MultiIndex dispatch — plus the two r8 stragglers (crosstab_counts,
-# drop_duplicates_keep_first re-enter after one round out) and the
-# FULL r9 cohort (42 rows, then the stalest evidence). r14 (VERDICT
-# r13 #1 — the highest-leverage item): the window lands on the
-# r13-OPTIMIZED kernels that the inherited r13 rotation missed
-# (literal-carry + aligned zero-shuffle paths: ffill/interpolate/
-# cumulative/moments/ewm/rolling blocked kernels, the asof/ordered
-# carry users, minhash's checkpointed gram stage), plus every path r14
-# itself touches (merge_asof struct-key fast carries, the fused
-# approx-median grid, dedup_components' unique-nodes singleton union,
-# the ewm_mean grouped cython kernel, q5 as the plan-memo flagship),
-# plus 29 rows of the r10 cohort — now the stalest driver evidence.
-# The 13 r10 stragglers left for the next rotation:
-# rowwise_udf_integrate, frame_take_positions, series_factorize_codes,
-# series_duplicated_flags, frame_pct_change, frame_reindex_labels,
-# frame_update_overwrite, frame_align_outer, temperature_sample_mix,
-# shuffle_shards_deterministic, assign_train_splits, vocab_top100,
-# quantize_embeddings_int8.
+# round. Contract: the window leads with every query whose engine path
+# the round changed, then the stalest driver evidence. Current window:
+# the Series order ops / positional primitive / pin-freeze paths
+# (Series rolling+expanding, take/iloc/combine/idxmin on
+# row_position, autocorr's shift, pack_sequences' running sum, and
+# the blocked kernels whose pins or literal lookups changed), then the
+# eleven remaining r10 stragglers, then the oldest r10-cohort rows.
 _VERIFY_FIRST = [
-    # r13-optimized kernels (VERDICT r13 #1 explicit list)
-    "ffill_global_limit", "interpolate_global_linear",
+    # Series order ops, positions and pins (this round's paths)
+    "series_rolling_expression", "frame_take_positions",
+    "pack_sequences_chunked", "iloc_positional_slice", "iloc_step_slice",
+    "combine_first_coalesce", "combine_func_elementwise",
+    "autocorr_and_monotonic", "groupby_idx_minmax",
+    "rolling_ungrouped_global", "frame_pct_change",
     "cumulative_ungrouped_global", "expanding_moments_global",
+    "ffill_global_limit", "interpolate_global_linear",
     "ewm_var_noadjust_global", "ewm_cov_corr_global",
-    "rolling_ungrouped_global", "merge_asof_global_noby",
-    "dedup_minhash_lsh", "merge_ordered_ffill",
-    "resample_upsample_ffill",
-    # ROUND 14 changed paths
-    "merge_asof_backward", "merge_asof_forward", "merge_asof_nearest",
-    "merge_asof_tolerance", "ewm_mean",
+    "merge_asof_global_noby", "ewm_mean",
     "expanding_median_approx_global", "expanding_median_approx_grouped",
-    "dedup_components", "q5_local_supplier_volume",
-    "interpolate_linear",
-    # the r10 cohort — stalest driver evidence (29 of its 42 rows)
+    "interpolate_linear", "interpolate_limit_direction",
+    "merge_ordered_ffill", "resample_upsample_ffill",
+    # the r10 stragglers
+    "rowwise_udf_integrate", "series_factorize_codes",
+    "series_duplicated_flags", "frame_reindex_labels",
+    "frame_update_overwrite", "frame_align_outer",
+    "temperature_sample_mix", "shuffle_shards_deterministic",
+    "assign_train_splits", "vocab_top100", "quantize_embeddings_int8",
+    # the oldest r10-cohort rows
     "q3_shipping_priority", "q10_returned_items",
     "query_string_frontend", "eval_assign_arithmetic",
-    "combine_first_coalesce", "nlargest_orders", "loc_label_slice",
-    "groupby_stats_battery", "corr_cov_by_group", "corr_spearman",
-    "shift_diff_pct_change", "series_rolling_expression",
+    "nlargest_orders", "loc_label_slice", "groupby_stats_battery",
+    "corr_cov_by_group", "corr_spearman", "shift_diff_pct_change",
     "pivot_table_mean", "melt_wide_to_long", "string_methods_battery",
-    "datetime_fields_battery", "datetime_floor_round",
-    "calendar_offsets", "custom_business_day_holidays",
-    "fillna_scalar_and_dict", "interpolate_limit_direction",
-    "multimodal_features", "multimodal_decode_pipeline",
-    "multimodal_frame_sample", "bucket_by_length_batches",
-    "autocorr_and_monotonic", "cube_all_combos", "salted_skew_join",
-    "tshift_duration",
+    "datetime_fields_battery",
 ]
 
 

@@ -529,10 +529,10 @@ def cumulative_ungrouped_global(spark, sf_dir):
     """,
 )
 def series_rolling_expression(spark, sf_dir):
-    """Series-mode ungrouped rolling + expanding as PURE blocked
-    Column expressions (distwindow.RollingEdges / running_expr):
-    composable into one assign(), and the physical window partitions
-    by the literal block id — never a single global task."""
+    """Series-mode ungrouped rolling + expanding on the frame kernels
+    (distwindow.rolling_blocked / expanding_blocked over the Series'
+    anchor frame): composable into one assign(), and every physical
+    window partitions by the block id — never a single global task."""
     ev = load(spark, sf_dir, "events").sort_values(["ts", "event_id"])
     s = ev["value"]
     out = ev.assign(rsum=s.rolling(5).sum().round(6),

@@ -14,11 +14,11 @@ Ungrouped whole-frame windows in FRAME mode take the block-partitioned
 plan of ``operators/distwindow.py`` — range-partition on the order
 key, boundary-borrow (rolling/shift) or prefix-carry (expanding) —
 so no single task ever sees the whole frame. Series-mode order ops
-(shift/diff/cum*/rank) are ALSO blocked: they stay pure column
-expressions (composable into assign()/arithmetic) whose windows
-partition by a literal-split block id with literal cross-block
-carries (``distwindow.running_expr``/``shift_expr``/``rank_expr``).
-``min_periods`` compiles to a count-guard expression.
+(shift/diff/cum*/rank, ``SeriesRolling``/``SeriesExpanding``) run the
+SAME frame kernels over the Series' anchor frame and read the result
+back as an internal column (``Frame._augment``), so they stay
+composable into assign()/arithmetic. ``min_periods`` compiles to a
+count-guard expression.
 """
 
 from __future__ import annotations
@@ -1409,45 +1409,12 @@ class EWM(_WindowOp):
 
 
 
-_SER_TMP_SEQ = [0]
-
-
-def _series_lit_cap(sdf) -> int:
-    """Literal-path block cap for Series-mode window expressions —
-    the 256 default of ``_n_blocks(lit=True)``, overridable via
-    ``spark.gopandas.seriesLiteralBlockCap`` (tests lower it to force
-    the escalation path on a local[32] session)."""
-    try:
-        return int(sdf.sparkSession.conf.get(
-            "spark.gopandas.seriesLiteralBlockCap", "256"))
-    except Exception:  # noqa: BLE001
-        return 256
-
-
-def _series_escalates(sdf) -> bool:
-    """True when the literal-embedding Series path would CAP the block
-    count below the cluster's parallelism (r8 VERDICT missing #1: an
-    ``assign(c=s.expanding().sum())`` silently ran ≤256-way where the
-    frame API fans to 4096). Escalated ops route through the
-    frame-mode broadcast-table kernels by augmenting the ANCHOR frame
-    in place with an internal result column — every existing consumer
-    (assign/to_frame/filters) then reads a plain column."""
-    return (sdf.sparkSession.sparkContext.defaultParallelism
-            > _series_lit_cap(sdf))
-
-
-def _series_tmp() -> str:
-    _SER_TMP_SEQ[0] += 1
-    return f"{I.INDEX_PREFIX}serw{_SER_TMP_SEQ[0]}__"
-
-
 class SeriesRolling:
     """Ungrouped ``Series.rolling`` (``core/window.py:59`` on a
-    Series): every aggregate is a PURE blocked Column expression
-    (``distwindow.RollingEdges``) — composable into assign()/
-    arithmetic like any Series op, and never a single-task global
-    window. One build-time edge job is shared by every aggregate of
-    this window. Decomposable aggregates only; for median/quantile/
+    Series): every aggregate runs ``distwindow.rolling_blocked`` over
+    the Series' anchor frame (``Frame._augment``) — composable into
+    assign()/arithmetic like any Series op, and never a single-task
+    global window. Decomposable aggregates only; for median/quantile/
     apply use the frame API (``df[[col]].rolling(...)``)."""
 
     def __init__(self, series, window, min_periods: int | None = None,
@@ -1464,64 +1431,46 @@ class SeriesRolling:
             self._lo, self._hi = -(self._n - 1) + off, off
         else:
             self._lo, self._hi = -(self._n - 1), 0
-        self._edges = None
 
-    def _builder(self):
-        if self._edges is None:
-            from .operators.distwindow import RollingEdges
+    def _run(self, make, centered: bool = False):
+        """``make(value_col, w)`` is the aggregate over the per-block
+        window ``w``. ``centered``: the value is shifted by an in-data
+        reference first (var/std are shift-invariant; raw Σx/Σx²
+        cancel at |mean| ≫ std)."""
+        from .operators.distwindow import first_valid_refs, rolling_blocked
 
-            self._edges = RollingEdges(self._s._frame._sdf, F.col(I.ORDER_COL),
-                                       self._s._scol, self._lo, self._hi,
-                                       monotonic_id=True)
-        return self._edges
+        def kernel(sdf, tmp):
+            c = F.col(tmp)
+            if centered:
+                c = c - F.lit(first_valid_refs(sdf, [tmp])[tmp])
+            return rolling_blocked(sdf, F.col(I.ORDER_COL), self._lo, self._hi,
+                                   lambda w: [(tmp, make(c, w))],
+                                   monotonic_id=True)
 
-    def _escalate(self, make):
-        """Frame-mode blocked rolling over the anchor frame: the
-        Series expression lands in an internal column, rolling_blocked
-        replaces it, the AUGMENTED sdf becomes the anchor's plan (rows
-        and order ids unchanged), and the result Series reads the
-        internal column — so assign()/to_frame()/filters keep working
-        while the kernel fans out past the literal 256-block cap."""
-        from .operators.distwindow import (consume_chained,
-                                           mark_blocked_output,
-                                           rolling_blocked)
-
-        fr = self._s._frame
-        tmp = _series_tmp()
-        sdf = consume_chained(fr).withColumn(tmp, self._s._scol.cast("double"))
-
-        def build(w):
-            return [(tmp, make(F.col(tmp), w))]
-
-        fr._sdf = rolling_blocked(sdf, F.col(I.ORDER_COL), self._lo, self._hi,
-                                  build, monotonic_id=True)
-        mark_blocked_output(fr)
-        return self._s._with_scol(F.col(tmp))
+        return self._s._anchored(kernel, self._s._scol.cast("double"))
 
     _AGG = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max}
 
-    def _k(self, kind: str, minp: int | None = None):
-        mp = self._minp if minp is None else minp
-        if _series_escalates(self._s._frame._sdf):
-            if kind == "count":
-                def make(c, w):
-                    e = F.count(c).over(w).cast("double")
-                    if mp > 0:
-                        e = F.when(F.count(F.lit(1)).over(w) >= mp, e)
-                    return e
-            else:
-                fn = self._AGG[kind]
+    def _k(self, kind: str):
+        mp = self._minp
+        if kind == "count":
+            def make(c, w):
+                # pandas guards count on PHYSICAL rows, not non-nulls
+                e = F.count(c).over(w).cast("double")
+                if mp > 0:
+                    e = F.when(F.count(F.lit(1)).over(w) >= mp, e)
+                return e
+        else:
+            fn = self._AGG[kind]
 
-                def make(c, w):
-                    e = fn(c).over(w)
-                    if kind == "sum":
-                        e = F.when(F.count(c).over(w) > 0, e)
-                    if mp > 0:
-                        e = F.when(F.count(c).over(w) >= mp, e)
-                    return e
-            return self._escalate(make)
-        e = self._builder().expr(kind, mp)
-        return self._s._with_scol(e)
+            def make(c, w):
+                e = fn(c).over(w)
+                if kind == "sum":
+                    e = F.when(F.count(c).over(w) > 0, e)
+                if mp > 0:
+                    e = F.when(F.count(c).over(w) >= mp, e)
+                return e
+        return self._run(make)
 
     def sum(self):
         return self._k("sum")
@@ -1538,17 +1487,10 @@ class SeriesRolling:
     def count(self):
         return self._k("count")
 
-    def _var_escalated(self, ddof: int, std: bool):
-        from .operators.distwindow import first_valid_refs
-
-        fr = self._s._frame
-        tmp = _series_tmp()
-        probe = fr._sdf.withColumn(tmp, self._s._scol.cast("double"))
-        ref = first_valid_refs(probe, [tmp])[tmp]
+    def _var(self, ddof: int, std: bool):
         mp = self._minp
 
-        def make(c, w):
-            x = c - F.lit(ref)  # centered: raw sums cancel at |mean|>>std
+        def make(x, w):
             n = F.count(x).over(w).cast("double")
             s1 = F.coalesce(F.sum(x).over(w), F.lit(0.0))
             s2 = F.coalesce(F.sum(x * x).over(w), F.lit(0.0))
@@ -1558,134 +1500,78 @@ class SeriesRolling:
                 e = F.when(n >= mp, e)
             return F.sqrt(e) if std else e
 
-        return self._escalate(make)
+        return self._run(make, centered=True)
 
     def var(self, ddof: int = 1):
-        if _series_escalates(self._s._frame._sdf):
-            return self._var_escalated(ddof, std=False)
-        return self._s._with_scol(self._builder().var_expr(ddof, self._minp))
+        return self._var(ddof, std=False)
 
     def std(self, ddof: int = 1):
-        if _series_escalates(self._s._frame._sdf):
-            return self._var_escalated(ddof, std=True)
-        return self._s._with_scol(
-            self._builder().var_expr(ddof, self._minp, std=True))
+        return self._var(ddof, std=True)
 
 
 class SeriesExpanding:
-    """Ungrouped ``Series.expanding``: running aggregates as blocked
-    Column expressions sharing ONE build job (distwindow.RunningStats
-    — per-block totals folded to literal prefix carries)."""
+    """Ungrouped ``Series.expanding``: every aggregate runs
+    ``distwindow.expanding_blocked`` (per-block running partials plus
+    a broadcast prefix carry, centered var/std) over the Series'
+    anchor frame (``Frame._augment``)."""
 
     def __init__(self, series, min_periods: int = 1):
         self._s = series
         self._minp = int(min_periods)
-        self._stats = None
-        self._stats_c = None
 
-    def _st(self):
-        if self._stats is None:
-            from .operators.distwindow import RunningStats
+    def _run(self, kernel):
+        return self._s._anchored(kernel, self._s._scol.cast("double"))
 
-            self._stats = RunningStats(self._s._frame._sdf,
-                                       F.col(I.ORDER_COL), self._s._scol)
-        return self._stats
+    def _k(self, kind: str):
+        from .operators.distwindow import expanding_blocked
 
-    def _escalate(self, kind: str, ddof: int | None = None,
-                  std: bool = False):
-        """Frame-mode blocked expanding over the anchor frame (see
-        SeriesRolling._escalate): the Series expression lands in an
-        internal column, expanding_blocked (uncapped broadcast-table
-        kernel, centered var/std) replaces it in place, and the result
-        Series reads the internal column of the augmented anchor."""
-        from .operators.distwindow import (consume_chained,
-                                           expanding_blocked,
-                                           mark_blocked_output)
-
-        fr = self._s._frame
-        tmp = _series_tmp()
-        sdf = consume_chained(fr).withColumn(tmp, self._s._scol.cast("double"))
-        fr._sdf = expanding_blocked(sdf, F.col(I.ORDER_COL),
-                                    {tmp: (tmp, kind)},
-                                    min_periods=self._minp)
-        mark_blocked_output(fr)
-        out = F.col(tmp)
+        out = self._run(lambda sdf, tmp: expanding_blocked(
+            sdf, F.col(I.ORDER_COL), {tmp: (tmp, kind)},
+            min_periods=self._minp))
         if kind == "count":
-            out = out.cast("double")  # pandas expanding().count() is float64
-        return self._s._with_scol(out)
-
-    def _st_centered(self):
-        """Separate RunningStats over the CENTERED value for var/std
-        (shift-invariant; raw Σx/Σx² cancel at |mean| ≫ std, r8 — the
-        frame engines center the same way). sum/mean/min/max keep the
-        uncentered stats."""
-        if self._stats_c is None:
-            import math
-
-            from .operators.distwindow import RunningStats
-
-            rows = (self._s._frame._sdf
-                    .select(self._s._scol.cast("double").alias("__v__"))
-                    .limit(1024).collect())
-            ref = next((float(r["__v__"]) for r in rows
-                        if r["__v__"] is not None
-                        and math.isfinite(r["__v__"])), 0.0)
-            self._stats_c = RunningStats(
-                self._s._frame._sdf, F.col(I.ORDER_COL),
-                self._s._scol.cast("double") - F.lit(ref))
-        return self._stats_c
-
-    def _guard(self, out):
-        if self._minp > 0:
-            out = F.when(self._st().count() >= self._minp, out)                 .otherwise(F.lit(None))
-        return self._s._with_scol(out)
+            # pandas expanding().count() is float64
+            return out._with_scol(out._scol.cast("double"))
+        return out
 
     def sum(self):
-        if _series_escalates(self._s._frame._sdf):
-            return self._escalate("sum")
-        return self._guard(self._st().sum())
+        return self._k("sum")
 
     def min(self):
-        if _series_escalates(self._s._frame._sdf):
-            return self._escalate("min")
-        return self._guard(self._st().min())
+        return self._k("min")
 
     def max(self):
-        if _series_escalates(self._s._frame._sdf):
-            return self._escalate("max")
-        return self._guard(self._st().max())
+        return self._k("max")
 
     def count(self):
-        if _series_escalates(self._s._frame._sdf):
-            return self._escalate("count")
-        # pandas guards expanding.count on PHYSICAL rows, and the
-        # output is the observation count
-        out = self._st().count().cast("double")
-        if self._minp > 0:
-            out = F.when(self._st().rows() >= self._minp, out)                 .otherwise(F.lit(None))
-        return self._s._with_scol(out)
+        return self._k("count")
 
     def mean(self):
-        if _series_escalates(self._s._frame._sdf):
-            return self._escalate("mean")
-        st = self._st()
-        return self._guard(st.sum() / st.count())
+        return self._k("mean")
+
+    def _var(self, ddof: int, std: bool):
+        if ddof == 1:
+            return self._k("std" if std else "var")
+        from .operators.distwindow import expanding_blocked
+
+        # expanding_blocked's variance is ddof=1: rescale it by
+        # (n-1)/(n-ddof) with the running count from the same pass.
+        # pandas roll_var: NaN unless nobs >= max(minp, 1) and
+        # nobs > ddof; a single observation has variance 0.
+        minp = max(self._minp, 1)
+
+        def kernel(sdf, tmp):
+            cnt = f"{tmp}n"
+            out = expanding_blocked(sdf, F.col(I.ORDER_COL),
+                                    {tmp: (tmp, "var"), cnt: (tmp, "count")})
+            n = F.col(cnt).cast("double")
+            v = F.when((n >= minp) & (n > ddof), F.when(n == 1, F.lit(0.0))
+                       .otherwise(F.col(tmp) * (n - 1) / (n - F.lit(ddof))))
+            return out.withColumn(tmp, F.sqrt(v) if std else v).drop(cnt)
+
+        return self._run(kernel)
 
     def var(self, ddof: int = 1):
-        if ddof == 1 and _series_escalates(self._s._frame._sdf):
-            return self._escalate("var")
-        st = self._st_centered()
-        s1, s2, n = st.sum(), st.sumsq(), st.count()
-        out = F.when(n > ddof, F.greatest(
-            (s2 - s1 * s1 / n) / (n - F.lit(ddof)), F.lit(0.0)))
-        # guard on the CENTERED stats' own count (identical null
-        # structure) so var doesn't force the uncentered build job too
-        if self._minp > 0:
-            out = F.when(n >= self._minp, out).otherwise(F.lit(None))
-        return self._s._with_scol(out)
+        return self._var(ddof, std=False)
 
     def std(self, ddof: int = 1):
-        if ddof == 1 and _series_escalates(self._s._frame._sdf):
-            return self._escalate("std")
-        v = self.var(ddof)
-        return v._with_scol(F.sqrt(v._scol))
+        return self._var(ddof, std=True)
