@@ -744,15 +744,21 @@ class GroupBy:
 
     def rank(self, method: str = "average", ascending: bool = True, pct: bool = False, na_option: str = "keep",
              cols: list[str] | None = None):
-        from .operators.ranks import rank_col
+        """Per-column grouped rank from each column's tie table
+        (operators/ranks.py); every table counts the input frame, so
+        no table reads another column's join."""
+        from .operators import ranks
 
+        ranks.check_args(method, na_option)
         cols = cols or self._value_cols(numeric_only=True)
-        sdf = self._sdf_keep()
-        for c in cols:
-            sdf = sdf.withColumn(c, self._mask_null_keys(
-                rank_col(F.col(c), method=method, ascending=ascending,
-                         pct=pct, partition_by=self._keys,
-                         na_option=na_option)))
+        base = sdf = self._sdf_keep()
+        for i, c in enumerate(cols):
+            t = f"{I.INDEX_PREFIX}tie{i}__"
+            sdf = ranks.join_ties(sdf, ranks.tie_table(
+                base, self._keys, c, t, ascending, na_option), self._keys, c, t)
+            first = ranks.first_in_tie(self._keys, c) if method == "first" else None
+            sdf = sdf.withColumn(c, self._mask_null_keys(ranks.rank_from_ties(
+                F.col(t), method, pct, first))).drop(t)
         from .frame import Frame
 
         return Frame(sdf, self._frame._index_names)
@@ -916,11 +922,13 @@ class SeriesGroupBy:
 
     def rank(self, method: str = "average", ascending: bool = True, pct: bool = False,
              na_option: str = "keep"):
-        from .operators.ranks import rank_col
+        """From the anchor's shared tie table (operators/ranks.py):
+        several ranks of one column cost one aggregate and one join."""
+        from .operators.ranks import grouped_rank
 
-        return self._series(self._mask(
-            rank_col(F.col(self._col), method=method, ascending=ascending,
-                     pct=pct, partition_by=self._keys, na_option=na_option)))
+        return self._series(self._mask(grouped_rank(
+            self._frame, self._keys, self._col, method=method,
+            ascending=ascending, pct=pct, na_option=na_option)))
 
     def ffill(self, limit: int | None = None):
         from .operators.missing import _fill_exprs

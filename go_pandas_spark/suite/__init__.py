@@ -121,38 +121,33 @@ _MODULES = ["tpch", "tpch2", "relational", "aggregation", "windows", "reshape", 
 # The driver hash-verifies the FIRST 50 entries of queries() each
 # round. Contract: the window leads with every query whose engine path
 # the round changed, then the stalest driver evidence. Current window:
-# the Series order ops / positional primitive / pin-freeze paths
-# (Series rolling+expanding, take/iloc/combine/idxmin on
-# row_position, autocorr's shift, pack_sequences' running sum, and
-# the blocked kernels whose pins or literal lookups changed), then the
-# eleven remaining r10 stragglers, then the oldest r10-cohort rows.
+# the grouped-rank tie table (Series and frame GroupBy.rank), then the
+# rows whose last recorded verification is oldest (r11, then r12).
 _VERIFY_FIRST = [
-    # Series order ops, positions and pins (this round's paths)
-    "series_rolling_expression", "frame_take_positions",
-    "pack_sequences_chunked", "iloc_positional_slice", "iloc_step_slice",
-    "combine_first_coalesce", "combine_func_elementwise",
-    "autocorr_and_monotonic", "groupby_idx_minmax",
-    "rolling_ungrouped_global", "frame_pct_change",
-    "cumulative_ungrouped_global", "expanding_moments_global",
-    "ffill_global_limit", "interpolate_global_linear",
-    "ewm_var_noadjust_global", "ewm_cov_corr_global",
-    "merge_asof_global_noby", "ewm_mean",
-    "expanding_median_approx_global", "expanding_median_approx_grouped",
-    "interpolate_linear", "interpolate_limit_direction",
-    "merge_ordered_ffill", "resample_upsample_ffill",
-    # the r10 stragglers
-    "rowwise_udf_integrate", "series_factorize_codes",
-    "series_duplicated_flags", "frame_reindex_labels",
-    "frame_update_overwrite", "frame_align_outer",
-    "temperature_sample_mix", "shuffle_shards_deterministic",
-    "assign_train_splits", "vocab_top100", "quantize_embeddings_int8",
-    # the oldest r10-cohort rows
-    "q3_shipping_priority", "q10_returned_items",
-    "query_string_frontend", "eval_assign_arithmetic",
-    "nlargest_orders", "loc_label_slice", "groupby_stats_battery",
-    "corr_cov_by_group", "corr_spearman", "shift_diff_pct_change",
-    "pivot_table_mean", "melt_wide_to_long", "string_methods_battery",
-    "datetime_fields_battery",
+    # grouped rank from one shared tie table (this round's path)
+    "rank_methods", "corr_spearman",
+    # last verified r11
+    "q14_promo_revenue", "q18_large_volume_customers",
+    "q2_min_cost_supplier", "q7_volume_shipping",
+    "q12_late_shipment_priority", "q17_small_quantity_revenue",
+    "filter_isin_project", "concat_union_dedup", "set_ops_index",
+    "drop_duplicates_keep_last", "groupby_mad", "groupby_quantiles",
+    "value_counts_normalized", "rolling_median_quantile",
+    "expanding_stats", "rolling_cov_corr", "pivot_table_margins",
+    "get_dummies_onehot", "qcut_quartiles", "ffill_with_limit",
+    "replace_values", "interpolate_time_weighted", "dedup_ngram_jaccard",
+    "similarity_cosine_topk", "training_data_pipeline",
+    "pii_scrub_redact", "temperature_mixture_weights",
+    "sample_stratified_deterministic", "rolling_weighted_triang",
+    "explode_tokens", "range_interval_join", "ngram_bigram_top50",
+    # last verified r12
+    "q6_forecast_revenue", "q_priority_order_counts", "q8_market_share",
+    "q9_product_profit", "q11_revenue_concentration",
+    "q13_customer_distribution", "q15_top_supplier",
+    "q16_supplier_part_counts", "q19_disjunctive_revenue",
+    "q20_part_volume_suppliers", "q21_last_to_ship", "q22_idle_customers",
+    "merge_inner_multikey", "merge_left_nulls", "merge_outer_indicator",
+    "join_semi_anti",
 ]
 
 

@@ -238,16 +238,12 @@ def corr_cov_by_group(spark, sf_dir):
 def corr_spearman(spark, sf_dir):
     """Spearman = Pearson over average-method ranks
     (``nancorr_spearman``, ``pandas/_libs/algos.pyx:298``)."""
-    from ..operators.ranks import rank_col
-
     li = load(spark, sf_dir, "lineitem")
-    sdf = li.to_spark()
-    rq = rank_col(F.col("l_quantity"), method="average", partition_by=["l_returnflag"])
-    rp = rank_col(F.col("l_extendedprice"), method="average", partition_by=["l_returnflag"])
-    # rank_col references the order column for method='first' ties only;
-    # average method needs no order column.
-    sdf = sdf.withColumn("rq", rq).withColumn("rp", rp)
-    out = sdf.groupBy("l_returnflag").agg(F.round(F.corr("rq", "rp"), 6).alias("spearman")).orderBy("l_returnflag")
+    rk = li.groupby("l_returnflag")[["l_quantity", "l_extendedprice"]].rank()
+    sdf = rk.to_spark()
+    out = sdf.groupBy("l_returnflag").agg(
+        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("spearman")
+    ).orderBy("l_returnflag")
     return out
 
 

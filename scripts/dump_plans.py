@@ -1,11 +1,14 @@
 #!/usr/bin/env python3
-"""Dump .explain("formatted") for the r13-touched queries.
+"""Dump .explain("formatted") for named suite queries.
 
-Usage: python scripts/dump_plans_r13.py <out_dir> <suffix> [name...]
-  out_dir: e.g. plans/r13
-  suffix:  "before" (run from the pre-round worktree) or "after"
+Usage: python scripts/dump_plans.py <out_dir> <suffix> name [name...]
+  out_dir: directory for the dumps (created if missing)
+  suffix:  a tag for this side of a comparison, e.g. "before" (run
+           from a checkout of the parent commit) or "after"
+  name:    suite query names (go_pandas_spark/suite QUERIES)
 
-Writes <out_dir>/<query>_<suffix>.txt for each query.
+Writes <out_dir>/<query>_<suffix>.txt for each query. The input tables
+come from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 
 from __future__ import annotations
@@ -15,35 +18,18 @@ import sys
 
 sys.path.insert(0, os.getcwd())
 
-TOUCHED = [
-    # prior-session batches: plan-memoized reads, origin capture off,
-    # carry fast path, dense_row_number, width-pruned summaries,
-    # lineage truncation (semdedup / cached_grams)
-    "interpolate_global_linear",
-    "ffill_global_limit",
-    "cumulative_ungrouped_global",
-    "expanding_moments_global",
-    "expanding_median_approx_global",
-    "ewm_var_noadjust_global",
-    "ewm_cov_corr_global",
-    "semdedup_embeddings",
-    "dedup_components",
-    "dedup_minhash_lsh",
-    "merge_asof_global_noby",
-    "q5_local_supplier_volume",
-]
-
 
 def main() -> int:
-    out_dir = sys.argv[1]
-    suffix = sys.argv[2]
-    names = sys.argv[3:] or TOUCHED
+    if len(sys.argv) < 4:
+        sys.stderr.write(__doc__)
+        return 2
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
     from go_pandas_spark import get_spark
     from go_pandas_spark.suite import QUERIES, register_all
 
     register_all()
-    spark = get_spark("plans_r13")
+    spark = get_spark("dump_plans")
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for name in names:
         fn = QUERIES.get(name)

@@ -60,14 +60,102 @@ def test_merge_asof_matrix_matches_pandas(spark, sf_dir, direction, tolerance, a
     assert np.allclose(g, e, equal_nan=True)
 
 
-@pytest.mark.parametrize("method", ["average", "min", "max", "dense", "first"])
-def test_rank_methods_match_pandas(spark, sf_dir, method):
-    li = gp.read_parquet(spark, f"{sf_dir}/lineitem.parquet").sort_values(
-        ["l_orderkey", "l_linenumber"])
-    got = li.assign(r=li.groupby("l_returnflag")["l_quantity"].rank(method)).to_pandas()
-    pdf = li.to_pandas()
-    exp = pdf.groupby("l_returnflag")["l_quantity"].rank(method=method)
-    assert np.allclose(got["r"].to_numpy(), exp.to_numpy(), equal_nan=True)
+def _rank_rows(spark, seed: int = 3, n: int = 640):
+    """Rank fixture over 16 range partitions in ``id`` order: a 3-value
+    key with null keys, a 1-value key, heavy ties incl. -0.0/0.0, NaNs."""
+    rng = np.random.RandomState(seed)
+    v = rng.randint(-3, 4, n).astype(float)
+    v[(v == 0) & (rng.rand(n) < 0.5)] = -0.0
+    v[rng.rand(n) < 0.1] = np.nan
+    w = rng.randint(0, 5, n).astype(float)
+    w[rng.rand(n) < 0.1] = np.nan
+    k3 = rng.choice(["a", "b", "c"], n).astype(object)
+    k3[rng.rand(n) < 0.05] = None
+    pdf = pd.DataFrame({"id": np.arange(n), "k3": k3, "k1": "x", "v": v, "w": w})
+    sdf = (spark.createDataFrame(pdf).repartitionByRange(16, "id")
+           .sortWithinPartitions("id"))
+    return gp.Frame(sdf), pdf
+
+
+_RANK_METHODS = ["average", "min", "max", "dense", "first"]
+
+
+@pytest.mark.parametrize("method,case", [
+    *[pytest.param(m, "lineitem", id=m) for m in _RANK_METHODS],
+    *[pytest.param(m, c, id=f"{m}-{c}") for c in ("nullkeys", "desc-1key", "frame2")
+      for m in _RANK_METHODS],
+])
+def test_rank_methods_match_pandas(spark, sf_dir, method, case):
+    if case == "lineitem":
+        li = gp.read_parquet(spark, f"{sf_dir}/lineitem.parquet").sort_values(
+            ["l_orderkey", "l_linenumber"])
+        got = li.assign(r=li.groupby("l_returnflag")["l_quantity"].rank(method)).to_pandas()
+        pdf = li.to_pandas()
+        exp = pdf.groupby("l_returnflag")["l_quantity"].rank(method=method)
+        assert np.allclose(got["r"].to_numpy(), exp.to_numpy(), equal_nan=True)
+        return
+    f, pdf = _rank_rows(spark)
+    if case == "nullkeys":  # null keys dropped, then kept as a group
+        got = f.assign(
+            a=f.groupby("k3")["v"].rank(method),
+            b=f.groupby("k3", dropna=False)["v"].rank(method)).to_pandas()
+        exp = {"a": pdf.groupby("k3")["v"].rank(method=method),
+               "b": pdf.groupby("k3", dropna=False)["v"].rank(method=method)}
+    elif case == "desc-1key":
+        got = f.assign(a=f.groupby("k1")["v"].rank(method, ascending=False),
+                       b=f.groupby("k3")["w"].rank(method, ascending=False)).to_pandas()
+        exp = {"a": pdf.groupby("k1")["v"].rank(method=method, ascending=False),
+               "b": pdf.groupby("k3")["w"].rank(method=method, ascending=False)}
+    else:  # frame-level GroupBy.rank over two columns
+        got = f.groupby("k3")[["v", "w"]].rank(method).to_pandas()
+        exp = pdf.groupby("k3")[["v", "w"]].rank(method=method)
+    for c in ("a", "b") if case != "frame2" else ("v", "w"):
+        assert np.allclose(got[c].to_numpy(), exp[c].to_numpy(), equal_nan=True), c
+
+
+def _plan_nodes(plan) -> list[str]:
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_grouped_ranks_share_one_tie_join(spark):
+    """Six ranks of one (keys, value) on one anchor read ONE tie table:
+    one aggregate and one join in the plan, not one per rank."""
+    f, pdf = _rank_rows(spark)
+    g = f.groupby("k3")["v"]
+    out = f.assign(r_avg=g.rank("average"), r_min=g.rank("min"),
+                   r_max=g.rank("max"), r_dense=g.rank("dense"),
+                   r_first=g.rank("first"), r_pct=g.rank("average", pct=True))
+    nodes = _plan_nodes(out.to_spark()._jdf.queryExecution().optimizedPlan())
+    assert nodes.count("Join") == 1, nodes
+    assert nodes.count("Aggregate") == 1, nodes
+    got = out.to_pandas()
+    pg = pdf.groupby("k3")["v"]
+    for c, m, pct in (("r_avg", "average", False), ("r_min", "min", False),
+                      ("r_max", "max", False), ("r_dense", "dense", False),
+                      ("r_first", "first", False), ("r_pct", "average", True)):
+        assert np.allclose(got[c].to_numpy(), pg.rank(method=m, pct=pct).to_numpy(),
+                           equal_nan=True), c
+
+
+def test_grouped_rank_after_in_place_replace_is_fresh(spark):
+    """The shared tie table is keyed on the RESOLVED value column: a
+    value replaced in place under the same name gets a fresh table."""
+    f, pdf = _rank_rows(spark)
+    before = f.groupby("k3")["v"].rank("min")
+    f["v"] = -f["v"] * 2.0 + f["w"]
+    after = f.groupby("k3")["v"].rank("min")
+    got = f.assign(before=before, after=after).to_pandas()
+    exp_before = pdf.groupby("k3")["v"].rank(method="min")
+    pdf["v"] = -pdf["v"] * 2.0 + pdf["w"]
+    exp_after = pdf.groupby("k3")["v"].rank(method="min")
+    assert np.allclose(got["before"].to_numpy(), exp_before.to_numpy(), equal_nan=True)
+    assert np.allclose(got["after"].to_numpy(), exp_after.to_numpy(), equal_nan=True)
 
 
 def test_rolling_center_matches_pandas(spark, sf_dir):
@@ -347,15 +435,31 @@ def test_droplevel_swaplevel_columns(spark, sf_dir):
 
 # ---------------- round-2 ADVICE regression tests ----------------
 
-@pytest.mark.parametrize("na_option,method,pct", [
-    ("top", "average", False), ("bottom", "average", False),
-    ("top", "min", False), ("bottom", "max", False),
-    ("top", "dense", False), ("bottom", "dense", True),
-    ("top", "average", True), ("keep", "dense", True),
+@pytest.mark.parametrize("na_option,method,pct,case", [
+    *[pytest.param(*p, "events", id="-".join(map(str, p))) for p in [
+        ("top", "average", False), ("bottom", "average", False),
+        ("top", "min", False), ("bottom", "max", False),
+        ("top", "dense", False), ("bottom", "dense", True),
+        ("top", "average", True), ("keep", "dense", True),
+    ]],
+    *[pytest.param(*p, id="-".join(map(str, p))) for p in [
+        ("top", "first", False, "p16"), ("bottom", "first", True, "p16"),
+        ("top", "dense", True, "p16-desc"), ("bottom", "min", True, "p16-desc"),
+        ("keep", "max", True, "p16-nullkeys"), ("top", "average", True, "p16-nullkeys"),
+    ]],
 ])
-def test_rank_na_option_matches_pandas(spark, sf_dir, na_option, method, pct):
+def test_rank_na_option_matches_pandas(spark, sf_dir, na_option, method, pct, case):
     """algorithms.py:833 na_option='top'/'bottom' + the dense-pct
     denominator (distinct values, algos_rank_helper.pxi.in:192-195)."""
+    if case != "events":  # 16 partitions, NaNs, -0.0/0.0 ties
+        f, pdf = _rank_rows(spark)
+        kw = dict(method=method, pct=pct, na_option=na_option,
+                  ascending=not case.endswith("desc"))
+        dropna = not case.endswith("nullkeys")
+        got = f.assign(r=f.groupby("k3", dropna=dropna)["v"].rank(**kw)).to_pandas()
+        exp = pdf.groupby("k3", dropna=dropna)["v"].rank(**kw)
+        assert np.allclose(got["r"].to_numpy(), exp.to_numpy(), equal_nan=True)
+        return
     ev = _events(spark, sf_dir)
     ev = ev.assign(v=ev["value"].mask(ev["event_type"] == "error"))
     got = ev.assign(r=ev.groupby("user_id")["v"].rank(

@@ -248,3 +248,51 @@ def test_vocab_topk_uses_take_ordered(spark, sf_dir):
     plan = _plan(vocab_topk(docs, "text", k=50), mode="simple")
     assert "TakeOrderedAndProject" in plan, plan
     assert "partial_count" in plan, plan
+
+
+def _windows_over_rows(plan) -> list[list[str]]:
+    """Partition columns of every Window in a physical plan that reads
+    the row relation — i.e. whose input chain reaches a join or a scan
+    before any aggregate (a Window over an aggregate reads a derived
+    table, not the rows)."""
+    def over_rows(node):
+        while True:
+            if "Aggregate" in node.nodeName():
+                return False
+            if node.children().size() != 1:
+                return True
+            node = node.children().apply(0)
+
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+        if node.nodeName() == "Window" and over_rows(kids.apply(0)):
+            spec = node.partitionSpec()
+            refs = set()
+            for i in range(spec.size()):
+                attrs = spec.apply(i).references().toSeq()
+                refs |= {attrs.apply(j).name() for j in range(attrs.size())}
+            out.append(sorted(refs))
+    return out
+
+
+def test_rank_methods_tie_table_plan_and_memo(spark, sf_dir):
+    """Grouped rank reads one tie table (operators/ranks.py): building
+    rank_methods launches no Spark job (so the suite plan memo takes
+    it), no Window over the rows is partitioned by the group key alone
+    (one task per group), and the only row-level Window is method
+    'first's, partitioned by (key, value)."""
+    from go_pandas_spark.suite import QUERIES, register_all
+
+    register_all()
+    q = QUERIES["rank_methods"]
+    q._gps_inner(spark, sf_dir)  # first read of the table lists files
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs0 = sched.nextJobId()
+    sdf = q._gps_inner(spark, sf_dir)
+    assert sched.nextJobId() == jobs0
+    assert q(spark, sf_dir) is q(spark, sf_dir)  # memoized
+    wins = _windows_over_rows(sdf._jdf.queryExecution().sparkPlan())
+    assert wins == [["l_quantity", "l_returnflag"]], wins

@@ -29,31 +29,44 @@ def test_aligned_rows_cap_is_hard_precondition(spark, monkeypatch):
     fall back to the subdividing groupBy layout, results unchanged."""
     from go_pandas_spark.operators import distwindow as dw
 
-    rng = np.random.RandomState(7)
-    n = 2_000
-    base = pd.DataFrame({"k": np.arange(n), "v": rng.normal(2, 1, n)})
-    f = gp.Frame(spark.createDataFrame(base).repartition(20)).sort_values("k")
-    sdf = f._sdf
-    oc = F.col(I.ORDER_COL)
-    stats, phys = dw.collect_sid_layout(sdf, oc)
-    assert phys and stats and len(stats) >= 10  # many sids...
-    biggest = max(c for _b, c, _l, _h in stats)
+    # The premise (>= 10 sids) must not depend on the host: sort_values'
+    # range exchange has spark.sql.shuffle.partitions partitions (the
+    # core count by default) and AQE may coalesce them, so both are
+    # pinned for the test and restored afterwards.
+    conf = {"spark.sql.shuffle.partitions": "20",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        rng = np.random.RandomState(7)
+        n = 2_000
+        base = pd.DataFrame({"k": np.arange(n), "v": rng.normal(2, 1, n)})
+        f = gp.Frame(spark.createDataFrame(base).repartition(20)).sort_values("k")
+        sdf = f._sdf
+        oc = F.col(I.ORDER_COL)
+        stats, phys = dw.collect_sid_layout(sdf, oc)
+        assert phys and stats and len(stats) >= 10  # many sids...
+        biggest = max(c for _b, c, _l, _h in stats)
 
-    # default cap: aligned engages (the r13 fast path is intact)
-    _, aligned, nb_est = dw._blocked_base(sdf, oc, None, True)
-    assert aligned and nb_est == len(stats)
+        # default cap: aligned engages (the r13 fast path is intact)
+        _, aligned, nb_est = dw._blocked_base(sdf, oc, None, True)
+        assert aligned and nb_est == len(stats)
 
-    # cap below the biggest sid: aligned must refuse even though the
-    # sid count exceeds the target parallelism (the r13 hole)
-    monkeypatch.setattr(dw, "_ALIGNED_ROWS_CAP", biggest - 1)
-    base2, aligned2, _ = dw._blocked_base(sdf, oc, None, True)
-    assert not aligned2
-    # and the fallback layout still computes the right answer
-    out = dw.ewm_mean_blocked(sdf, oc, ["v"], alpha=0.3, adjust=True,
-                              ignore_na=False)
-    got = out.toPandas().sort_values("k")["v"].to_numpy()
-    exp = base["v"].ewm(alpha=0.3).mean().to_numpy()
-    assert np.allclose(got, exp, rtol=1e-8, equal_nan=True)
+        # cap below the biggest sid: aligned must refuse even though the
+        # sid count exceeds the target parallelism (the r13 hole)
+        monkeypatch.setattr(dw, "_ALIGNED_ROWS_CAP", biggest - 1)
+        base2, aligned2, _ = dw._blocked_base(sdf, oc, None, True)
+        assert not aligned2
+        # and the fallback layout still computes the right answer
+        out = dw.ewm_mean_blocked(sdf, oc, ["v"], alpha=0.3, adjust=True,
+                                  ignore_na=False)
+        got = out.toPandas().sort_values("k")["v"].to_numpy()
+        exp = base["v"].ewm(alpha=0.3).mean().to_numpy()
+        assert np.allclose(got, exp, rtol=1e-8, equal_nan=True)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_merge_asof_noby_struct_fast_carry(spark, monkeypatch):
