@@ -66,152 +66,171 @@ def scol_of(sdf: SparkDataFrame, name: str) -> Column:
     return sdf[name]
 
 
-# semanticHash -> the persisted DataFrame, insertion/use-ordered so the
-# oldest entry is the LRU eviction candidate (see _maybe_evict_pins)
+# (semantic plan, what its sources read) -> lineage-truncated leaf (see
+# materialize), insertion/use-ordered so the oldest entry is dropped
+# first. Dropping an entry only drops the engine's reference: a leaf's
+# stored blocks live while any DataFrame reaches it (Spark's
+# ContextCleaner frees them once the leaf is unreachable), so no entry
+# and no clear_cache() can pull rows out from under a pending plan.
 _PINNED: dict = {}
-# entry cap for _PINNED (r11): pins beyond this are unpersisted oldest-
-# first, but ONLY while no blocked-output Frame is live — evicting a pin
-# a pending lazy plan references would reopen the AQE order-id race, so
-# eviction is deferred until the workload's frames die (a long-lived
-# service holding frames across queries drains at the next pin after it
-# drops them). 64 full-width MEMORY_AND_DISK pins is the storage budget
-# line SCALE.md carries for a diverse no-barrier query stream.
+# entry cap for _PINNED: beyond it the oldest entries are dropped —
+# what an evicted key costs is one re-materialization if the same plan
+# comes back. SCALE.md "Session storage budget".
 _PINNED_MAX = 64
 
-# live blocked-output Frames (weak — entries vanish when the user drops
-# the frame). A pin may be referenced by any of these frames' pending
-# lazy plans, so both the clear_cache() barrier and LRU eviction treat
-# "any live blocked frame" as "some pin may be live". Keyed by id()
-# in a WeakValueDictionary, NOT a WeakSet: re-registering the same
-# frame (the Series escalation path marks its anchor frame once per
-# op) makes a WeakSet compare two refs to one referent via ==, which
-# is ELEMENTWISE on Frame and explodes in bool() (r11 fuzz-caught).
-import weakref  # noqa: E402
-
-_LIVE_BLOCKED: "weakref.WeakValueDictionary" = weakref.WeakValueDictionary()
-
-# registry size at the last over-cap gc attempt (rate limit — see
-# _maybe_evict_pins); reset when eviction actually runs. _GC_STEP is
-# how many pins of over-cap growth re-arm the next gc attempt.
-_GC_AT = 0
-_GC_STEP = 8
+# Leaves keyed on content alone: semanticHash already covers their
+# data (a LocalRelation's rows, a LogicalRDD's RDD identity).
+_CONTENT_LEAVES = {"LogicalRDD", "LocalRelation", "OneRowRelation", "Range"}
 
 
-def register_live_blocked(obj) -> None:
-    _LIVE_BLOCKED[id(obj)] = obj
+def _leaf_key(sdf: SparkDataFrame):
+    """Registry key: the semantic plan, plus what each of its other
+    leaves will read. semanticHash sees a file scan only by its root
+    paths, so a file rewritten in place (``to_parquet`` overwrite) would
+    hit the old file's rows: a file scan adds its cached listing (every
+    file's path, length and modification time), any other source its
+    attribute ids. The listing, not the scan's ids, because the
+    analyzer re-instances a relation read twice in one plan (a
+    self-join) under fresh ids on every build."""
+    import hashlib
+
+    plan = sdf._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    parts = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() in _CONTENT_LEAVES:
+            continue
+        try:
+            listing = leaf.relation().location().allFiles().toString()
+            parts.append(hashlib.sha1(listing.encode()).hexdigest())
+        except Exception:  # noqa: BLE001 — not a file scan
+            out = leaf.output()
+            parts.append(tuple(out.apply(j).exprId().id()
+                               for j in range(out.size())))
+    return plan.semanticHash(), tuple(parts)
 
 
-class _BlockedGuard:
-    """Liveness sentinel for multi-pin kernel builds."""
+def _module(jvm, name: str):
+    """A Scala companion object by its class name."""
+    return getattr(getattr(jvm.org.apache.spark.sql, name + "$"), "MODULE$")
 
 
-def blocked_guard() -> _BlockedGuard:
-    """Register a sentinel in ``_LIVE_BLOCKED`` for as long as the
-    caller holds the returned object — kernels that pin repeatedly
-    inside ONE API call (Frame.rank's per-column loop) hold one in a
-    local so LRU eviction can't unpersist their earlier pins mid-
-    build; it dies with the caller's stack frame, after the output
-    frame itself is registered via mark_blocked_output."""
-    g = _BlockedGuard()
-    register_live_blocked(g)
-    return g
+def _checkpoint(sdf: SparkDataFrame):
+    """The LogicalRDD node of ``sdf.localCheckpoint(eager=False)``,
+    stored serialized, planned in a session clone with AQE's
+    final-stage shuffle optimizations off — the way Spark plans a
+    cached relation — so the leaf keeps the plan's own partition
+    layout instead of one coalesced to a few partitions (which would
+    put a small frame's every id in one source partition and run its
+    kernels as one task)."""
+    jvm = sdf.sparkSession._jvm
+    off = getattr(getattr(jvm.scala.collection.immutable, "Nil$"),
+                  "MODULE$").prepended(
+        _module(jvm, "internal.SQLConf")
+        .ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS())
+    session = _module(jvm, "classic.SparkSession") \
+        .getOrCloneSessionWithConfigsOff(sdf.sparkSession._jsparkSession, off)
+    plan = sdf._jdf.queryExecution().analyzed()
+    leaf = _module(jvm, "classic.Dataset").ofRows(session, plan) \
+        .localCheckpoint(False, jvm.org.apache.spark.storage.StorageLevel
+                         .MEMORY_AND_DISK_SER())
+    return leaf.queryExecution().analyzed()
 
 
-def _maybe_evict_pins() -> int:
-    """Shrink ``_PINNED`` to ``_PINNED_MAX`` entries, oldest first —
-    called on every new pin. Eviction only runs while NO blocked-output
-    frame is alive: a collected (or dropped) consumer means the pin's
-    remaining role is cache, and recompute-through-frozen-lineage
-    (unpersist → the plan replays) is the documented eviction story;
-    a live consumer means the pin may still feed an un-collected plan
-    whose order ids must not shift. Because a chained query's own
-    intermediate frames are alive while it pins, the steady-state
-    bound is ``_PINNED_MAX`` + the current query's pin count (a few
-    entries) — eviction fires at the NEXT query's first pin, once the
-    previous chain's frames are dropped. Returns the number evicted."""
-    global _GC_AT
-    if len(_PINNED) <= _PINNED_MAX:
-        # back under the cap (e.g. clear_cache drained _PINNED while
-        # blocked frames were live): a stale high-water _GC_AT would
-        # defer the next cycle-collecting gc until the registry regrew
-        # past it, transiently exceeding the documented bound
-        _GC_AT = 0
-        return 0
-    if len(_LIVE_BLOCKED) > 0 and \
-            len(_PINNED) >= max(_GC_AT + _GC_STEP, _PINNED_MAX + 1):
-        # Frames held only by reference cycles keep the registry
-        # populated until an automatic gc run, indefinitely deferring
-        # eviction — the _PINNED_MAX bound would be advisory, not
-        # guaranteed (ADVICE r11 #2). Collect before judging, like
-        # clear_cache — but RATE-LIMITED to once per 8 pins of growth
-        # past the cap: a full gc.collect() costs ~100 ms, and a
-        # chained blocked kernel pinning dozens of times while its own
-        # frames are legitimately live would otherwise pay it on EVERY
-        # pin (r12-measured: +7 s on the two fused-moments bench
-        # queries). Bound becomes _PINNED_MAX + _GC_STEP + in-flight.
-        import gc
+def _bind(node, sdf: SparkDataFrame) -> SparkDataFrame:
+    """A DataFrame over LogicalRDD ``node``'s stored RDD, in ``sdf``'s
+    session and under ``sdf``'s own output attributes. A registry hit
+    matches on the semantic plan, which ignores alias names and
+    expression ids, while the caller resolves columns by its own names
+    and its Columns (a Series holds resolved attributes) name its own
+    ids. Partitioning, ordering and constraints are the stored ones
+    with every stored attribute replaced by the caller's, so the
+    result canonicalizes like the stored leaf, and plans rebuilt over
+    either hash equal."""
+    jvm = sdf.sparkSession._jvm
+    out = sdf._jdf.queryExecution().analyzed().output()
+    _session, stats, cons = (node.otherCopyArgs().apply(i) for i in range(3))
+    if not node.output().equals(out):
+        rdd_mod = _module(jvm, "execution.LogicalRDD")
+        # by name and type; a hit under other alias names drops the
+        # (optional, optimizer-only) constraints instead
+        assoc = rdd_mod.buildOutputAssocForRewrite(node.output(), out)
+        cons = (jvm.scala.Some(rdd_mod.rewriteConstraints(cons.get(),
+                                                          assoc.get()))
+                if cons.isDefined() and assoc.isDefined()
+                else jvm.scala.Option.empty())
+        # rewriteAttrs keeps the stored NAMES (it swaps expression ids
+        # only): the caller's own attributes become the output
+        node = node.rewriteAttrs(_module(
+            jvm, "catalyst.expressions.AttributeMap").apply(
+                node.output().zip(out)))
+    node = node.copy(out, node.rdd(), node.outputPartitioning(),
+                     node.outputOrdering(), node.isStreaming(), node.stream(),
+                     sdf.sparkSession._jsparkSession, stats, cons)
+    return SparkDataFrame(
+        _module(jvm, "classic.Dataset").ofRows(
+            sdf.sparkSession._jsparkSession, node), sdf.sparkSession)
 
-        gc.collect()
-        _GC_AT = len(_PINNED)
-    if len(_LIVE_BLOCKED) > 0:
-        return 0
-    _GC_AT = 0
-    n = 0
+
+def materialize(sdf: SparkDataFrame) -> SparkDataFrame:
+    """The engine's one materialization primitive: ``sdf`` as a
+    lineage-truncated leaf (``localCheckpoint(eager=False)``).
+
+    Why: ``monotonically_increasing_id`` values are only deterministic
+    WITHIN one job — AQE may coalesce a post-sort shuffle differently
+    for different downstream plan shapes (measured: an aggregate job
+    saw one partition where a scan-only collect saw two), silently
+    shifting every id. A kernel that collects id-derived facts (split
+    bounds, per-block counts, carries) in build jobs and applies them
+    in the caller's later main job needs the ids stored once and read
+    by every job; a chain of kernels also needs each call to scan
+    stored rows instead of re-running the upstream machinery per job.
+
+    A leaf's plan is one LogicalRDD node, so materializing a plan that
+    already reads leaves never nests: the plan string every job
+    records stays O(1) in chain length. The upstream AQE stages run
+    when this is called (a lazy checkpoint still plans its RDD); the
+    rows are stored by the first job that reads the leaf.
+
+    Memo: the registry (``_PINNED``) is keyed on the semantic plan
+    plus the file listing each scan reads (``_leaf_key``), so a
+    rebuilt query reuses the stored rows while a rewritten input file
+    misses. A hit is rebound to the caller's attributes
+    (``_bind``). Lifetime is reachability: evicting an entry or
+    ``clear_cache()`` drops only the engine's reference."""
+    from pyspark import StorageLevel
+
+    try:
+        # already a leaf (an earlier materialize, a driver-built
+        # table) or a caller's own cache: the ids are stored, and a
+        # copy would double-store them
+        if sdf._jdf.queryExecution().logical().getClass().getSimpleName() \
+                == "LogicalRDD" or sdf.storageLevel != StorageLevel.NONE:
+            return sdf
+        key = _leaf_key(sdf)
+    except Exception:  # noqa: BLE001 — connect-mode or API drift
+        return sdf
+    leaf = _PINNED.pop(key, None)
+    if leaf is not None:
+        _PINNED[key] = leaf  # refresh LRU position
+        return _bind(leaf._jdf.queryExecution().analyzed(), sdf)
+    leaf = _bind(_checkpoint(sdf), sdf)
+    _PINNED[key] = leaf
     while len(_PINNED) > _PINNED_MAX:
-        key = next(iter(_PINNED))
-        try:
-            _PINNED.pop(key).unpersist()
-        except Exception:  # noqa: BLE001 — session may be stopped
-            pass
-        n += 1
-    return n
+        _PINNED.pop(next(iter(_PINNED)))
+    return leaf
 
 
-def clear_cache(force: bool = False) -> dict:
+def clear_cache() -> dict:
     """Release every session-lifetime storage entry the engine holds:
-    ``pin_order`` persists, the distwindow driver-table memo, and the
-    dedup gram/signature caches. Returns counts of what was dropped.
-
-    This is a BARRIER API — call it between queries, never while a
-    lazy plan built from a pinned relation is still un-collected:
-    unpersisting a pin that a pending plan references reopens the
-    AQE order-id race ``pin_order`` exists to close (the plan would
-    recompute ids under a possibly different coalesce). The intended
-    deployment shape is job-per-query (nothing to clear; the session
-    dies) or a long-lived service calling ``clear_cache()`` at query
-    boundaries. Storage budget model: SCALE.md "Session storage
-    budget".
-
-    Misuse guard (r11): when any blocked-output Frame is still alive,
-    some pin may feed that frame's un-collected lazy plan — clearing
-    now can silently shift its order ids. The barrier WARNS (and still
-    proceeds, matching the documented caller-owns-the-boundary
-    contract) unless ``force=True``. Drop or collect outstanding
-    frames before the barrier to clear silently."""
-    if len(_LIVE_BLOCKED) > 0:
-        import gc
-
-        gc.collect()  # drop cycle-held frames before judging liveness
-    live = len(_LIVE_BLOCKED)
-    if live and not force:
-        import warnings
-
-        warnings.warn(
-            f"clear_cache() called while {live} blocked-output frame(s) "
-            "are still alive — if any has an un-collected plan, its "
-            "order ids may silently shift (the AQE race pin_order "
-            "closes). Collect or drop those frames first, or pass "
-            "force=True to acknowledge.",
-            RuntimeWarning, stacklevel=2)
+    the ``materialize`` registry, the distwindow driver-table memo and
+    the dedup gram/signature caches. Returns counts of what was
+    dropped. Safe at any point: a leaf a pending plan still reads
+    stays stored until that plan's frames are gone (SCALE.md "Session
+    storage budget")."""
     n_pins = len(_PINNED)
-    for df in _PINNED.values():
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — session may be stopped
-            pass
     _PINNED.clear()
-    global _GC_AT
-    _GC_AT = 0  # registry drained — drop the stale gc high-water mark
     from .operators import dedup, distwindow
 
     n_tbls = len(distwindow._LOCAL_TBLS)
@@ -226,7 +245,6 @@ def clear_cache(force: bool = False) -> dict:
         cache.clear()
     return {"pins": n_pins, "local_tables": n_tbls, "dedup_caches": n_dedup}
 
-
 # Logical operators between a materialized leaf and a frame's output
 # that keep each row's order id AND its physical partition (narrow),
 # those that keep the id only (may shuffle), and the leaves an id can
@@ -239,16 +257,15 @@ _ID_STORE_NODES = {"InMemoryRelation", "LogicalRDD"}
 
 def ids_frozen(sdf: SparkDataFrame, layout: bool = False) -> bool:
     """True when ``sdf``'s ``__order__`` is READ from a materialized
-    relation (a pin, a user cache, a driver-built table) through
-    deterministic id-preserving operators only — every job over
-    ``sdf`` then sees the same ids without pinning ``sdf`` itself.
-    This is the case for a Series order op over an anchor an earlier
-    op augmented (Frame._augment): pinning that growing plan again per
-    op would nest cached plans, and Spark prints a cached AQE plan
-    with both its initial and final form — the plan strings every job
-    records double per nesting level. ``layout=True`` also requires
-    the physical partitioning to be stored: narrow operators only (no
-    Window/Join, which may shuffle)."""
+    relation (a ``materialize`` leaf, a user cache, a driver-built
+    table) through deterministic id-preserving operators only — every
+    job over ``sdf`` then sees the same ids without materializing
+    ``sdf`` itself. This is the case for a Series order op over an
+    anchor an earlier op augmented (Frame._augment): materializing
+    that growing plan again per op would store one more copy per op.
+    ``layout=True`` also requires the physical partitioning to be
+    stored: narrow operators only (no Window/Join, which may
+    shuffle)."""
     passes = _NARROW_NODES if layout else _ID_PASS_NODES
     try:
         # a derived frame's own QueryExecution: resolving sdf's cache
@@ -277,71 +294,6 @@ def ids_frozen(sdf: SparkDataFrame, layout: bool = False) -> bool:
         return found
     except Exception:  # noqa: BLE001 — connect-mode or API drift
         return False
-
-
-def pin_order(sdf: SparkDataFrame) -> SparkDataFrame:
-    """Freeze the order-id assignment before any kernel collects
-    order-derived literals.
-
-    ``monotonically_increasing_id`` values are only deterministic
-    WITHIN one job: AQE may coalesce the post-sort shuffle differently
-    for different downstream plan shapes (measured: an aggregate job
-    saw one partition where a scan-only collect saw two), silently
-    shifting every id. Any kernel that collects id-derived facts
-    (split bounds, per-block counts, boundary values) in a build job
-    and applies them in the later main job therefore needs the ids
-    MATERIALIZED once and reused. ``persist`` gives exactly that
-    contract: Spark's cache is keyed by the canonicalized plan, so the
-    caller's lazy main query hits the same materialized blocks, and
-    evicted blocks recompute through the frozen physical plan (fixed
-    partitioning + deterministic sort) instead of re-planning.
-
-    Entries live while lazy plans may still reference them
-    (unpersisting a pin a pending plan reads would reopen the race);
-    Spark evicts blocks to disk under memory pressure, lineage stays
-    frozen. Release paths: ``clear_cache()`` at a query boundary
-    unpersists every entry, and (r11) the registry self-bounds at
-    ``_PINNED_MAX`` entries via LRU unpersist-on-evict — eviction
-    deferred while any blocked-output frame is alive (see
-    ``_maybe_evict_pins``; SCALE.md "Session storage budget")."""
-    if ORDER_COL not in sdf.columns:
-        return sdf
-    try:
-        # an RDD-backed relation is already materialized with frozen
-        # ids — driver-built tables (distwindow._memo_table) and true
-        # localCheckpoint outputs (the dedup/streaming iteration
-        # paths). Persisting again would double-store the data. NOTE:
-        # consume_chained outputs do NOT land here — they are
-        # persist-based (plan stays declarative), deduped by the
-        # semanticHash key below instead.
-        if (sdf._jdf.queryExecution().logical().getClass()
-                .getSimpleName() == "LogicalRDD"):
-            return sdf
-    except Exception:  # noqa: BLE001 — connect-mode or API drift
-        pass
-    from pyspark import StorageLevel
-
-    try:
-        # the caller already persists this exact plan (Spark's cache
-        # is plan-keyed): their cache freezes the ids just as well,
-        # and registering an alias here would let clear_cache()
-        # unpersist a USER-owned cache entry (r10: the 10M probe's
-        # shared input vanished at the first barrier)
-        if sdf.storageLevel != StorageLevel.NONE:
-            return sdf
-    except Exception:  # noqa: BLE001 — connect-mode or API drift
-        pass
-    try:
-        key = sdf.semanticHash()
-    except Exception:
-        return sdf
-    if key in _PINNED:
-        _PINNED[key] = _PINNED.pop(key)  # refresh LRU position
-        return sdf
-    sdf.persist(StorageLevel.MEMORY_AND_DISK)
-    _PINNED[key] = sdf
-    _maybe_evict_pins()
-    return sdf
 
 
 def ensure_parallelism(sdf: SparkDataFrame) -> SparkDataFrame:

@@ -309,25 +309,21 @@ class Frame:
         assign()/to_frame()/filters keep composing without a join.
 
         SIDE EFFECT (deliberate): ``self._sdf`` is rebound IN PLACE —
-        even if the result is discarded, the anchor keeps the pinned
-        blocked plan plus one internal ``__index_serw*`` column. A
+        even if the result is discarded, the anchor keeps the
+        materialized blocked plan plus one internal ``__index_serw*`` column. A
         copy-on-write anchor would force an index-alignment JOIN
         whenever the result meets the frame's own columns (the common
         case). Callers must therefore read ``self._sdf`` AFTER this
         returns. Cost: an internal column public projections never
-        see, and the kernel's pin of the anchor (released by
-        ``clear_cache()``).
+        see, and the kernel's materialized leaf of the anchor.
 
-        The anchor is registered live (its plan reads pins) but NOT
-        tagged as a blocked output: the next op on it reads the ids
-        this op's kernel froze (``I.ids_frozen``) instead of pinning
-        the grown plan once more — a pin per op would nest cached
-        plans, whose printed form doubles per level."""
+        The anchor is NOT tagged as a blocked output: the next op on
+        it reads the ids this op's kernel froze (``I.ids_frozen``)
+        instead of materializing the grown plan once more."""
         from .operators.distwindow import consume_chained
 
         tmp = f"{I.INDEX_PREFIX}serw{next(_AUG_SEQ)}__"
         self._sdf = kernel(consume_chained(self), tmp)
-        I.register_live_blocked(self)
         return F.col(tmp)
 
     def _position_col(self) -> Column:
@@ -411,18 +407,6 @@ class Frame:
                      {c: swap(t) for c, t in self._col_labels.items()})
 
     # ---------------- internal helpers ----------------
-    def _derived(self, out: "Frame") -> "Frame":
-        """Blocked-output liveness follows derivation (ADVICE r11 #1):
-        a frame built from a registered blocked output's plan holds
-        the same un-collected lazy subtree, so pin LRU eviction (and
-        the clear_cache warning) must see it as live too — otherwise
-        collecting only the ORIGINAL frames lets eviction unpersist a
-        pin the derived frame's pending plan still reads, reopening
-        the AQE order-id race."""
-        if id(self) in I._LIVE_BLOCKED:
-            I.register_live_blocked(out)
-        return out
-
     def _copy(self, sdf: SparkDataFrame, index_names=None) -> "Frame":
         out = Frame(sdf, self._index_names if index_names is None else index_names)
         if self._col_labels:
@@ -434,7 +418,7 @@ class Frame:
             kept = {c: lab for c, lab in self._dup_labels.items()
                     if c in present}
             out._dup_labels = kept or None
-        return self._derived(out)
+        return out
 
     def _with_only(self, named_scols: list[tuple[str, Column]]) -> "Frame":
         keep = [F.col(c) for c in self._sdf.columns if I.is_internal(c)]
@@ -455,8 +439,8 @@ class Frame:
             # frame.py getitem contract on duplicate columns)
             keep = [F.col(c) for c in self._sdf.columns if I.is_internal(c)]
             sel = self._sdf.select(*keep, *[F.col(c) for c in phys])
-            return self._derived(Frame(sel, self._index_names,
-                                       dup_labels={c: key for c in phys}))
+            return Frame(sel, self._index_names,
+                         dup_labels={c: key for c in phys})
         if isinstance(key, str):
             if key not in self._sdf.columns:
                 if self._col_labels:  # partial selection by outer level
@@ -470,9 +454,9 @@ class Frame:
                             # r13) — route through the dup machinery;
                             # unique labels keep plain names as before
                             sel, dup = _dup_aliases(list(sub.items()))
-                            return self._derived(Frame(
+                            return Frame(
                                 self._sdf.select(*keep, *sel),
-                                self._index_names, dup_labels=dup))
+                                self._index_names, dup_labels=dup)
                         renames = {c: lab for c, lab in sub.items() if isinstance(lab, str)}
                         sel = self._sdf.select(
                             *keep, *[F.col(c).alias(renames.get(c, c)) for c in sub])
@@ -489,8 +473,8 @@ class Frame:
                 # (same contract as flat dup-label getitem, r13)
                 keep = [F.col(c) for c in self._sdf.columns if I.is_internal(c)]
                 sel = self._sdf.select(*keep, *[F.col(c) for c in phys])
-                return self._derived(Frame(sel, self._index_names,
-                                           col_labels={c: key for c in phys}))
+                return Frame(sel, self._index_names,
+                             col_labels={c: key for c in phys})
             raise KeyError(key)
         if callable(key) and not isinstance(key, Series):
             # pandas method-chaining: df[lambda d: d["v"] > 2]
@@ -520,8 +504,8 @@ class Frame:
             picks.extend((c, k) for c in phys)
         keep = [F.col(c) for c in self._sdf.columns if I.is_internal(c)]
         sel, dup = _dup_aliases(picks)
-        return self._derived(Frame(self._sdf.select(*keep, *sel),
-                                   self._index_names, dup_labels=dup))
+        return Frame(self._sdf.select(*keep, *sel),
+                     self._index_names, dup_labels=dup)
 
     def __getattr__(self, name: str):
         if name.startswith("_"):
@@ -734,8 +718,7 @@ class Frame:
                 raise TypeError("rename(index=callable) is not supported — "
                                 "use a dict mapping of labels")
         if dup_path:
-            return self._derived(
-                Frame(out, self._index_names, dup_labels=out_dup))
+            return Frame(out, self._index_names, dup_labels=out_dup)
         return self._copy(out)
 
     def astype(self, dtype) -> "Frame":
@@ -1163,7 +1146,7 @@ class Frame:
             kept = {c: lab for c, lab in self._dup_labels.items()
                     if c in present}
             out._dup_labels = kept or None
-        return self._derived(out)
+        return out
 
     def reset_index(self, drop: bool = False) -> "Frame":
         sdf = self._sdf
@@ -1388,47 +1371,18 @@ class Frame:
         from .operators.distwindow import (consume_chained,
                                            mark_blocked_output, rank_blocked)
 
-        from pyspark import StorageLevel
-
-        base = consume_chained(self)
-        try:
-            base_pinned = base.storageLevel != StorageLevel.NONE
-        except Exception:  # noqa: BLE001 — connect-mode or API drift
-            base_pinned = False
-        out = base
-        interim = []
-        # keep LRU pin eviction off while this loop's pins are live
-        _guard = I.blocked_guard()  # noqa: F841 — liveness by scope
+        out = consume_chained(self)
         for i, c in enumerate(self._phys_cols):
             if i:
-                # pin between per-column passes: rank_blocked runs two
-                # eager driver collects whose plans would otherwise
-                # re-execute every previously chained column's rank
-                # machinery — O(K²) build work for a K-column rank
-                # (r10, ADVICE r9). Same mechanism consume_chained
-                # applies at API-call boundaries.
-                out = I.pin_order(out)
-                interim.append(out)
+                # materialize between per-column passes: rank_blocked
+                # runs two eager driver collects whose plans would
+                # otherwise re-execute every previously chained
+                # column's rank machinery — O(K²) build work for a
+                # K-column rank (r10, ADVICE r9). Same mechanism
+                # consume_chained applies at API-call boundaries.
+                out = I.materialize(out)
             out = rank_blocked(out, c, method=method, ascending=ascending,
                                pct=pct, na_option=na_option)
-        # every build collect is done — release the interim pins, but
-        # ONLY when the base itself is pinned (r11, ADVICE r10): rank
-        # blocks are VALUE-keyed and the offsets are broadcast-table
-        # data, so the caller's main action replays the K window
-        # passes from the base in one job — bit-deterministic when
-        # that base is materialized. From an UNPINNED lazy scan the
-        # replay could reassign order ids (the AQE race), shifting
-        # method='first' tiebreaks between the build and main jobs;
-        # there the interim pins stay live until the clear_cache()
-        # barrier, honoring its never-mid-plan contract.
-        if base_pinned:
-            for df in interim:
-                try:
-                    key = df.semanticHash()
-                    if key in I._PINNED:
-                        I._PINNED.pop(key).unpersist()
-                except Exception:  # noqa: BLE001
-                    pass
         return mark_blocked_output(self._copy(out))
 
     def _cum_frame(self, kind: str) -> "Frame":
@@ -1593,9 +1547,8 @@ class Frame:
                                      F.lit(None)).otherwise(out), lab))
             keep = [F.col(c) for c in sdf.columns if I.is_internal(c)]
             sel, dmap = _dup_aliases(picks)
-            res = Frame(sdf.select(*keep, *sel), self._index_names,
-                        dup_labels=dmap)
-            return self._derived(other._derived(res))
+            return Frame(sdf.select(*keep, *sel), self._index_names,
+                         dup_labels=dmap)
 
         shared = [c for c in self.columns if c in other.columns]
         right_only = [c for c in other.columns if c not in shared]
@@ -1622,10 +1575,9 @@ class Frame:
             sdf = sdf.withColumn(c, F.lit(None).cast("double"))
         sdf = sdf.drop(*[f"__r_{c}" for c in other.columns])
         internal = [c for c in sdf.columns if I.is_internal(c)]
-        res = Frame(sdf.select(*[F.col(c) for c in internal],
-                               *[F.col(c) for c in self.columns + right_only]),
-                    self._index_names)
-        return self._derived(other._derived(res))
+        return Frame(sdf.select(*[F.col(c) for c in internal],
+                                *[F.col(c) for c in self.columns + right_only]),
+                     self._index_names)
 
     def add(self, other, fill_value=None) -> "Frame":
         return self._flex_op(other, lambda a, b: a + b, fill_value)
@@ -2172,30 +2124,24 @@ class Frame:
 
         if method == "spearman":
             # same pairwise-complete masking as corr_matrix; the joined
-            # base is persisted and each column is its own job (see
+            # base is materialized and each column is its own job (see
             # corr_matrix — chained ranks recompute quadratically)
-            from pyspark import StorageLevel
-
             from .operators.distwindow import rank_blocked
 
-            base = sdf.select(*[f"{c}_{s}" for c in common
-                                for s in ("l", "r")]) \
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                out = {}
-                for c in common:
-                    both = (F.col(f"{c}_l").isNotNull()
-                            & F.col(f"{c}_r").isNotNull())
-                    s2 = base
-                    for side in ("l", "r"):
-                        name = f"{c}_{side}"
-                        s2 = s2.withColumn(name, F.when(both, F.col(name)))
-                        s2 = rank_blocked(s2, name, method="average",
-                                          out_name=name)
-                    out[c] = s2.agg(
-                        F.corr(F.col(f"{c}_l"), F.col(f"{c}_r"))).first()[0]
-            finally:
-                base.unpersist()
+            base = I.materialize(sdf.select(*[f"{c}_{s}" for c in common
+                                              for s in ("l", "r")]))
+            out = {}
+            for c in common:
+                both = (F.col(f"{c}_l").isNotNull()
+                        & F.col(f"{c}_r").isNotNull())
+                s2 = base
+                for side in ("l", "r"):
+                    name = f"{c}_{side}"
+                    s2 = s2.withColumn(name, F.when(both, F.col(name)))
+                    s2 = rank_blocked(s2, name, method="average",
+                                      out_name=name)
+                out[c] = s2.agg(
+                    F.corr(F.col(f"{c}_l"), F.col(f"{c}_r"))).first()[0]
             return pd.Series(out)
         if method != "pearson":
             raise NotImplementedError(f"corrwith(method={method!r}): "
@@ -2875,9 +2821,8 @@ class Frame:
                 keep = [F.col(c) for c in self._sdf.columns
                         if I.is_internal(c)]
                 sel, dmap = _dup_aliases(list(zip(phys, labels)))
-                return self._derived(
-                    Frame(self._sdf.select(*keep, *sel),
-                          self._index_names, dup_labels=dmap))
+                return Frame(self._sdf.select(*keep, *sel),
+                             self._index_names, dup_labels=dmap)
             return self.rename(dict(zip(self.columns, labels)))
         import pandas as pd
 

@@ -166,32 +166,28 @@ def corr_matrix(frame, method: str = "pearson"):
         # on the masked value; rank_blocked keeps the ranking
         # distributed (range-partitioned blocks, no global window).
         #
-        # The base (numeric cols only) is PERSISTED and each pair runs
-        # as its own job: chaining every pair's rank into one plan
+        # The base (numeric cols only) is MATERIALIZED and each pair
+        # runs as its own job: chaining every pair's rank into one plan
         # made each rank's bounds job recompute all earlier ranks —
         # O(pairs²) rank passes, 176 s at 10M rows vs ~1 s/pair here.
-        from pyspark import StorageLevel
-
+        from .. import _internal as I
         from .distwindow import rank_blocked
 
-        base = sdf.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            row = {}
-            for i, a in enumerate(cols):
-                for b in cols[i:]:
-                    both = F.col(a).isNotNull() & F.col(b).isNotNull()
-                    ra, rb = "__rk_l__", "__rk_r__"
-                    s2 = base.withColumn(ra, F.when(both, F.col(a)))
-                    s2 = rank_blocked(s2, ra, method="average", out_name=ra)
-                    if a == b:
-                        rb = ra
-                    else:
-                        s2 = s2.withColumn(rb, F.when(both, F.col(b)))
-                        s2 = rank_blocked(s2, rb, method="average", out_name=rb)
-                    row[f"{a}||{b}"] = s2.agg(
-                        F.corr(F.col(ra), F.col(rb))).first()[0]
-        finally:
-            base.unpersist()
+        base = I.materialize(sdf.select(*cols))
+        row = {}
+        for i, a in enumerate(cols):
+            for b in cols[i:]:
+                both = F.col(a).isNotNull() & F.col(b).isNotNull()
+                ra, rb = "__rk_l__", "__rk_r__"
+                s2 = base.withColumn(ra, F.when(both, F.col(a)))
+                s2 = rank_blocked(s2, ra, method="average", out_name=ra)
+                if a == b:
+                    rb = ra
+                else:
+                    s2 = s2.withColumn(rb, F.when(both, F.col(b)))
+                    s2 = rank_blocked(s2, rb, method="average", out_name=rb)
+                row[f"{a}||{b}"] = s2.agg(
+                    F.corr(F.col(ra), F.col(rb))).first()[0]
     elif method == "pearson":
         for i, a in enumerate(cols):
             for b in cols[i:]:

@@ -21,7 +21,7 @@ build time and re-shipped as broadcast relations (r9 — lazy carry
 subtrees re-executed the upstream chain once per statistic inside the
 main action). Driver-built tables are memoized by content
 (``_memo_table``) so rebuilt plans canonicalize equal and the
-pin_order cache hits across runs. Only rolling's monotonic
+``I.materialize`` registry hits across runs. Only rolling's monotonic
 subdividing layout (see ``_n_blocks``) still embeds per-partition
 literals and stays capped at 256 blocks (``_n_blocks(lit=True)``).
 Series order ops (shift/diff/cum*/rank/rolling/expanding) and row
@@ -49,7 +49,6 @@ No driver-side data beyond the split points and the carry table.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame as SparkDataFrame, Window as W, functions as F
@@ -144,8 +143,8 @@ def first_valid_refs(sdf: SparkDataFrame, cols: list[str],
     The sample is DETERMINISTIC (TakeOrdered on the engine order id
     when present, not a bare CollectLimit): the refs land in plans as
     literals, and an order-dependent sample made re-built plans hash
-    differently run-over-run — every pin_order persist then MISSED and
-    leaked one cache entry per kernel per run (r9; measured +6
+    differently run-over-run — every materialize lookup then MISSED and
+    stored one more copy per kernel per run (r9; measured +6
     persisted RDDs per warm re-run of the moments chain). Callers
     whose sdf may lack ORDER_COL should pass their own ``order_by``
     (the blocked expanding-moments engine passes its order key,
@@ -153,8 +152,8 @@ def first_valid_refs(sdf: SparkDataFrame, cols: list[str],
     operate on Frame sdfs, which always carry the engine id. The
     anchor requirement is ASSERTED (r12, VERDICT r11 #2): an
     unanchored sample keeps results exact (shift-invariance) but
-    makes re-built plans hash differently run-over-run, leaking one
-    pin entry per kernel per run — the contract is self-enforcing,
+    makes re-built plans hash differently run-over-run, storing one
+    more leaf per kernel per run — the contract is self-enforcing,
     not docstring-enforced."""
     import math
 
@@ -163,7 +162,7 @@ def first_valid_refs(sdf: SparkDataFrame, cols: list[str],
               else order_by)
     if anchor is None:
         # hard raise, not assert: python -O strips asserts and the
-        # unanchored path would silently leak one pin per kernel per
+        # unanchored path would silently store one leaf per kernel per
         # run (non-deterministic plan hashes) — ADVICE r12 #5
         raise RuntimeError(
             "first_valid_refs: deterministic-sample contract — the input "
@@ -242,8 +241,8 @@ def _wrap_i64(v):
 _LOCAL_TBLS: "OrderedDict" = __import__("collections").OrderedDict()
 # LRU bound: entries are ≤P rows each (P ≤ 4096); 256 distinct table
 # contents ≈ a worst case of ~100 MB driver heap. Evicting an entry
-# only costs a downstream pin_order miss if the SAME content is
-# rebuilt later (one extra persist entry) — correctness is unaffected.
+# only costs a downstream materialize miss if the SAME content is
+# rebuilt later (one extra leaf) — correctness is unaffected.
 _LOCAL_TBLS_MAX = 256
 
 
@@ -278,8 +277,8 @@ def _memo_table(spark, rows, schema) -> SparkDataFrame:
     split bounds, carries), memoized by CONTENT. Python-built
     DataFrames are RDD-backed (LogicalRDD), which canonicalizes by RDD
     identity — two builds of the SAME table hash differently, so every
-    downstream semanticHash-keyed ``pin_order`` persist missed on
-    re-built plans and leaked one cache entry per kernel per run (r9;
+    downstream plan-keyed ``I.materialize`` lookup missed on
+    re-built plans and stored one more copy per kernel per run (r9;
     measured on every blocked kernel since the r8 sid tables).
     Returning the same DataFrame object for the same content makes
     rebuilt plans canonicalize equal. Entries are ≤P rows each; the
@@ -305,41 +304,33 @@ def _memo_table(spark, rows, schema) -> SparkDataFrame:
 def mark_blocked_output(frame):
     """Tag a Frame produced by a blocked kernel so a FURTHER blocked
     kernel consuming it knows the input plan already contains window/
-    join machinery worth materializing (see consume_chained). Also
-    registers the frame in the weak liveness set (r11): while it is
-    alive its lazy plan may reference pins, so the clear_cache()
-    barrier warns and LRU pin eviction defers (_internal.py)."""
+    join machinery worth materializing (see consume_chained)."""
     frame._blocked_out = True
-    I.register_live_blocked(frame)
     return frame
 
 
 def consume_chained(frame) -> SparkDataFrame:
     """Entry hook for blocked kernels reading a Frame: when the input
     is itself a blocked kernel's output (tagged by
-    mark_blocked_output), materialize it ONCE via ``I.pin_order``
-    (persist MEMORY_AND_DISK — NOT a checkpoint: the plan stays
-    declarative, so an evicted block recomputes through the frozen
-    physical plan with deterministic ids instead of failing the way a
-    lost localCheckpoint block would). Each blocked call runs 2-3
-    small build jobs (centering refs, block stats, carry totals) plus
-    the main pass over its input; without the cut, K chained calls
-    re-execute the upstream window/join machinery per job — the r8
-    flagship chain (4 expanding-moment calls) doubled warm
-    anchor-adjusted (r8 VERDICT "What's wrong" #1). After the pin
-    every later job scans stored blocks. Single un-chained blocked
-    calls are untouched: the tag is only set by blocked kernels, never
-    by reads/projections.
+    mark_blocked_output), materialize it ONCE (``I.materialize``).
+    Each blocked call runs 2-3 small build jobs (centering refs, block
+    stats, carry totals) plus the main pass over its input; without
+    the cut, K chained calls re-execute the upstream window/join
+    machinery per job — the r8 flagship chain (4 expanding-moment
+    calls) doubled warm anchor-adjusted (r8 VERDICT "What's wrong"
+    #1). After it every later job scans stored rows, and the chain's
+    plan stays one leaf deep. Single un-chained blocked calls are
+    untouched: the tag is only set by blocked kernels, never by
+    reads/projections.
 
-    The pin stores the frame's FULL width deliberately: every blocked
+    The leaf stores the frame's FULL width deliberately: every blocked
     kernel's output passes non-value columns through in place, so the
-    main pass reads the full width anyway — a width-pruned pin would
+    main pass reads the full width anyway — a width-pruned leaf would
     force the main pass to re-execute the upstream machinery at full
     width once more, trading one stored copy for a doubled compute
-    pass (measured; SCALE.md "Checkpoint width adjudication").
-    Release: ``_internal.clear_cache()`` at a query boundary."""
+    pass (measured; SCALE.md "Checkpoint width adjudication")."""
     if getattr(frame, "_blocked_out", False):
-        frame._sdf = I.pin_order(frame._sdf)
+        frame._sdf = I.materialize(frame._sdf)
         frame._blocked_out = False
     return frame._sdf
 
@@ -347,14 +338,15 @@ def consume_chained(frame) -> SparkDataFrame:
 def _pin_if_order(sdf: SparkDataFrame, order_col: Column) -> SparkDataFrame:
     """Kernels below collect order-derived literals in build jobs and
     apply them in the caller's later main job; when the order key is
-    the engine's synthetic id the relation must be pinned first
-    (I.pin_order) or AQE can hand the two jobs different id layouts —
-    unless its ids are already read from a materialized relation
-    (``I.ids_frozen``, e.g. a Series op over an augmented anchor).
-    Data-derived order keys (timestamps, values) are plan-independent
-    and skip the pin."""
+    the engine's synthetic id the relation must be materialized first
+    (``I.materialize``) or AQE can hand the two jobs different id
+    layouts — unless its ids are already read from a materialized
+    relation (``I.ids_frozen``: a leaf plus projections, a Series op
+    over an augmented anchor). Every later job must read the RETURNED
+    relation. Data-derived order keys (timestamps, values) are
+    plan-independent and skip it."""
     if _is_order_id(order_col) and not I.ids_frozen(sdf):
-        return I.pin_order(sdf)
+        return I.materialize(sdf)
     return sdf
 
 
@@ -428,6 +420,21 @@ def _blk_lookup(vals) -> Column:
     """Block id -> ``vals[BLK]`` (bigint) as ONE foldable array literal
     indexed by the block column — O(P) plan, never a P-branch CASE."""
     return F.element_at(_lit_long_array(vals), F.col(BLK).cast("int") + 1)
+
+
+_LIT_DTS = ("bigint", "int", "double", "float")
+
+
+def _lit_carries_fit(nb: int, carry_specs, tsch) -> bool:
+    """The one rule for attaching driver-folded carries as foldable
+    literal arrays (``_lit_carry_array``) instead of a broadcast join:
+    a small layout (≤512 blocks, ≤8192 literals in all) of numeric
+    carries only. It drops a BroadcastExchange stage from the main
+    action (r13); exotic min/max dtypes (timestamps, strings) and
+    large layouts keep the join, whose plan size is O(1)."""
+    return 0 < nb <= 512 and nb * len(carry_specs) <= 8192 and all(
+        tsch[tn].dataType.simpleString() in _LIT_DTS
+        for _, tn, _ in carry_specs)
 
 
 def _lit_carry_array(vals, dt: str) -> Column:
@@ -587,14 +594,16 @@ def collect_sid_layout(sdf: SparkDataFrame, order_col: Column):
       ``None`` when per-sid offsets are not contiguous 0..c-1 (an
       upstream filter left gaps — fast paths must then fall back).
     - ``aligned``: every sid's rows live in exactly ONE physical
-      partition of the (pinned) relation. Blocks subdivide sids, so
+      partition of the (materialized) relation. Blocks subdivide sids, so
       aligned means block ⊆ physical partition — the precondition for
       the two-pass summarize/evaluate kernels to run as ``mapInPandas``
       with ZERO shuffles instead of two groupBy(BLK) exchanges (guide
       §2.1 "remove the shuffle outright"). spark_partition_id is read
-      off the pinned relation, so its stability across the stats job
-      and the later passes rides the SAME pin_order freeze contract
-      the id-derived literals already rely on.
+      off the materialized relation, so its stability across the stats
+      job and the later passes rides the SAME stored-leaf contract the
+      id-derived literals already rely on. Callers must run their
+      later passes over a relation whose ids are frozen the same way
+      (``_pin_if_order`` before calling this).
 
     Callers that need BOTH a dense row number and a block layout over
     the same relation (ungrouped ffill/interpolate) collect this once
@@ -623,7 +632,7 @@ def collect_sid_layout(sdf: SparkDataFrame, order_col: Column):
     if not all(lo == 0 and hi == c - 1 for _b, c, lo, hi in stats):
         return None, False
     # physical alignment holds only over a relation whose PARTITIONING
-    # is stored too, not just its ids (_pin_if_order skips the pin when
+    # is stored too, not just its ids (_pin_if_order skips the leaf when
     # the ids alone are frozen upstream)
     return stats, (all(len(v) == 1 for v in pids.values())
                    and I.ids_frozen(sdf, layout=True))
@@ -708,20 +717,18 @@ def block_partition(sdf: SparkDataFrame, order_col: Column,
 # task's sequential numpy pass stays trivially cheap. 4M rows ≈ tens of
 # ms per kernel column; a handful of huge cached partitions (e.g. an
 # upstream AQE-coalesced exchange) falls back to the groupBy layouts.
-_ALIGNED_ROWS_CAP = int(os.environ.get("SPARK_GRAFT_ALIGNED_ROWS_CAP",
-                                       "4000000"))
+_ALIGNED_ROWS_CAP = 4_000_000
 
 # Row threshold for running_pick's VALUE-keyed fast-carry strategy
 # (see running_pick_blocked): below it the lazy shared-exchange carry
 # wins (its cost is one fewer blocking build job — fixed driver time,
-# and over the pinned input the second window evaluation reads cached
-# blocks); above it the collect-and-fold carry wins (the double window
+# and over the materialized input the second window evaluation reads
+# stored rows); above it the collect-and-fold carry wins (the double window
 # evaluation scales with the data). Measured over the PINNED input on
 # this box: 45k-row union lazy 0.78 s vs fast ~1.1 s; 450k lazy 0.95
 # vs fast 1.34; 6.25M fast 2.38 vs lazy 2.90 (1.22×, growing with
 # data) — geometric midpoint ≈ 2M. Threshold in ROWS, not cores.
-_CARRY_FAST_MIN_ROWS = int(os.environ.get(
-    "SPARK_GRAFT_CARRY_FAST_MIN_ROWS", "2000000"))
+_CARRY_FAST_MIN_ROWS = 2_000_000
 
 
 def _blocked_base(sdf: SparkDataFrame, order_col: Column,
@@ -731,7 +738,7 @@ def _blocked_base(sdf: SparkDataFrame, order_col: Column,
 
     Returns ``(base, aligned, nb_est)``. aligned=True means blocks ≡ id
     source partitions, each wholly inside ONE physical partition of the
-    pinned relation (``collect_sid_layout``), with enough of them (or
+    materialized relation (``collect_sid_layout``), with enough of them (or
     few enough rows each) that parallelism does not regress — both
     passes then run as ``mapInPandas`` with ZERO shuffles, and BLK is a
     pure projection of the id's sid bits instead of a broadcast join.
@@ -1087,8 +1094,7 @@ _RUNNING = {"sum", "count", "min", "max", "mean", "var", "std", "prod"}
 def expanding_blocked(sdf: SparkDataFrame, order_col: Column,
                       specs: dict[str, tuple[str, str]],
                       min_periods: int = 1,
-                      n_blocks: int | None = None,
-                      pre_pinned: bool = False) -> SparkDataFrame:
+                      n_blocks: int | None = None) -> SparkDataFrame:
     """Running aggregates (expanding window) over blocks.
 
     Per block: running partials over a per-block window (parallel).
@@ -1097,30 +1103,13 @@ def expanding_blocked(sdf: SparkDataFrame, order_col: Column,
     block adds — broadcast back. Combines: sum/count add, min/max fold,
     mean = ΣX/n, var/std from (ΣX, ΣX², n), prod from Σln|x| + sign
     and zero parities (the SURVEY §2.5 cumprod idiom).
-
-    ``pre_pinned=True`` (r13): the caller guarantees ``sdf`` is a
-    deterministic per-row projection over a relation it already pinned
-    via ``I.pin_order`` — the id layout is frozen by THAT pin, so
-    pinning the projected plan again would only double-store the data
-    (Expanding.moments pins the base before its centering-refs sample
-    and layers ~16 power-sum temps on top). The build/main jobs then
-    recompute the cheap projection over the cached blocks.
-
-    CALLER OBLIGATION (ADVICE r13): passing ``pre_pinned=True`` over an
-    unpinned or non-deterministic relation silently reopens the AQE
-    id-shift race ``pin_order`` closes — the build jobs and the main
-    action could then see DIFFERENT block layouts, producing wrong
-    carries with no error. Any new ``pre_pinned=True`` call site must
-    (a) pin the base relation first and (b) layer only deterministic
-    per-row projections on top; state that in the call-site comment.
     """
     for name, (_, kind) in specs.items():
         if kind not in _RUNNING:
             raise ValueError(f"non-decomposable expanding aggregate {kind!r}")
     OC = "__ord__"
     mono = _is_order_id(order_col)
-    if not pre_pinned:
-        sdf = _pin_if_order(sdf, order_col)
+    sdf = _pin_if_order(sdf, order_col)
     wrun = (W.partitionBy(BLK).orderBy(F.col(OC).asc())
             .rowsBetween(W.unboundedPreceding, W.currentRow))
 
@@ -1339,13 +1328,8 @@ def expanding_blocked(sdf: SparkDataFrame, order_col: Column,
     # broadcast join when the table is small (r13): one fewer
     # BroadcastExchange stage in the main action, same values (the
     # arrays are indexed by block id; blocks absent from trows have no
-    # rows, so their None filler is never read). Numeric carries only —
-    # exotic min/max dtypes (timestamps, strings) keep the join, as
-    # does any large layout (the broadcast table is O(1) plan size).
-    _LIT_DTS = ("bigint", "int", "double", "float")
-    if 0 < nb <= 512 and nb * len(carry_specs) <= 8192 and all(
-            tsch[tn].dataType.simpleString() in _LIT_DTS
-            for _, tn, _ in carry_specs):
+    # rows, so their None filler is never read) — _lit_carries_fit.
+    if _lit_carries_fit(nb, carry_specs, tsch):
         # try_element_at: blk+1 is in bounds by construction (every data
         # row's block appears in trows); under ANSI mode a violation
         # degrades to the join path's NULL, never a runtime error.
@@ -1464,6 +1448,12 @@ def row_position(sdf: SparkDataFrame, name: str) -> SparkDataFrame:
             .withColumn(name, F.col(name) - 1))
 
 
+# Driver bytes the fused median attempt may ship (16 bytes per
+# histogram entry, see expanding_quantile_approx_blocked); 0 forces the
+# classic percentile_approx + bincount pair.
+_MEDIAN_FUSE_BUDGET = 256 * 2**20
+
+
 def expanding_quantile_approx_blocked(sdf: SparkDataFrame, order_col: Column,
                                       cols: list[str], q: float,
                                       n_grid: int = 1024,
@@ -1505,8 +1495,8 @@ def expanding_quantile_approx_blocked(sdf: SparkDataFrame, order_col: Column,
     whose distinct count exceeds ``max(4·n_grid, 4096)`` overflows the
     histogram budget and the classic percentile_approx + bincount pair
     runs instead (high-cardinality inputs pay one extra pruned pass for
-    the attempt; ``SPARK_GRAFT_MEDIAN_FUSE=0`` disables the attempt for
-    deployments that know their data is like that)."""
+    the attempt). The whole attempt is gated on
+    ``_MEDIAN_FUSE_BUDGET`` driver bytes."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (BinaryType, LongType, StringType,
@@ -1529,8 +1519,6 @@ def expanding_quantile_approx_blocked(sdf: SparkDataFrame, order_col: Column,
     per: dict = {}
     blks: list = []
     fused_done = False
-    fuse_budget = int(os.environ.get("SPARK_GRAFT_MEDIAN_FUSE_BUDGET",
-                                     str(256 * 2**20)))
     ucap = max(4 * n_grid, 4096)
     # Driver-bytes budget for the fused attempt (guide §5): each
     # (block, col) histogram ships ≤ ucap (value, count) pairs = 16
@@ -1539,8 +1527,7 @@ def expanding_quantile_approx_blocked(sdf: SparkDataFrame, order_col: Column,
     # its sid count (unbounded at scale), so gate the whole attempt on
     # the estimated total and fall back to the classic fixed-size
     # percentile_approx grid when it would not fit.
-    if (os.environ.get("SPARK_GRAFT_MEDIAN_FUSE", "1") == "1"
-            and _nb_est * len(cols) * ucap * 16 <= fuse_budget):
+    if _nb_est * len(cols) * ucap * 16 <= _MEDIAN_FUSE_BUDGET:
         hist_schema = StructType([
             StructField("b", LongType()), StructField("col", StringType()),
             StructField("vals", BinaryType(), True),
@@ -1905,14 +1892,13 @@ def running_pick_blocked(sdf: SparkDataFrame, order_by: list[Column],
     nb_known: int | None = None  # driver-known block count (value-keyed)
     if carry_order is not None and not mono_key:
         # Value-keyed fast-carry inputs (the no-by merge_asof union)
-        # are pinned BEFORE the split-bounds job, so bounds, the totals
-        # collect and the main window action all read one materialized
+        # are materialized BEFORE the split-bounds job, so bounds, the
+        # totals collect and the main window action all read one stored
         # relation instead of each re-running scan+union (r14; the
-        # mono-id layouts arrive here already pinned by _pin_if_order,
-        # and pin_order's semanticHash registry dedups — same
-        # LRU/storage budget as every other blocked kernel input,
-        # SCALE.md "Session storage budget").
-        sdf = I.pin_order(sdf)
+        # mono-id layouts arrive here already frozen by _pin_if_order —
+        # same registry and storage budget as every other blocked
+        # kernel input, SCALE.md "Session storage budget").
+        sdf = I.materialize(sdf)
         bounds, total = _split_bounds(sdf, block_key,
                                       n_blocks or _n_blocks(sdf),
                                       with_count=True)
@@ -1924,8 +1910,8 @@ def running_pick_blocked(sdf: SparkDataFrame, order_by: list[Column],
         # main action. The job is a fixed driver cost; the double
         # evaluation scales with data — see _CARRY_FAST_MIN_ROWS for
         # the measured crossover. Below the threshold the lazy
-        # shared-exchange carry stays (over the pin it reads cached
-        # blocks). The count rides the bounds job for free.
+        # shared-exchange carry stays (over the leaf it reads stored
+        # rows). The count rides the bounds job for free.
         if total < _CARRY_FAST_MIN_ROWS:
             carry_order = None
     else:
@@ -2045,10 +2031,7 @@ def running_pick_blocked(sdf: SparkDataFrame, order_by: list[Column],
         # stage from the main action; every blk_ids slot is written by
         # the fold above, so no filler survives for a block with rows)
         nb = (blk_ids[-1] + 1) if blk_ids else 0
-        _LIT_DTS = ("bigint", "int", "double", "float")
-        if 0 < nb <= 512 and nb * len(carry_specs) <= 8192 and all(
-                tsch[tn].dataType.simpleString() in _LIT_DTS
-                for _, tn, _ in carry_specs):
+        if _lit_carries_fit(nb, carry_specs, tsch):
             per: dict[str, list] = {nm: [None] * nb
                                     for nm, _, _ in carry_specs}
             for blk in blk_ids:

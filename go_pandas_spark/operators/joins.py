@@ -562,8 +562,8 @@ def merge_asof(left: Frame, right: Frame, on: str, by=None, direction: str = "ba
         # running_pick_blocked's fast carry path instead of the lazy
         # carry subtree that re-evaluated the whole window pass a
         # second time inside the main action (guide §1.2/§2.4); small
-        # inputs keep the lazy shared-exchange carry over the pinned
-        # union, where one fewer blocking build job wins.
+        # inputs keep the lazy shared-exchange carry over the
+        # materialized union, where one fewer blocking build job wins.
         _carry_key = F.struct(F.col("__onv__"), F.col("__rord__"))
 
         def _mk_pick(back: bool):

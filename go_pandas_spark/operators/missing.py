@@ -62,11 +62,13 @@ def fillna(frame, value=None, method: str | None = None, subset=None, limit: int
             # row number of the picked observation — a blocked running
             # count plus a second picked marker column, still never one
             # task (pre-r7 this variant kept the single-window plan).
-            from .distwindow import (collect_sid_stats, consume_chained,
-                                     dense_row_number, mark_blocked_output,
+            from .distwindow import (_pin_if_order, collect_sid_stats,
+                                     consume_chained, dense_row_number,
+                                     mark_blocked_output,
                                      running_pick_blocked)
 
-            sdf = consume_chained(frame)
+            # frozen once: the stats job and every later pass read it
+            sdf = _pin_if_order(consume_chained(frame), F.col(I.ORDER_COL))
             back = method in ("ffill", "pad")
             picked = list(cols)
             temps: list[str] = []
@@ -219,16 +221,16 @@ def interpolate(frame, method: str = "linear", subset=None, partition_by: list[s
         # task pre-r7: the prev/next value+position picks are exactly
         # the blocked running-pick kernel, the dense row number is a
         # blocked running count — never one task
-        from .distwindow import (collect_sid_stats, consume_chained,
-                                 dense_row_number, mark_blocked_output,
-                                 running_pick_blocked)
+        from .distwindow import (_pin_if_order, collect_sid_stats,
+                                 consume_chained, dense_row_number,
+                                 mark_blocked_output, running_pick_blocked)
 
         # NOTE: __rn__/__cnt__ are running_pick_blocked's internal
         # temps (it drops them) — use distinct names here
         pos_col, ri_col = "__ipos__", "__iri__"
         # ONE layout stats job shared by the row-number and block
         # kernels (r13 — they ran the identical groupBy(sid) twice)
-        base0 = consume_chained(frame)
+        base0 = _pin_if_order(consume_chained(frame), F.col(I.ORDER_COL))
         stats = collect_sid_stats(base0, F.col(I.ORDER_COL))
         # global dense row number: pure partition metadata on the
         # monotonic-id fast path (r13) — no blocked running-count pass

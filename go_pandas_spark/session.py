@@ -88,9 +88,10 @@ def warmup(spark: SparkSession, rows: int = 2_000) -> float:
     and this pass removes ~45% of a heavy query's cold time. It costs
     ~20 s itself, so DON'T warm up a single-query job; a session
     running many queries repays it within two heavy ones.
-    Only the pins THIS pass created are released
-    before returning — a mid-session caller's live pins are untouched
-    (clear_cache() remains the explicit whole-registry barrier).
+    Only the registry entries THIS pass created are dropped before
+    returning (their leaves are freed once unreachable) — a
+    mid-session caller's entries are untouched (clear_cache() drops
+    the whole registry).
     Returns seconds spent."""
     import time
 
@@ -112,7 +113,7 @@ def warmup(spark: SparkSession, rows: int = 2_000) -> float:
     agg = f[f["v"] > 1.0].groupby(["k"], as_index=False).agg(
         s=("v", "sum"), m=("v", "mean"), n=("v", "count"))
     f.merge(agg, on="k", how="left")._sdf.count()
-    # blocked order-op family, chained (consume_chained pin path)
+    # blocked order-op family, chained (consume_chained materialize path)
     f[["v"]].cumsum().shift(2)._sdf.count()
     f[["v"]].rank(pct=True)._sdf.count()
     # moving windows: rolling / expanding (fused) / ewm
@@ -123,8 +124,5 @@ def warmup(spark: SparkSession, rows: int = 2_000) -> float:
     f.assign(t2=f["txt"].str.contains("tok"))._sdf.count()
     f.groupby(["k"]).transform(lambda s: s - s.mean(), ["v"])._sdf.count()
     for key in set(I._PINNED) - pre_pins:
-        try:
-            I._PINNED.pop(key).unpersist()
-        except Exception:  # noqa: BLE001
-            pass
+        del I._PINNED[key]
     return round(time.time() - t0, 3)

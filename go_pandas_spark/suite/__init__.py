@@ -121,11 +121,18 @@ _MODULES = ["tpch", "tpch2", "relational", "aggregation", "windows", "reshape", 
 # The driver hash-verifies the FIRST 50 entries of queries() each
 # round. Contract: the window leads with every query whose engine path
 # the round changed, then the stalest driver evidence. Current window:
-# the grouped-rank tie table (Series and frame GroupBy.rank), then the
-# rows whose last recorded verification is oldest (r11, then r12).
+# every query whose blocked kernels materialize through
+# ``_internal.materialize`` (lineage-truncated leaves instead of
+# persisted pins), then the rows whose last recorded verification is
+# oldest (r11, then r12).
 _VERIFY_FIRST = [
-    # grouped rank from one shared tie table (this round's path)
-    "rank_methods", "corr_spearman",
+    # materialized leaves (this round's path)
+    "cumulative_ungrouped_global", "series_rolling_expression",
+    "expanding_moments_global", "ffill_global_limit",
+    "merge_asof_global_noby", "corr_spearman", "rank_methods",
+    "rolling_ungrouped_global", "expanding_median_approx_global",
+    "ewm_var_noadjust_global", "ewm_cov_corr_global",
+    "interpolate_global_linear",
     # last verified r11
     "q14_promo_revenue", "q18_large_volume_customers",
     "q2_min_cost_supplier", "q7_volume_shipping",

@@ -740,16 +740,15 @@ class Expanding(Rolling):
                 raise ValueError(f"moments: unknown stat {sp!r}")
 
         sdf = consume_chained(self._frame)
-        # Pin the BASE relation before the centering-refs sample (r13):
-        # the refs TakeOrdered otherwise re-executes the frame's whole
-        # upstream sort/exchange chain just to read 1,024 rows (~0.45 s
-        # and 3 jobs per call at sf0.1 vs 1 job over the pin — measured,
-        # identical ref values: pinning freezes the same id order the
-        # unpinned sample saw). expanding_blocked then skips its own pin
-        # (pre_pinned): the power-sum projection below is deterministic
-        # per-row over the pinned blocks, so ids stay frozen, and one
-        # stored copy replaces what were two (base-width + temps).
-        sdf = I.pin_order(sdf)
+        # Materialize the BASE relation before the centering-refs
+        # sample (r13): the refs TakeOrdered otherwise re-executes the
+        # frame's whole upstream sort/exchange chain just to read 1,024
+        # rows (~0.45 s and 3 jobs per call at sf0.1 vs 1 job over the
+        # stored rows — measured, identical ref values). The power-sum
+        # projection below is deterministic per-row over the leaf, so
+        # expanding_blocked finds its ids frozen (``I.ids_frozen``) and
+        # stores nothing more: one stored copy, not two (base + temps).
+        sdf = I.materialize(sdf)
         ref_cols = sorted({sp[0] for sp in moment.values()}
                           | {c for sp in pairs.values() for c in sp[:2]})
         refs = _first_valid_refs(sdf, ref_cols) if ref_cols else {}
@@ -814,7 +813,7 @@ class Expanding(Rolling):
             sdf = sdf.withColumns(new_cols)
 
         out_df = expanding_blocked(sdf, F.col(I.ORDER_COL), bspecs,
-                                   min_periods=1, pre_pinned=True)
+                                   min_periods=1)
         # output expressions only reference expanding_blocked's partial
         # columns (never each other) — one batched projection
         out_exprs: dict[str, Column] = {}

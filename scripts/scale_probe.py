@@ -38,14 +38,14 @@ def main() -> None:
     results: dict[str, dict] = {}
 
     def probe(name, thunk):
-        # r10 methodology: clear the engine's pin/memo registries
-        # before each line (clear_cache is a barrier; the probe is a
-        # query boundary). Pre-r10 probes accumulated ~8 pinned
-        # 10M-row intermediates per session, so LATER lines timed
-        # against escalating storage pressure — the documented
-        # run-over-run wobble. Lines are now independent. The probe
-        # INPUT stays persisted (f._sdf is persisted directly, not via
-        # pin_order, so clear_cache leaves it alone).
+        # r10 methodology: clear the engine's leaf/memo registries
+        # before each line (the probe is a query boundary). Pre-r10
+        # probes accumulated ~8 pinned 10M-row intermediates per
+        # session, so LATER lines timed against escalating storage
+        # pressure — the documented run-over-run wobble. Lines are now
+        # independent. The probe INPUT stays persisted (f._sdf is the
+        # caller's own cache, which materialize never copies or
+        # registers).
         import go_pandas_spark as _gp
 
         _gp.clear_cache()

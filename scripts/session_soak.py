@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
 """Long-lived-session soak (r10): drive the full oracle suite through
-ONE SparkSession for several passes with `clear_cache()` at each query
--boundary pass, and report the storage registries + JVM persistent-RDD
+ONE SparkSession for several passes with `clear_cache()` at the end of
+each pass, and report the storage registries + JVM persistent-RDD
 state after every pass. The point: a service session's executor
-storage is BOUNDED — it grows within a pass (pins are per-query-chain
-correctness state), drains to zero at the barrier, and pass N+1 looks
-exactly like pass 1.
+storage is BOUNDED — it grows within a pass (materialized leaves are
+per-query-chain state), drains once the pass's frames and registry
+entries are unreachable (Spark's ContextCleaner frees a leaf after a
+JVM collection, so the cleared snapshot polls for it), and pass N+1
+looks exactly like pass 1.
 
 Usage: python scripts/session_soak.py [sf_dir] [passes]
 Prints one JSON line per checkpoint.
@@ -32,6 +34,20 @@ def jvm_storage(spark) -> dict:
         "mem_mb": round(sum(i.memSize() for i in infos) / 2**20, 1),
         "disk_mb": round(sum(i.diskSize() for i in infos) / 2**20, 1),
     }
+
+
+def drain(spark, timeout_s: float = 10.0) -> None:
+    """Collect both heaps until the unreachable leaves' blocks are
+    freed (ContextCleaner runs asynchronously) or ``timeout_s``."""
+    import gc
+
+    deadline = time.time() + timeout_s
+    while True:
+        gc.collect()
+        spark._jvm.System.gc()
+        if not jvm_storage(spark)["persisted_rdds"] or time.time() > deadline:
+            return
+        time.sleep(0.5)
 
 
 def snapshot(spark, tag: str, t0: float) -> None:
@@ -65,13 +81,14 @@ def main() -> int:
             print(json.dumps({"tag": f"pass{p + 1}_failures",
                               "failed": failed}), flush=True)
         if no_barrier:
-            # service that never calls the barrier: storage must stay
+            # service that never calls the barrier: the registry stays
             # bounded by the _PINNED_MAX LRU alone (r11)
             print(json.dumps({"tag": f"pass{p + 1}_no_barrier",
                               "pinned_cap": I._PINNED_MAX,
                               "pins": len(I._PINNED)}), flush=True)
         else:
             gp.clear_cache()
+            drain(spark)
             snapshot(spark, f"pass{p + 1}_cleared", t0)
     return 0
 

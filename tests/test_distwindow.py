@@ -1481,7 +1481,7 @@ def test_expanding_agg_min_max_same_column(spark):
 def test_memo_table_identity_and_pin_stability(spark):
     """Driver-built broadcast tables are RDD-backed and canonicalize
     by RDD identity — _memo_table must return the SAME DataFrame for
-    the same content so rebuilt plans hash equal and pin_order hits
+    the same content so rebuilt plans hash equal and I.materialize hits
     instead of leaking one persist per kernel per run (r9)."""
     from go_pandas_spark.operators.distwindow import _memo_table
 
@@ -1859,7 +1859,7 @@ def test_moment_chain_repins_nothing_on_rerun(spark):
     import go_pandas_spark as gp
     from go_pandas_spark import _internal as I
 
-    gp.clear_cache(force=True)
+    gp.clear_cache()
     pdf = pd.DataFrame({"k": np.arange(300.0),
                         "v": np.random.RandomState(9).normal(1e6, 1, 300)})
     f = gp.Frame(spark.createDataFrame(pdf).repartition(4)).sort_values("k")
@@ -1869,7 +1869,7 @@ def test_moment_chain_repins_nothing_on_rerun(spark):
     assert len(I._PINNED) == n_pins  # no re-pin on the warm re-run
     np.testing.assert_allclose(first["v"].to_numpy()[2:],
                                again["v"].to_numpy()[2:], rtol=1e-12)
-    gp.clear_cache(force=True)
+    gp.clear_cache()
 
 
 # ----------------------------------------------------------------- #

@@ -157,7 +157,7 @@ def test_approx_aggregates(spark, sf_dir):
 
 
 def test_pinned_order_ids_stable_across_plan_shapes(spark, sf_dir):
-    """pin_order contract: after pinning, an aggregate-shaped job and
+    """materialize contract: over the leaf, an aggregate-shaped job and
     a scan-only collect must observe the SAME id layout (without the
     pin, AQE can coalesce the post-sort shuffle differently per plan
     shape and silently shift every id)."""
@@ -167,7 +167,7 @@ def test_pinned_order_ids_stable_across_plan_shapes(spark, sf_dir):
 
     ev = gp.read_parquet(spark, f"{sf_dir}/events.parquet").sort_values(
         ["ts", "event_id"])
-    sdf = I.pin_order(ev._sdf)
+    sdf = I.materialize(ev._sdf)
     sid = F.shiftright(F.col(I.ORDER_COL), 33)
     MASK = (1 << 33) - 1
     agg = sdf.groupBy(sid.alias("b")).agg(F.count(F.lit(1)).alias("c")).collect()

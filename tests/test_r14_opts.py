@@ -113,7 +113,7 @@ def test_fused_median_grid_paths(spark, monkeypatch):
     statistic when the distinct values fit the grid, (b) keep the
     rank contract on high-cardinality data through the exact
     equi-depth branch, and (c) agree with the classic
-    percentile_approx path (SPARK_GRAFT_MEDIAN_FUSE=0) on (a)."""
+    percentile_approx path (a zero _MEDIAN_FUSE_BUDGET) on (a)."""
     from go_pandas_spark.operators import distwindow as dw
 
     rng = np.random.RandomState(3)
@@ -133,12 +133,12 @@ def test_fused_median_grid_paths(spark, monkeypatch):
     assert np.array_equal(got, exp, equal_nan=True)
 
     # (c) classic path returns the same answers on grid-complete data
-    monkeypatch.setenv("SPARK_GRAFT_MEDIAN_FUSE", "0")
+    monkeypatch.setattr(dw, "_MEDIAN_FUSE_BUDGET", 0)
     out0 = dw.expanding_quantile_approx_blocked(f._sdf, oc, ["v"], 0.5,
                                                 min_periods=2)
     got0 = out0.toPandas().sort_values("k")["v"].to_numpy()
     assert np.array_equal(got0, exp, equal_nan=True)
-    monkeypatch.delenv("SPARK_GRAFT_MEDIAN_FUSE")
+    monkeypatch.undo()
 
     # (b) high cardinality at a small grid: equi-depth branch; every
     # answer is a real data value whose prefix rank reaches k
@@ -348,7 +348,7 @@ def test_fused_grid_non_pow2_n_grid_and_budget_gate(spark, monkeypatch):
     # classic path returns the same exact lower order statistic
     exp = base["v"].expanding(min_periods=2).quantile(
         0.5, interpolation="lower").to_numpy()
-    monkeypatch.setenv("SPARK_GRAFT_MEDIAN_FUSE_BUDGET", "1")
+    monkeypatch.setattr(dw, "_MEDIAN_FUSE_BUDGET", 1)
     out2 = dw.expanding_quantile_approx_blocked(f._sdf, oc, ["v"], 0.5,
                                                 min_periods=2)
     got2 = out2.toPandas().sort_values("k")["v"].to_numpy()

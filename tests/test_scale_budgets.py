@@ -115,12 +115,56 @@ def test_dedup_budgets():
 
 
 def test_pin_registry_is_releasable():
-    """The pin registry (session-lifetime persists) holds DataFrame
-    handles, not just hashes — the release path clear_cache() can
-    actually unpersist them (r10; the storage-budget table's 'bytes
-    pinned' row is bounded per query, and total only by queries-per-
-    clear)."""
+    """The leaf registry holds DataFrame handles, and clear_cache()
+    drops them together with the driver-table memo and unpersists the
+    dedup caches (r10; the storage-budget table's 'bytes pinned' row
+    is bounded per query, and total by reachability)."""
     assert isinstance(I._PINNED, dict)
     assert callable(I.clear_cache)
     src = inspect.getsource(I.clear_cache)
     assert "unpersist" in src and "_LOCAL_TBLS" in src
+
+
+# (module path under go_pandas_spark/, qualified function) pairs allowed
+# to store or free a relation themselves; whole modules listed in
+# _STORAGE_MODULES truncate loop or UDF lineage with their own caches.
+_STORAGE_FUNCS = {("_internal.py", "materialize"),
+                  ("_internal.py", "_checkpoint"),  # materialize's miss
+                  ("_internal.py", "clear_cache"),
+                  ("frame.py", "Frame.persist"), ("frame.py", "Frame.cache"),
+                  ("frame.py", "Frame.unpersist")}
+_STORAGE_MODULES = {"operators/dedup.py", "operators/similarity.py",
+                    "streaming/ops.py"}
+
+
+def test_one_materialization_primitive():
+    """Every engine-held materialization goes through
+    ``_internal.materialize``: no ``persist``/``localCheckpoint``/
+    ``unpersist`` call anywhere else in the package, bar the user
+    Frame API, the registry barrier and the iterative modules."""
+    import ast
+    from pathlib import Path
+
+    import go_pandas_spark
+
+    found = []
+
+    def visit(node, rel, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in ("persist", "unpersist",
+                                            "localCheckpoint")
+                    and (rel, scope) not in _STORAGE_FUNCS):
+                found.append(f"{rel}:{child.lineno} {scope}")
+            visit(child, rel, inner)
+
+    root = Path(go_pandas_spark.__file__).parent
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root).as_posix()
+        if rel not in _STORAGE_MODULES:
+            visit(ast.parse(path.read_text()), rel, "")
+    assert not found, found

@@ -1,9 +1,11 @@
-"""Session-storage lifecycle (r10): the engine's three registries —
-pin_order persists, the distwindow driver-table memo, the dedup
-gram/signature caches — must be releasable at a query boundary via
-``go_pandas_spark.clear_cache()``, and the memo must be a bounded LRU
-with NaN-canonical keys. SCALE.md "Session storage budget" documents
-the byte model these tests pin."""
+"""Session-storage lifecycle: the engine's three registries — the
+``materialize`` leaf registry, the distwindow driver-table memo, the
+dedup gram/signature caches — must be releasable via
+``go_pandas_spark.clear_cache()`` at any point, the memo must be a
+bounded LRU with NaN-canonical keys, and a materialized leaf must
+keep a frame chain's plan flat, never serve a rewritten file's old
+rows, and free its blocks once nothing reaches it. SCALE.md "Session
+storage budget" documents the byte model these tests pin."""
 from __future__ import annotations
 
 import math
@@ -23,10 +25,9 @@ def _chained_cumsum_shift(spark, pdf):
 
 
 def test_clear_cache_releases_pins_and_parity_survives(spark):
-    """clear_cache unpersists every pin_order entry and empties the
+    """clear_cache drops every registry entry and empties the
     registries; re-running the same chained blocked query afterwards
-    rebuilds its pins and stays exact (the barrier contract: clear at
-    a query boundary, never mid-plan)."""
+    rebuilds its leaves and stays exact."""
     pdf = pd.DataFrame({"k": np.arange(500.0), "v": np.arange(500.0) * 0.5})
     exp = pdf.sort_values("k").reset_index(drop=True)
     exp_v = exp[["k", "v"]].cumsum().shift(2)
@@ -38,8 +39,6 @@ def test_clear_cache_releases_pins_and_parity_survives(spark):
     dropped = gp.clear_cache()
     assert dropped["pins"] == len(pinned)
     assert not I._PINNED and not dw._LOCAL_TBLS
-    for df in pinned:
-        assert df.storageLevel.useMemory is False  # actually unpersisted
 
     out2 = _chained_cumsum_shift(spark, pdf)
     for out in (out1, out2):
@@ -142,95 +141,35 @@ def test_int64_overflow_cum_wraps_like_pandas(spark):
     assert list(g["s"]) == list(ge)
 
 
-def test_clear_cache_warns_on_live_blocked_frame(spark):
-    """The barrier misuse guard (r11): calling clear_cache while a
-    blocked-output frame is still alive warns (its un-collected plan
-    may reference a pin whose ids would shift); force=True and
-    frames-dropped are both silent."""
-    import warnings
-
-    gp.clear_cache(force=True)
-    pdf = pd.DataFrame({"k": np.arange(300.0), "v": np.arange(300.0)})
-    f = gp.Frame(spark.createDataFrame(pdf).repartition(4)).sort_values("k")
-    live = f.cumsum().shift(1)  # blocked output, never collected
-    with pytest.warns(RuntimeWarning, match="blocked-output frame"):
-        gp.clear_cache()
-    live2 = f.cumsum().shift(1)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        gp.clear_cache(force=True)  # acknowledged -> silent
-    del live, live2
-    f2 = f.cumsum().shift(1)
-    out = f2.to_pandas()  # collected; user still holds f2, warns
-    exp = pdf.sort_values("k")[["k", "v"]].cumsum().shift(1)
-    np.testing.assert_allclose(out["v"], exp["v"], rtol=1e-12)
-    del f2
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        gp.clear_cache()  # no live blocked frames -> silent
-
 
 def test_pinned_lru_bounded_without_barrier(spark, monkeypatch):
-    """_PINNED self-bounds (r11): a DIVERSE no-barrier query stream —
-    each query a distinct plan, its frame dropped after collection —
-    keeps the registry at <= _PINNED_MAX + the in-flight query's own
-    pins (eviction fires at the next query's first pin, once the
-    previous chain's frames are dropped), and the evicted pins are
-    actually released."""
-    gp.clear_cache(force=True)
+    """The registry self-bounds: a DIVERSE no-barrier query stream —
+    each query a distinct plan — keeps it at <= _PINNED_MAX entries
+    whatever frames are alive (eviction only drops the engine's
+    reference), and evicted entries are gone from it."""
+    gp.clear_cache()
     monkeypatch.setattr(I, "_PINNED_MAX", 4)
     pdf = pd.DataFrame({"k": np.arange(200.0), "v": np.arange(200.0)})
     base = gp.Frame(spark.createDataFrame(pdf).repartition(4)) \
         .sort_values("k")
     seen: list = []
+    held = []
     for i in range(7):
         f = (base.assign(v=base["v"] * float(i + 1))
-             .cumsum().shift(1))  # distinct plan per i -> distinct pin
+             .cumsum().shift(1))  # distinct plan per i -> distinct leaf
         f.to_pandas()
-        seen.extend(I._PINNED.values())
-        del f
-        # bounded: cap + this chain's own two pins, never cumulative
-        assert len(I._PINNED) <= I._PINNED_MAX + 2
-    # at least one eviction happened and evicted pins are unpersisted
-    evicted = [df for df in seen if df.semanticHash() not in I._PINNED]
-    assert evicted
-    assert any(df.storageLevel.useMemory is False for df in evicted)
-    gp.clear_cache()
-
-
-def test_pinned_eviction_defers_while_blocked_frame_live(spark,
-                                                         monkeypatch):
-    """Eviction never unpersists a possibly-live pin: while any
-    blocked-output frame is alive the registry may exceed the cap;
-    the next pin after the frames die shrinks it back."""
-    gp.clear_cache(force=True)
-    monkeypatch.setattr(I, "_PINNED_MAX", 2)
-    pdf = pd.DataFrame({"k": np.arange(150.0), "v": np.arange(150.0)})
-    base = gp.Frame(spark.createDataFrame(pdf).repartition(4)) \
-        .sort_values("k")
-    held = []
-    for i in range(4):
-        f = base.assign(v=base["v"] + float(i)).cumsum().shift(1)
-        f.to_pandas()
-        held.append(f)  # keep every blocked frame alive
-    del f  # the loop variable itself also pins liveness
-    peak = len(I._PINNED)
-    assert peak > I._PINNED_MAX  # deferred, not evicted
-    held.clear()
-    trigger = base.assign(v=base["v"] * 101.0).cumsum().shift(1)
-    trigger.to_pandas()
-    del trigger
-    # drained to the documented bound: cap + the trigger's own pins
-    assert len(I._PINNED) <= I._PINNED_MAX + 2 < peak
+        seen.extend(I._PINNED)
+        held.append(f)
+        assert len(I._PINNED) <= I._PINNED_MAX
+    assert [k for k in seen if k not in I._PINNED]  # some were evicted
     gp.clear_cache()
 
 
 def test_rank_keeps_interim_pins_on_unpinned_base(spark):
-    """Frame.rank releases its interim per-column pins only when the
-    base is itself pinned (r11, ADVICE r10): from an unpinned lazy
-    scan the replay could reassign order ids, so the pins stay until
-    the barrier — and parity holds either way."""
-    gp.clear_cache(force=True)
+    """Frame.rank materializes between per-column passes (r10, ADVICE
+    r9): each interim relation is a registered leaf, and parity holds
+    for method='first', whose ties break by order id."""
+    gp.clear_cache()
     rng = np.random.RandomState(3)
     pdf = pd.DataFrame({
         "a": rng.randint(0, 10, 300).astype(float),
@@ -245,14 +184,14 @@ def test_rank_keeps_interim_pins_on_unpinned_base(spark):
     exp = pdf.rank(method="first")
     for c in ("a", "b", "c"):
         np.testing.assert_allclose(out[c], exp[c], rtol=1e-12)
-    assert len(I._PINNED) >= 2  # interim pins retained (K-1 = 2)
-    gp.clear_cache(force=True)
+    assert len(I._PINNED) >= 2  # interim leaves registered (K-1 = 2)
+    gp.clear_cache()
 
 
 def test_warmup_primes_and_releases_only_its_pins(spark):
     """session.warmup (r10): runs every hot kernel family, returns the
-    seconds spent, and releases ONLY the pins it created — a caller's
-    pre-existing pins survive."""
+    seconds spent, and drops ONLY the registry entries it created — a
+    caller's pre-existing entries survive."""
     from go_pandas_spark.session import warmup
 
     f = gp.Frame.from_pandas(spark, pd.DataFrame({"k": np.arange(50.0)}))
@@ -265,81 +204,6 @@ def test_warmup_primes_and_releases_only_its_pins(spark):
     gp.clear_cache()
 
 
-def test_liveness_propagates_through_derivation(spark, monkeypatch):
-    """ADVICE r11 #1: a frame DERIVED from a blocked output (getitem,
-    assign, _copy paths) holds the same un-collected lazy plan — pin
-    eviction must defer while only the derived frame is alive."""
-    gp.clear_cache(force=True)
-    monkeypatch.setattr(I, "_PINNED_MAX", 2)
-    pdf = pd.DataFrame({"k": np.arange(150.0), "v": np.arange(150.0)})
-    base = gp.Frame(spark.createDataFrame(pdf).repartition(4)) \
-        .sort_values("k")
-    derived = []
-    for i in range(4):
-        f = base.assign(v=base["v"] + float(i)).cumsum().shift(1)
-        f.to_pandas()
-        derived.append(f[["v"]].head(50))  # derived, original dropped
-        del f
-    import gc
-
-    gc.collect()
-    # only DERIVED frames are alive; eviction must still defer
-    trigger = base.assign(v=base["v"] * 77.0).cumsum().shift(1)
-    trigger.to_pandas()
-    assert len(I._PINNED) > I._PINNED_MAX  # deferred, not evicted
-    # parity: the derived frames' pending plans still replay correctly
-    for i, d in enumerate(derived):
-        exp = pdf.assign(v=pdf["v"] + float(i)).cumsum().shift(1)[["v"]] \
-            .head(50)
-        np.testing.assert_allclose(d.to_pandas()["v"], exp["v"],
-                                   rtol=1e-12)
-    derived.clear()
-    del trigger, d
-    gp.clear_cache(force=True)
-
-
-def test_eviction_collects_cycle_held_frames(spark, monkeypatch):
-    """ADVICE r11 #2: blocked frames held ONLY by reference cycles
-    must not defer eviction forever — _maybe_evict_pins collects
-    before judging liveness, so the _PINNED_MAX bound is guaranteed
-    even for a no-barrier service."""
-    gp.clear_cache(force=True)
-    monkeypatch.setattr(I, "_PINNED_MAX", 2)
-    # step=1 = gc at every over-cap pin: this test pins the COLLECTION
-    # behavior; the production step (8) is a rate-limit perf knob whose
-    # bound (_PINNED_MAX + _GC_STEP + in-flight) the docstring carries
-    monkeypatch.setattr(I, "_GC_STEP", 1)
-    monkeypatch.setattr(I, "_GC_AT", 0)
-    pdf = pd.DataFrame({"k": np.arange(120.0), "v": np.arange(120.0)})
-    base = gp.Frame(spark.createDataFrame(pdf).repartition(4)) \
-        .sort_values("k")
-    for i in range(4):
-        f = base.assign(v=base["v"] + float(i)).cumsum().shift(1)
-        f.to_pandas()
-        f._cycle = f  # frame held by a reference cycle
-        del f  # name dropped; only the cycle keeps it alive
-    trigger = base.assign(v=base["v"] * 55.0).cumsum().shift(1)
-    trigger.to_pandas()
-    del trigger
-    # the trigger pin fired eviction past the cap: gc broke the
-    # cycles, so the registry drained to cap + in-flight pins
-    assert len(I._PINNED) <= I._PINNED_MAX + 2
-    gp.clear_cache(force=True)
-
-
-def test_gc_watermark_resets_under_cap_and_on_clear(spark, monkeypatch):
-    """ADVICE r12 #4: a stale high _GC_AT after clear_cache (or after
-    the registry drains under the cap) must not defer the next
-    cycle-collecting gc until the registry regrows past it."""
-    gp.clear_cache(force=True)
-    monkeypatch.setattr(I, "_GC_AT", 99)
-    # drained registry + under-cap call -> watermark resets
-    I._maybe_evict_pins()
-    assert I._GC_AT == 0
-    monkeypatch.setattr(I, "_GC_AT", 77)
-    gp.clear_cache(force=True)
-    assert I._GC_AT == 0
-
 
 def test_first_valid_refs_raises_without_anchor(spark):
     """ADVICE r12 #5: the deterministic-sample contract must hold
@@ -348,3 +212,148 @@ def test_first_valid_refs_raises_without_anchor(spark):
     assert I.ORDER_COL not in sdf.columns
     with pytest.raises(RuntimeError, match="ORDER_COL"):
         dw.first_valid_refs(sdf, ["x"])
+
+
+def _chain(g, n: int):
+    """n alternating cumsum/shift(1) calls on a Frame or a pandas
+    DataFrame (on a Frame every call after the first consumes a
+    blocked output, so each one materializes its input)."""
+    for i in range(n):
+        g = g.cumsum() if i % 2 == 0 else g.shift(1)
+    return g
+
+
+def test_frame_chain_plan_stays_flat(spark):
+    """A 20-call frame-API chain matches pandas, and its optimized
+    plan string stays O(1) in chain length with no cached-plan node:
+    each call's input is a lineage-truncated leaf, never a persisted
+    plan nested inside the previous one (whose printed form doubled
+    per call)."""
+    gp.clear_cache()
+    rng = np.random.RandomState(20)
+    pdf = pd.DataFrame({"k": np.arange(800.0), "v": rng.normal(0, 1, 800)})
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
+    sizes = []
+    g = f[["v"]]
+    for n in range(20):
+        g = g.cumsum() if n % 2 == 0 else g.shift(1)
+        plan = g._sdf._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan
+        sizes.append(len(plan))
+    assert max(sizes[2:]) <= 2 * min(sizes[2:]), sizes
+    exp = _chain(pdf[["v"]], 20)
+    np.testing.assert_allclose(g.to_pandas()["v"], exp["v"], rtol=1e-9)
+    gp.clear_cache()
+
+
+def test_dropped_registry_never_breaks_pending_frames(spark, monkeypatch):
+    """Registry entries are references, not owners: with every entry
+    dropped the moment it is made, and clear_cache() called while
+    un-collected chained frames (and frames derived from them) are
+    alive, each one still collects exactly, and no warning is
+    raised."""
+    import warnings
+
+    gp.clear_cache()
+    monkeypatch.setattr(I, "_PINNED_MAX", 0)
+    rng = np.random.RandomState(21)
+    pdf = pd.DataFrame({"k": np.arange(600.0), "v": rng.normal(0, 1, 600)})
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
+    chained = f[["v"]].cumsum().shift(2).cumsum()
+    derived = chained[chained["v"] > 0.0][["v"]]
+    series_anchor = f.assign(c=f["v"].cumsum(), s=f["v"].shift(3))
+    assert not I._PINNED
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        gp.clear_cache()
+    exp = pdf[["v"]].cumsum().shift(2).cumsum()
+    np.testing.assert_allclose(chained.to_pandas()["v"], exp["v"], rtol=1e-9)
+    np.testing.assert_allclose(derived.to_pandas()["v"],
+                               exp["v"][exp["v"] > 0.0], rtol=1e-9)
+    got = series_anchor.to_pandas()
+    np.testing.assert_allclose(got["c"], pdf["v"].cumsum(), rtol=1e-9)
+    np.testing.assert_allclose(got["s"], pdf["v"].shift(3), rtol=1e-9)
+
+    # the 4-row grouped-rank anchor: a base frame outliving its Series
+    # op leaves nothing that makes the barrier complain
+    f4 = gp.Frame.from_pandas(spark, pd.DataFrame(
+        {"k": ["a", "a", "b", "b"], "v": [1.0, 2.0, 2.0, 5.0]}))
+    out = f4.assign(r=f4.groupby("k")["v"].rank()).to_pandas()
+    assert list(out["r"]) == [1.0, 2.0, 1.0, 2.0]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        gp.clear_cache()
+
+
+def test_registry_hit_rebinds_to_caller_attributes(spark):
+    """A rebuilt query hits the registry under other expression ids and
+    other internal alias names (each Series op names its anchor column
+    afresh), and the leaf it gets back answers to the caller's own
+    names and resolved Columns — while adding no entry."""
+    gp.clear_cache()
+    rng = np.random.RandomState(22)
+    pdf = pd.DataFrame({"k": np.arange(700.0), "v": rng.normal(0, 1, 700)})
+    src = spark.createDataFrame(pdf).repartition(16)
+    sizes = []
+    for _ in range(2):
+        f = gp.Frame(src).sort_values("k")
+        got = f.assign(c=f["v"].cumsum(), r=f["v"].rolling(5).sum(),
+                       s=f["v"].shift(2)).to_pandas()
+        np.testing.assert_allclose(got["c"], pdf["v"].cumsum(), rtol=1e-9)
+        np.testing.assert_allclose(got["r"], pdf["v"].rolling(5).sum(),
+                                   rtol=1e-9)
+        np.testing.assert_allclose(got["s"], pdf["v"].shift(2), rtol=1e-12)
+        sizes.append(len(I._PINNED))
+    assert sizes[1] == sizes[0] > 0
+    gp.clear_cache()
+
+
+def test_rewritten_parquet_input_is_fresh(spark, tmp_path):
+    """A leaf is never served for a rewritten input: the registry key
+    carries each file scan's listing (path, length and modification
+    time of every file), which a rewrite changes. Keyed on the
+    semantic plan alone, the second cumagg would return the first
+    file's running sums."""
+    gp.clear_cache()
+    path = str(tmp_path / "cum.parquet")
+    for seed in (31, 32):
+        rng = np.random.RandomState(seed)
+        pdf = pd.DataFrame({"k": np.arange(500), "v": rng.normal(0, 1, 500)})
+        gp.to_parquet(gp.Frame.from_pandas(spark, pdf), path)
+        f = gp.read_parquet(spark, path).repartition(16).sort_values("k")
+        got = f.cumagg({"cs": ("v", "sum"), "cm": ("v", "max")}).to_pandas()
+        np.testing.assert_allclose(got["cs"], pdf["v"].cumsum(), rtol=1e-9)
+        np.testing.assert_allclose(got["cm"], pdf["v"].cummax(), rtol=1e-12)
+    gp.clear_cache()
+
+
+def test_dropped_leaves_leave_block_storage(spark):
+    """A leaf's blocks live exactly as long as something reaches it:
+    stored while its frames are alive, gone from the block manager
+    once the frames are dropped and clear_cache() drops the registry's
+    references (Spark's ContextCleaner frees an unreachable RDD after
+    a JVM collection; polled, as the cleaner runs asynchronously)."""
+    import gc
+    import time
+
+    gp.clear_cache()
+    sc = spark.sparkContext._jsc.sc()
+    pdf = pd.DataFrame({"k": np.arange(400.0), "v": np.arange(400.0)})
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
+    g = _chain(f[["v"]], 4)
+    g.to_pandas()
+    rdd_ids = {df._jdf.queryExecution().analyzed().rdd().id()
+               for df in I._PINNED.values()}
+    assert len(rdd_ids) >= 3
+    assert rdd_ids <= {i.id() for i in sc.getRDDStorageInfo()}
+    del f, g
+    gp.clear_cache()
+    deadline = time.time() + 10
+    while True:
+        gc.collect()
+        spark._jvm.System.gc()
+        left = rdd_ids & {i.id() for i in sc.getRDDStorageInfo()}
+        if not left or time.time() > deadline:
+            break
+        time.sleep(0.5)
+    assert not left
