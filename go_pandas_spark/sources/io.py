@@ -78,28 +78,59 @@ def _ensure_session_confs(spark: SparkSession) -> None:
             pass
 
 
-# LAZY-PLAN memo for read_parquet, keyed by (session, path, mtime):
-# repeated reads of the same file reuse the already-built logical plan
-# (footer/schema listing + ns-truncation projection) instead of paying
-# ~4-6 driver round-trips per read. This caches NO data and NO results
-# — every action over the returned Frame re-scans the parquet files
-# through the normal FileScan (Spark's own per-session file-listing
-# cache sits below this anyway, guide §6); the mtime key drops the
-# entry when the file changes. Bounded FIFO.
+def table_stamp(path: str, children: dict | None = None):
+    """Data stamp of a file or directory tree: (file count, max mtime,
+    total bytes) over every file and directory under ``path``, or None
+    when it cannot be read. The whole tree is walked: rewriting a
+    part-file in place leaves its directory's mtime unchanged.
+    ``children``, if given, receives the stamp of each top-level entry
+    of a directory, keyed by path; they fold (counts and bytes summed,
+    mtimes maxed with the directory's own) into the directory's stamp,
+    so a caller can later re-stamp one entry alone."""
+    import os
+    import stat
+
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (1, st.st_mtime, st.st_size)
+        n, mt, sz = 0, st.st_mtime, 0
+        with os.scandir(path) as it:
+            for e in it:
+                s = table_stamp(e.path)
+                if s is None:
+                    return None
+                if children is not None:
+                    children[e.path] = s
+                n, mt, sz = n + s[0], max(mt, s[1]), sz + s[2]
+        return (n, mt, sz)
+    except (OSError, RecursionError):  # unreadable, or a symlink cycle
+        return None
+
+
+# LAZY-PLAN memo for read_parquet: one entry per (session, path)
+# holding (table_stamp, plan). Repeated reads of an unchanged table
+# reuse the already-built logical plan (file listing + footer schema +
+# ns-truncation projection) instead of paying ~4-6 driver round-trips
+# per read. This caches NO data and NO results: every action over the
+# returned Frame re-scans the parquet files through the normal
+# FileScan. The plan's file index holds the listing taken when it was
+# built (paths, lengths), so the entry is only served while the tree's
+# stamp is unchanged; a rewrite (even in place, same file name) builds
+# a fresh plan that replaces the stale entry. The stamp is taken BEFORE
+# the build, so a file changed while listing misses next time. Bounded
+# FIFO.
 _PLAN_MEMO: dict = {}
 
 
 def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = None) -> Frame:
-    import os
-
     _ensure_session_confs(spark)
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = None
-    key = (_session_token(spark), path, mtime)
-    sdf = _PLAN_MEMO.get(key) if mtime is not None else None
-    if sdf is None:
+    stamp = table_stamp(path)
+    key = (_session_token(spark), path)
+    hit = _PLAN_MEMO.get(key)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        sdf = hit[1]
+    else:
         sdf = spark.read.parquet(path)
         # datetime64[ns] columns land as long (nanosAsLong) — truncate to µs
         # timestamps (the reference's ns precision is a deliberate delta,
@@ -117,10 +148,11 @@ def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = Non
                     # double's 53-bit mantissa and float division is off by ±1µs
                     sdf = sdf.withColumn(
                         f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000")))
-        if mtime is not None:
+        _PLAN_MEMO.pop(key, None)
+        if stamp is not None:
             while len(_PLAN_MEMO) >= 32:
                 _PLAN_MEMO.pop(next(iter(_PLAN_MEMO)))
-            _PLAN_MEMO[key] = sdf
+            _PLAN_MEMO[key] = (stamp, sdf)
     if columns:
         sdf = sdf.select(*columns)  # pruned into the parquet scan by Catalyst
     # NOTE: single-row-group files scan as ONE task; we deliberately do

@@ -20,50 +20,95 @@ from pyspark.sql import DataFrame, SparkSession
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-# Logical-PLAN memo for METADATA-ONLY query builds (r14, VERDICT r13
-# #6 — "memoize the unresolved logical plan per query shape (plan
-# object, never results)"). Re-building a join-heavy query like q5
-# costs ~1 s of pure driver py4j/Catalyst work per run with a plan
-# byte-identical to the last build. The memo returns the SAME lazy
-# DataFrame object for the same (session, query, data stamp); every
-# action over it still plans, scans and computes from the parquet
-# inputs through the normal FileScan — nothing about the DATA is
-# cached here.
+# Logical-PLAN memo for METADATA-ONLY query builds. Re-building a
+# join-heavy query like q5 costs ~1 s of pure driver py4j/Catalyst work
+# with a plan byte-identical to the last build, so the memo returns the
+# SAME lazy DataFrame object while the tables it reads are unchanged.
+# Every action over it still plans, scans and computes from the parquet
+# inputs through the normal FileScan: nothing about the DATA is cached.
 #
-# The guard that keeps this strictly plan-only: a build is memoized
-# ONLY if it launched ZERO Spark jobs (DAGScheduler's job counter,
-# read before/after). Every way a build can embed data-derived state
-# (collect/first/count for carries, split bounds, probes, persists)
-# launches a job, so those queries are never memoized and re-derive
-# their literals every run; schema/footer reads are metadata and
-# launch none. The stamp (file count + max mtime of the sf dir)
-# invalidates on data change, the session token (sources/io.py) on
-# session change.
+# Only a build that launched ZERO Spark jobs (DAGScheduler's job
+# counter, read before and after) is stored. Every way a build can
+# embed data-derived state (collect/first/count for carries, split
+# bounds, probes) launches a job, so those queries re-derive their
+# literals every run. So does Spark's parquet schema inference on a
+# table's first read: that build is not stored, and the next one,
+# which reuses read_parquet's memoized plan, is.
+#
+# Invalidation is scoped to the tables a plan reads. One entry per
+# (session token, query, sf_dir) holds (df, {path: table_stamp}): the
+# paths are the top-level sf_dir entries holding the root of every file
+# scan among the analyzed plan's leaves (subqueries included), and the
+# stamps come from one walk of sf_dir taken BEFORE the build, so a file
+# changed during the build misses next time. A lookup re-stamps only
+# those paths, so rewriting ``events`` keeps q1's plan (it reads only
+# ``lineitem``). A plan that names no file root, has a leaf whose input
+# it cannot name (a ``materialize`` LogicalRDD, a LocalRelation) or a
+# root outside sf_dir depends on {sf_dir: stamp of the whole tree}. A
+# stale entry is replaced, never kept beside the new one: it holds the
+# executed plan's shuffle files reachable.
 _QUERY_PLAN_MEMO: dict = {}
 _QUERY_PLAN_MEMO_MAX = 512
+# last memo decision per query name (memo_decisions())
+_MEMO_DECISIONS: dict[str, str] = {}
+# leaves that read nothing: their output is a pure function of the plan
+_PURE_LEAVES = frozenset({"Range", "OneRowRelation"})
 
 
-def _sf_stamp(sf_dir: str):
-    # Full recursive walk (file count, max mtime, total bytes): a
-    # top-level listing alone misses in-place rewrites of part-files
-    # nested inside table DIRECTORIES (the parent dir's mtime does not
-    # change), which would let the memo serve a plan whose scan
-    # captured a stale file listing. The walk is a handful of stat
-    # calls per build — noise next to one Catalyst analysis.
+def memo_decisions() -> dict[str, str]:
+    """The last plan-memo decision of each suite query that ran: "hit",
+    "miss:new", "miss:stale <path>" (the path whose stamp changed),
+    "skip:<n> jobs" (the build launched jobs, so it is not stored) or
+    "skip:no stamp" (sf_dir or the job counter could not be read)."""
+    return dict(_MEMO_DECISIONS)
+
+
+def _scan_roots(df: DataFrame):
+    """Local paths of every file-scan root among the analyzed plan's
+    leaves and its subqueries' leaves, or None if some leaf's input
+    cannot be named (anything but a file-backed LogicalRelation or a
+    leaf that reads nothing)."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        subs = plan.subqueriesAll()
+        roots = []
+        for p in [plan] + [subs.apply(i) for i in range(subs.size())]:
+            leaves = p.collectLeaves()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                kind = leaf.getClass().getSimpleName()
+                if kind in _PURE_LEAVES:
+                    continue
+                if kind != "LogicalRelation":
+                    return None
+                paths = leaf.relation().location().rootPaths()
+                for j in range(paths.size()):
+                    uri = paths.apply(j).toUri()
+                    if uri.getScheme() not in (None, "file"):
+                        return None
+                    roots.append(uri.getPath())
+        return roots
+    except Exception:  # noqa: BLE001 — not a file relation: unnamed input
+        return None
+
+
+def _plan_deps(df: DataFrame, sf_dir: str, tables: dict):
+    """{top-level sf_dir entry: its pre-build stamp} for every table the
+    plan scans, or None when the plan must depend on the whole sf_dir."""
     import os
 
-    try:
-        n, mt, sz = 0, os.path.getmtime(sf_dir), 0
-        for root, _dirs, files in os.walk(sf_dir):
-            mt = max(mt, os.path.getmtime(root))
-            for f in files:
-                st = os.stat(os.path.join(root, f))
-                n += 1
-                mt = max(mt, st.st_mtime)
-                sz += st.st_size
-        return (n, mt, sz)
-    except OSError:
+    roots = _scan_roots(df)
+    if not roots:
         return None
+    base = os.path.abspath(sf_dir)
+    deps = {}
+    for r in roots:
+        top = os.path.relpath(os.path.normpath(r), base).split(os.sep)[0]
+        path = os.path.join(sf_dir, top)
+        if top in (os.curdir, os.pardir) or path not in tables:
+            return None
+        deps[path] = tables[path]
+    return deps
 
 
 def _memoized_query(name: str, fn):
@@ -71,28 +116,39 @@ def _memoized_query(name: str, fn):
 
     @functools.wraps(fn)
     def run(spark, sf_dir):
-        from ..sources.io import _session_token
+        from ..sources.io import _session_token, table_stamp
 
-        stamp = _sf_stamp(sf_dir)
-        key = (_session_token(spark), name, sf_dir, stamp)
-        if stamp is not None:
-            df = _QUERY_PLAN_MEMO.get(key)
-            if df is not None:
+        key = (_session_token(spark), name, sf_dir)
+        entry = _QUERY_PLAN_MEMO.get(key)
+        why = "miss:new"
+        if entry is not None:
+            df, deps = entry
+            why = next((f"miss:stale {p}" for p, s in deps.items()
+                        if table_stamp(p) != s), None)
+            if why is None:
+                _MEMO_DECISIONS[name] = "hit"
                 return df
+            del _QUERY_PLAN_MEMO[key]
+        tables: dict = {}
+        stamp = table_stamp(sf_dir, tables)
         try:  # jobs-submitted counter (private API; None = never memo)
-            sc = spark.sparkContext._jsc.sc()
-            jobs0 = sc.dagScheduler().nextJobId()
+            sched = spark.sparkContext._jsc.sc().dagScheduler()
+            jobs0 = sched.nextJobId()
         except Exception:  # noqa: BLE001
-            sc, jobs0 = None, None
+            sched, jobs0 = None, None
         df = fn(spark, sf_dir)
-        if stamp is not None and jobs0 is not None:
-            try:
-                if sc.dagScheduler().nextJobId() == jobs0:
-                    while len(_QUERY_PLAN_MEMO) >= _QUERY_PLAN_MEMO_MAX:
-                        _QUERY_PLAN_MEMO.pop(next(iter(_QUERY_PLAN_MEMO)))
-                    _QUERY_PLAN_MEMO[key] = df
-            except Exception:  # noqa: BLE001
-                pass
+        if stamp is None or jobs0 is None:
+            _MEMO_DECISIONS[name] = "skip:no stamp"
+            return df
+        jobs = sched.nextJobId() - jobs0
+        if jobs:
+            _MEMO_DECISIONS[name] = f"skip:{jobs} jobs"
+            return df
+        deps = _plan_deps(df, sf_dir, tables) or {sf_dir: stamp}
+        while len(_QUERY_PLAN_MEMO) >= _QUERY_PLAN_MEMO_MAX:
+            _QUERY_PLAN_MEMO.pop(next(iter(_QUERY_PLAN_MEMO)))
+        _QUERY_PLAN_MEMO[key] = (df, deps)
+        _MEMO_DECISIONS[name] = why
         return df
 
     run._gps_inner = fn  # tests / introspection reach the raw builder

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Per-query profiling for the optimization rounds: warm time, number
-of Spark jobs, number of stages/tasks, and shuffle exchange count in
-the final plan.
+of Spark jobs, number of stages/tasks, shuffle exchange count in the
+final plan, and the suite plan memo's decision for the timed build
+(``suite.memo_decisions()``: hit, miss, or skip and why).
 
 Usage: python scripts/profile_queries.py [sf_dir] [name_filter...]
 """
@@ -15,7 +16,7 @@ import time
 sys.path.insert(0, ".")
 
 from go_pandas_spark import get_spark  # noqa: E402
-from go_pandas_spark.suite import QUERIES, register_all  # noqa: E402
+from go_pandas_spark.suite import QUERIES, memo_decisions, register_all  # noqa: E402
 
 
 def main() -> int:
@@ -42,6 +43,7 @@ def main() -> int:
         t0 = time.time()
         df = fn(spark, sf_dir)
         t_plan = time.time() - t0
+        memo = memo_decisions().get(name)
         df.count()
         wall = time.time() - t0
         jobs = tracker.getJobIdsForGroup(f"prof_{name}")
@@ -68,10 +70,11 @@ def main() -> int:
                      "jobs": len(jobs), "stages": n_stages,
                      "tasks": n_tasks,
                      "exchange": n_exch - n_reuse, "reused_exchange": n_reuse,
-                     "python_nodes": n_py}
+                     "python_nodes": n_py, "memo": memo}
         sys.stderr.write(f"{name}: {wall:.2f}s plan={t_plan:.2f}s "
                          f"jobs={len(jobs)} stages={n_stages} tasks={n_tasks} "
-                         f"exch={n_exch - n_reuse}+{n_reuse}r py={n_py}\n")
+                         f"exch={n_exch - n_reuse}+{n_reuse}r py={n_py} "
+                         f"memo={memo}\n")
     print(json.dumps(out, indent=1, sort_keys=True))
     return 0
 

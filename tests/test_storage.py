@@ -327,6 +327,23 @@ def test_rewritten_parquet_input_is_fresh(spark, tmp_path):
     gp.clear_cache()
 
 
+def test_read_parquet_in_place_rewrite_is_fresh(spark, tmp_path):
+    """``read_parquet``'s plan memo is keyed on the table's stamp (file
+    count, max mtime, bytes over the tree), not the directory's mtime:
+    rewriting a part-file in place under the same name leaves the
+    directory's mtime unchanged, and the memoized plan's file index
+    would still read the old file length."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"v": np.arange(10)}), d / "part-0.parquet")
+    assert gp.read_parquet(spark, str(d)).to_pandas()["v"].sum() == 45
+    pq.write_table(pa.table({"v": np.arange(1000)}), d / "part-0.parquet")
+    assert gp.read_parquet(spark, str(d)).to_pandas()["v"].sum() == 499500
+
+
 def test_dropped_leaves_leave_block_storage(spark):
     """A leaf's blocks live exactly as long as something reaches it:
     stored while its frames are alive, gone from the block manager
