@@ -62,7 +62,7 @@ def fillna(frame, value=None, method: str | None = None, subset=None, limit: int
             # row number of the picked observation — a blocked running
             # count plus a second picked marker column, still never one
             # task (pre-r7 this variant kept the single-window plan).
-            from .distwindow import (_pin_if_order, collect_sid_stats,
+            from .distwindow import (_pin_if_order, collect_sid_layout,
                                      consume_chained, dense_row_number,
                                      mark_blocked_output,
                                      running_pick_blocked)
@@ -75,7 +75,7 @@ def fillna(frame, value=None, method: str | None = None, subset=None, limit: int
             # ONE layout stats job shared by the row-number and block
             # kernels (r13 — they ran the identical groupBy(sid) twice);
             # None → known non-contiguous, both take their fallbacks
-            stats = (collect_sid_stats(sdf, F.col(I.ORDER_COL))
+            stats = (collect_sid_layout(sdf, F.col(I.ORDER_COL))[0]
                      if limit is not None else None)
             if limit is not None:
                 # global dense row number: pure partition metadata on
@@ -221,7 +221,7 @@ def interpolate(frame, method: str = "linear", subset=None, partition_by: list[s
         # task pre-r7: the prev/next value+position picks are exactly
         # the blocked running-pick kernel, the dense row number is a
         # blocked running count — never one task
-        from .distwindow import (_pin_if_order, collect_sid_stats,
+        from .distwindow import (_pin_if_order, collect_sid_layout,
                                  consume_chained, dense_row_number,
                                  mark_blocked_output, running_pick_blocked)
 
@@ -231,7 +231,7 @@ def interpolate(frame, method: str = "linear", subset=None, partition_by: list[s
         # ONE layout stats job shared by the row-number and block
         # kernels (r13 — they ran the identical groupBy(sid) twice)
         base0 = _pin_if_order(consume_chained(frame), F.col(I.ORDER_COL))
-        stats = collect_sid_stats(base0, F.col(I.ORDER_COL))
+        stats = collect_sid_layout(base0, F.col(I.ORDER_COL))[0]
         # global dense row number: pure partition metadata on the
         # monotonic-id fast path (r13) — no blocked running-count pass
         sdf = dense_row_number(base0, F.col(I.ORDER_COL), ri_col,

@@ -177,20 +177,28 @@ _MODULES = ["tpch", "tpch2", "relational", "aggregation", "windows", "reshape", 
 # The driver hash-verifies the FIRST 50 entries of queries() each
 # round. Contract: the window leads with every query whose engine path
 # the round changed, then the stalest driver evidence. Current window:
-# every query whose blocked kernels materialize through
-# ``_internal.materialize`` (lineage-truncated leaves instead of
-# persisted pins), then the rows whose last recorded verification is
-# oldest (r11, then r12).
+# every query whose plan holds a blocked kernel's driver-built tables
+# (block ids, positions, carries, offsets, borrow tables, all attached
+# through ``distwindow._attach_table``), then the rows whose last
+# recorded verification is oldest (r10, then r11).
 _VERIFY_FIRST = [
-    # materialized leaves (this round's path)
+    # blocked kernels' table attach (this round's path)
     "cumulative_ungrouped_global", "series_rolling_expression",
     "expanding_moments_global", "ffill_global_limit",
-    "merge_asof_global_noby", "corr_spearman", "rank_methods",
-    "rolling_ungrouped_global", "expanding_median_approx_global",
+    "merge_asof_global_noby", "rolling_ungrouped_global",
+    "expanding_median_approx_global", "expanding_median_approx_grouped",
     "ewm_var_noadjust_global", "ewm_cov_corr_global",
-    "interpolate_global_linear",
-    # last verified r11
-    "q14_promo_revenue", "q18_large_volume_customers",
+    "interpolate_global_linear", "resample_upsample_ffill",
+    "merge_ordered_ffill", "pack_sequences_chunked", "frame_pct_change",
+    # last verified r10
+    "rowwise_udf_integrate", "frame_take_positions",
+    "series_factorize_codes", "series_duplicated_flags",
+    "frame_reindex_labels", "frame_update_overwrite",
+    "frame_align_outer", "temperature_sample_mix",
+    "shuffle_shards_deterministic", "assign_train_splits",
+    "vocab_top100", "quantize_embeddings_int8",
+    # last verified r11 (the list is exactly the 50-query window)
+    "rank_methods", "q14_promo_revenue", "q18_large_volume_customers",
     "q2_min_cost_supplier", "q7_volume_shipping",
     "q12_late_shipment_priority", "q17_small_quantity_revenue",
     "filter_isin_project", "concat_union_dedup", "set_ops_index",
@@ -198,19 +206,7 @@ _VERIFY_FIRST = [
     "value_counts_normalized", "rolling_median_quantile",
     "expanding_stats", "rolling_cov_corr", "pivot_table_margins",
     "get_dummies_onehot", "qcut_quartiles", "ffill_with_limit",
-    "replace_values", "interpolate_time_weighted", "dedup_ngram_jaccard",
-    "similarity_cosine_topk", "training_data_pipeline",
-    "pii_scrub_redact", "temperature_mixture_weights",
-    "sample_stratified_deterministic", "rolling_weighted_triang",
-    "explode_tokens", "range_interval_join", "ngram_bigram_top50",
-    # last verified r12
-    "q6_forecast_revenue", "q_priority_order_counts", "q8_market_share",
-    "q9_product_profit", "q11_revenue_concentration",
-    "q13_customer_distribution", "q15_top_supplier",
-    "q16_supplier_part_counts", "q19_disjunctive_revenue",
-    "q20_part_volume_suppliers", "q21_last_to_ship", "q22_idle_customers",
-    "merge_inner_multikey", "merge_left_nulls", "merge_outer_indicator",
-    "join_semi_anti",
+    "replace_values", "interpolate_time_weighted",
 ]
 
 

@@ -329,28 +329,105 @@ def test_ungrouped_ewm_plan_is_blocked(spark):
 
 
 def test_rolling_joined_at_high_partition_count(spark):
-    """Above _LIT_MAX source partitions the monotonic fast path must
-    switch to the broadcast-join block table (plan size independent of
-    P) and still produce exactly the single-window answer."""
+    """At a high source-partition count the monotonic layout's block
+    table (start + count per block) exceeds the one literal rule and
+    must ride a broadcast join (plan size independent of P), still
+    producing exactly the single-window answer."""
     from pyspark.sql import functions as F
 
-    from go_pandas_spark.operators.distwindow import _LIT_MAX, rolling_blocked
+    from go_pandas_spark.operators.distwindow import (_ATTACH_LIT_SLOTS,
+                                                      rolling_blocked)
 
-    sdf = (spark.range(0, 4000).repartition(100)
+    sdf = (spark.range(0, 12000).repartition(300)
            .withColumn(I.ORDER_COL, F.monotonically_increasing_id())
            .withColumn("x", (F.col("id") * 7 % 13).cast("double")))
-    assert 100 > _LIT_MAX
+    assert 300 * 2 > _ATTACH_LIT_SLOTS
 
     def build(w):
         return [("r", F.sum("x").over(w))]
 
     out = rolling_blocked(sdf, F.col(I.ORDER_COL), -2, 0, build,
                           monotonic_id=True)
-    assert "__bcnt__" in out._jdf.queryExecution().toString(), \
-        "large-P rolling did not take the join path"
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, \
+        "large-P rolling did not broadcast its block table"
     got = out.orderBy(I.ORDER_COL).select("x", "r").toPandas()
     exp = got["x"].rolling(3, min_periods=1).sum()
     assert np.allclose(got["r"].to_numpy(), exp.to_numpy())
+
+
+def test_bounds_search_matches_bisect(spark):
+    """``_attach_block``'s one bounds search (the binary search over
+    the attached bounds array) equals Python ``bisect`` at 1-64 bounds
+    — the range a literal comparison chain used to serve — and past the
+    literal rule: ties, NaN, null and ±inf keys, ascending and
+    descending (the rank layout), int and double bounds."""
+    import bisect
+    import math
+
+    from go_pandas_spark.operators import distwindow as dw
+
+    rng = np.random.RandomState(7)
+    keys = [float(v) for v in rng.randint(-50, 50, 400)]
+    keys += [float("nan"), float("inf"), float("-inf"), None, -0.0]
+    sdf = spark.createDataFrame([(i, k) for i, k in enumerate(keys)],
+                                "i long, k double").repartition(16)
+    cases = []
+    for n in (1, 2, 3, 7, 8, 31, 64, 200):
+        pts = sorted(set(int(v) for v in rng.randint(-60, 60, n)))
+        bounds = pts if n % 2 else [float(b) for b in pts]
+        for desc in (False, True):
+            cases.append((f"b{n}_{int(desc)}", bounds, desc))
+    out = sdf
+    for name, bounds, desc in cases:
+        out = (dw._attach_block(out, F.col("k"), bounds, null_block=99,
+                                descending=desc)
+               .withColumnRenamed(dw.BLK, name))
+    for r in out.collect():
+        k = r["k"]
+        for name, bounds, desc in cases:
+            if k is None:
+                exp = 99
+            elif math.isnan(k):  # NaN orders above every bound
+                exp = 0 if desc else len(bounds)
+            elif desc:
+                exp = len(bounds) - bisect.bisect_right(bounds, k)
+            else:
+                exp = bisect.bisect_left(bounds, k)
+            assert r[name] == exp, (name, k, r[name], exp)
+
+
+def test_rolling_engine_id_reach_wider_than_blocks(spark):
+    """Rolling on the engine id over 100 skewed source partitions with
+    a window reach wider than some blocks: the one sid layout borrows
+    through the interval table (a row reaches several blocks) and
+    matches pandas in both directions."""
+    from go_pandas_spark.operators.distwindow import rolling_blocked
+
+    rng = np.random.RandomState(29)
+    grp = (rng.zipf(1.6, 3000) % 400).astype("int64")
+    sdf = (spark.createDataFrame(pd.DataFrame({
+        "g": grp, "x": rng.normal(0, 3, 3000)}))
+        .repartition(100, "g")
+        .withColumn(I.ORDER_COL, F.monotonically_increasing_id()))
+
+    def build(w):
+        return [("r", F.sum("x").over(w)), ("c", F.count("x").over(w))]
+
+    out = rolling_blocked(sdf, F.col(I.ORDER_COL), -40, 0, build,
+                          monotonic_id=True)
+    got = out.orderBy(I.ORDER_COL).toPandas()
+    assert len(got) == 3000
+    exp = got["x"].rolling(41, min_periods=1)
+    assert np.allclose(got["r"], exp.sum(), rtol=1e-9)
+    assert np.array_equal(got["c"], exp.count())
+
+    out = rolling_blocked(sdf, F.col(I.ORDER_COL), -3, 25, build,
+                          monotonic_id=True)
+    got = out.orderBy(I.ORDER_COL).toPandas()
+    xs = got["x"].to_numpy()
+    expv = [xs[max(0, i - 3):i + 26].sum() for i in range(len(xs))]
+    assert np.allclose(got["r"], expv, rtol=1e-9)
 
 
 def test_rolling_joined_lead_window_high_partition_count(spark):
@@ -1590,8 +1667,8 @@ def test_grouped_expanding_quantile_approx(spark):
 
 def test_rolling_value_layout_uncapped_table_mode(spark):
     """r9: rolling's value-derived layout (the monotonic fallback after
-    a filter leaves id gaps) rides broadcast block tables above
-    _LIT_MAX blocks — parity vs pandas at 300 blocks, including the
+    a filter leaves id gaps) rides broadcast block tables above the
+    literal rule — parity vs pandas at 300 blocks, including the
     boundary borrow in both directions (center=True) and the skewed
     interval path."""
     from go_pandas_spark.operators import distwindow as dw
@@ -1634,7 +1711,7 @@ def test_rolling_value_layout_uncapped_table_mode(spark):
 
 
 def test_rolling_time_layout_uncapped_table_mode(spark):
-    """r9: TIME-based rolling above _LIT_MAX blocks — the destination
+    """r9: TIME-based rolling at 300 blocks — the destination
     threshold table ships as one broadcast data array."""
     rng = np.random.RandomState(42)
     n = 6_000
@@ -1953,12 +2030,12 @@ def test_literal_carry_array_special_values(spark):
     the driver, so a lossy literal would silently corrupt carries)."""
     import math
 
-    from go_pandas_spark.operators.distwindow import _lit_carry_array
+    from go_pandas_spark.operators.distwindow import _lit_array
 
     vals = [None, float("nan"), float("inf"), float("-inf"), -0.0, 0.0,
             1.7976931348623157e308, 5e-324, 123.456, -1.1]
     got = spark.range(1).select(
-        _lit_carry_array(vals, "double").alias("a")).first()["a"]
+        _lit_array(vals, "double").alias("a")).first()["a"]
     assert got[0] is None
     assert math.isnan(got[1])
     assert got[2] == float("inf") and got[3] == float("-inf")
@@ -1969,14 +2046,14 @@ def test_literal_carry_array_special_values(spark):
 
     ints = [None, -(2 ** 63), 2 ** 63 - 1, 0, 42]
     got = spark.range(1).select(
-        _lit_carry_array(ints, "bigint").alias("a")).first()["a"]
+        _lit_array(ints, "bigint").alias("a")).first()["a"]
     assert got[0] is None and got[1] == -(2 ** 63)
     assert got[2] == 2 ** 63 - 1 and got[3] == 0 and got[4] == 42
 
 
 def test_carry_literal_and_join_fallback_agree(spark):
     """r13: carries attach as foldable literals on small layouts and
-    as the broadcast join above 512 blocks — both paths must produce
+    as the broadcast join on large ones — both paths must produce
     the single-partition pandas answer (offset 1e8 keeps the centered
     /fold arithmetic honest), for the expanding carries AND the
     running-pick fast-path carries."""
@@ -1991,7 +2068,7 @@ def test_carry_literal_and_join_fallback_agree(spark):
     oc = F.col(I.ORDER_COL)
     exp_sum = base["v"].expanding().sum()
     exp_ff = base["v"].ffill()
-    for nb in (32, 700):  # literal path / join fallback (>512 blocks)
+    for nb in (32, 700):  # literal path / join fallback
         out = dw.expanding_blocked(sdf, oc, {"v": ("v", "sum")}, n_blocks=nb)
         got = out.toPandas().sort_values("k")["v"].to_numpy()
         assert np.allclose(got, exp_sum, rtol=1e-9, equal_nan=True), nb

@@ -7,7 +7,8 @@
 - the zero-jobs-guarded suite plan memo (VERDICT r13 #6) and the
   session-token cache keys (VERDICT r13 #8),
 - the grouped-EWM cython kernel's bit-identity (VERDICT r13 #9),
-- the sid-literal density gate (ADVICE r13).
+- the one table-attach size rule: a sparse sid table is broadcast
+  (ADVICE r13).
 """
 
 from __future__ import annotations
@@ -237,29 +238,45 @@ def test_grouped_ewm_cython_bit_identity(spark):
         assert np.array_equal(got, exp, equal_nan=True), method
 
 
-def test_sid_lookup_density_gate():
-    """A sparse sid layout (ids=[0, big]) must refuse the literal-array
-    lookup (plan bloat for no benefit) and fall back to the broadcast
-    join; dense layouts keep the literal."""
-    from go_pandas_spark.operators.distwindow import _sid_lookup_expr
+def test_sid_lookup_density_gate(spark):
+    """The one size rule of ``_attach_table`` counts array slots: a
+    sparse sid layout (slots [0, 4000]) would embed a mostly-filler
+    literal array, so it rides a broadcast join; a small dense map
+    stays a literal lookup; an identity map adds no lookup at all.
+    Every form returns the same values."""
+    from go_pandas_spark.operators import distwindow as dw
 
-    sid = F.lit(0)
-    assert _sid_lookup_expr(sid, [0, 4000], [3, 7]) is None        # sparse
-    assert _sid_lookup_expr(sid, list(range(100)),
-                            list(range(100))) is sid               # identity
-    assert _sid_lookup_expr(sid, list(range(100)),
-                            [v * 2 for v in range(100)]) is not None
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    sdf = spark.range(4).withColumn("sid", (F.col("id") * 4000 / 3).cast("long"))
+    out = dw._attach_table(sdf, F.col("sid"), {"v": ([3, 7], "bigint")},
+                           slots=[0, 4000])                       # sparse
+    assert "Join" in plan(out) and "element_at" not in plan(out)
+    assert {r["sid"]: r["v"] for r in out.collect()} == {
+        0: 3, 1333: None, 2666: None, 4000: 7}
+
+    sdf = spark.range(100).withColumn("sid", F.col("id"))
+    out = dw._attach_table(sdf, F.col("sid"),
+                           {"v": ([v * 2 for v in range(100)], "bigint")})
+    assert "Join" not in plan(out) and "element_at" in plan(out)  # dense
+    assert all(r["v"] == 2 * r["sid"] for r in out.collect())
+
+    out = dw._attach_table(sdf, F.col("sid"),
+                           {"v": (list(range(100)), "bigint")})  # identity
+    assert "Join" not in plan(out) and "element_at" not in plan(out)
+    assert all(r["v"] == r["sid"] for r in out.collect())
 
 
 def test_lit_carry_array_integer_guard(spark):
     """Non-integral floats for an integer carry dtype must fail LOUDLY
     instead of silently truncating (ADVICE r13)."""
-    from go_pandas_spark.operators.distwindow import _lit_carry_array
+    from go_pandas_spark.operators.distwindow import _lit_array
 
     with pytest.raises(ValueError, match="non-integral"):
-        _lit_carry_array([1, 2.5], "bigint")
+        _lit_array([1, 2.5], "bigint")
     got = spark.range(1).select(
-        _lit_carry_array([None, 4, 2.0], "bigint").alias("a")).first()["a"]
+        _lit_array([None, 4, 2.0], "bigint").alias("a")).first()["a"]
     assert list(got) == [None, 4, 2]
 
 

@@ -31,13 +31,10 @@ def _fake_sdf(parallelism: int):
 
 
 def test_block_count_caps():
-    """Literal-embedding kernels cap at 256 blocks (plan size is O(P)
-    expression nodes); broadcast-table kernels follow the cluster's
-    parallelism up to 4096. A 1000-executor × 4-core cluster (P=4000)
-    fans out fully on the table path and is capped only by the
-    documented 4096 ceiling."""
-    assert dw._n_blocks(_fake_sdf(32), lit=True) == 32
-    assert dw._n_blocks(_fake_sdf(4000), lit=True) == 256
+    """Every kernel follows the cluster's parallelism up to 4096 (its
+    tables attach with O(1) plan size above the literal rule). A
+    1000-executor × 4-core cluster (P=4000) fans out fully and is
+    capped only by the documented 4096 ceiling."""
     assert dw._n_blocks(_fake_sdf(4000)) == 4000
     assert dw._n_blocks(_fake_sdf(100_000)) == 4096
 
@@ -168,3 +165,45 @@ def test_one_materialization_primitive():
         if rel not in _STORAGE_MODULES:
             visit(ast.parse(path.read_text()), rel, "")
     assert not found, found
+
+
+# (call, top-level function) pairs in distwindow.py allowed outside
+# _attach_table: the lazy carry subtree of running_pick_blocked is a
+# broadcast of an in-plan aggregate, not a driver table; the bounds
+# search reads the attached array; percentile_approx requires its
+# percentile grids as foldable literals.
+_ATTACH_EXEMPT = {("broadcast", "running_pick_blocked"),
+                  ("element_at", "_binsearch_pos"),
+                  ("_lit_array", "_split_bounds"),
+                  ("_lit_array", "expanding_quantile_approx_blocked"),
+                  ("_lit_array", "expanding_quantile_approx_grouped")}
+
+
+def test_one_table_attach_primitive():
+    """Every driver-built table reaches a blocked kernel's plan through
+    ``distwindow._attach_table``: no ``F.broadcast``/``crossJoin``/
+    ``_memo_table`` and no ``_lit_*_array`` or ``element_at`` lookup
+    appears anywhere else in distwindow.py, bar ``_ATTACH_EXEMPT``.
+    The one size rule's budget: the largest literal table any kernel
+    embeds is ``_ATTACH_LIT_SLOTS`` entries (SCALE.md "P-scaling budget
+    table")."""
+    import ast
+    from pathlib import Path
+
+    found = []
+    tree = ast.parse(Path(dw.__file__).read_text())
+    for top in tree.body:
+        if not isinstance(top, ast.FunctionDef) or top.name == "_attach_table":
+            continue
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            watched = (name in ("broadcast", "crossJoin", "_memo_table",
+                                "element_at", "try_element_at")
+                       or (name.startswith("_lit_") and name.endswith("_array")))
+            if watched and (name, top.name) not in _ATTACH_EXEMPT:
+                found.append(f"{top.name}:{node.lineno} {name}")
+    assert not found, found
+    assert dw._ATTACH_LIT_SLOTS == 512
