@@ -210,28 +210,68 @@ def _deep_tuple(v):
     return v
 
 
+def _arrow_value(v, dt):
+    """``v`` as pyarrow builds it for Spark type ``dt``: a naive
+    timestamp is the process-local time PySpark's ``collect`` returns,
+    so it becomes an aware instant; structs become dicts."""
+    from datetime import timezone
+
+    from pyspark.sql.types import ArrayType, StructType, TimestampType
+
+    if v is None:
+        return None
+    if isinstance(dt, TimestampType) and v.tzinfo is None:
+        return v.astimezone(timezone.utc)
+    if isinstance(dt, StructType):
+        return {f.name: _arrow_value(x, f.dataType)
+                for f, x in zip(dt.fields, v)}
+    if isinstance(dt, ArrayType):
+        return [_arrow_value(x, dt.elementType) for x in v]
+    return v
+
+
+def _local_table(spark, rows, schema) -> SparkDataFrame:
+    """A driver-built table as a JVM ``LocalRelation``: the rows ship
+    as one Arrow batch (NaN, -0.0, NULL and int64 values kept exact), so
+    a broadcast of it reads a ``LocalTableScan``. A Python-list
+    ``createDataFrame`` is a Python RDD instead, and every action that
+    broadcast it ran a Python-worker job. A type pyarrow cannot build
+    from Python values falls back to that RDD."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    try:
+        tbl = pa.table({f.name: pa.array([_arrow_value(r[i], f.dataType)
+                                          for r in rows],
+                                         type=to_arrow_type(f.dataType))
+                        for i, f in enumerate(schema.fields)})
+    except (pa.ArrowException, TypeError, ValueError):
+        return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(tbl, schema)
+
+
 def _memo_table(spark, rows, schema) -> SparkDataFrame:
-    """``createDataFrame`` for tiny driver-built tables (block ids,
-    split bounds, carries), memoized by CONTENT. Python-built
-    DataFrames are RDD-backed (LogicalRDD), which canonicalizes by RDD
-    identity — two builds of the SAME table hash differently, so every
-    downstream plan-keyed ``I.materialize`` lookup missed on
-    re-built plans and stored one more copy per kernel per run (r9;
-    measured on every blocked kernel since the r8 sid tables).
-    Returning the same DataFrame object for the same content makes
-    rebuilt plans canonicalize equal. Entries are ≤P rows each; the
-    dict is a size-capped LRU (``_LOCAL_TBLS_MAX``) with NaN/-0.0
-    canonicalized keys (see ``_deep_tuple``), cleared wholesale by
-    ``_internal.clear_cache``."""
+    """``_local_table`` for tiny driver-built tables (block ids, split
+    bounds, carries), memoized by CONTENT. Equal content then yields
+    the same DataFrame object, so rebuilt plans canonicalize equal and
+    the plan-keyed ``I.materialize`` lookups hit (r9: RDD-backed
+    tables canonicalized by RDD identity and stored one more copy per
+    kernel per run), and a hit skips the Arrow round trip. Entries
+    are ≤P rows each; the dict is a size-capped LRU
+    (``_LOCAL_TBLS_MAX``) with NaN/-0.0 canonicalized keys (see
+    ``_deep_tuple``), cleared wholesale by ``_internal.clear_cache``."""
     try:
         key = (schema if isinstance(schema, str) else schema.simpleString(),
                _deep_tuple([tuple(r) for r in rows]))
         hash(key)
     except TypeError:
-        return spark.createDataFrame(rows, schema)
+        return _local_table(spark, rows, schema)
     df = _LOCAL_TBLS.get(key)
     if df is None or df.sparkSession is not spark:
-        df = spark.createDataFrame(rows, schema)
+        df = _local_table(spark, rows, schema)
         _LOCAL_TBLS[key] = df
     _LOCAL_TBLS.move_to_end(key)
     while len(_LOCAL_TBLS) > _LOCAL_TBLS_MAX:
@@ -376,11 +416,12 @@ def _lit_array(vals, dt: str) -> Column:
 # array slots × columns. At or below it a table folds into the plan as
 # literal arrays; above it the table rides a broadcast join, whose plan
 # size is O(1) in the table. The forced-n_blocks sweep (SCALE.md "One
-# table-attach rule") measured the literal form 1.4-2.6x faster per
-# kernel call at every size up to 512 blocks × 3 columns: a broadcast
-# of a Python-built table costs its own job. So the rule is the
-# plan-size budget alone: the largest power of two that keeps a
-# 1024-block table (1023 split bounds, one column) broadcast.
+# table-attach rule") measured the two forms per kernel call up to 512
+# blocks × 3 columns: a Python-RDD broadcast was 1.4-2.6x slower, the
+# LocalRelation broadcast (``_local_table``) is within noise of the
+# literals. So the rule is the plan-size budget alone: the largest
+# power of two that keeps a 1024-block table (1023 split bounds, one
+# column) broadcast.
 _ATTACH_LIT_SLOTS = 512
 
 
@@ -402,7 +443,8 @@ def _attach_table(sdf: SparkDataFrame, key: Column | None, cols: dict,
     hold at most ``_ATTACH_LIT_SLOTS`` entries in all, with dtypes
     ``_lit_array`` spells exactly, attaches as ``try_element_at`` over
     one foldable literal array per column; every other table is a
-    broadcast join against the content-memoized ``_memo_table``. A
+    broadcast join against the content-memoized ``_memo_table`` (a JVM
+    ``LocalRelation``). A
     column whose int values equal their slots is the key itself."""
     from pyspark.sql.types import (ArrayType, DataType, LongType,
                                    StructField, StructType,
@@ -569,12 +611,20 @@ def _attach_sid(sdf: SparkDataFrame, order_col: Column, sid_stats,
                 pos: str | None = None) -> tuple[SparkDataFrame, list]:
     """The monotonic-id layout: ``order_col`` is the engine id
     (sid · 2³³ + offset) with offsets 0..c-1 in every sid
-    (``collect_sid_layout`` stats). With ``n``, attach BLK: every sid
-    split by its offset bits into ``chunk``-row blocks, chunk =
-    ⌈rows/n⌉, so a skewed or AQE-coalesced layout still fans out to
-    ≈n blocks. With ``pos``, attach column ``pos`` = the global 0-based
-    position, rows in earlier sids + offset. Both are ONE sid-keyed
-    ``_attach_table`` lookup: no percentile job, no window. Returns
+    (``collect_sid_layout`` stats). With ``n``, attach BLK: a sid of c
+    rows becomes k = max(1, round-half-up(c / chunk)) blocks, chunk =
+    ⌈rows/n⌉, and offset ``off`` lands in block ⌊off·k/c⌋ of its sid,
+    so every block holds ⌊c/k⌋ or ⌈c/k⌉ rows. A sid under 1.5 chunks
+    is one block (a balanced range-partitioned layout keeps blocks ≡
+    sids, and the fused layout+totals job of ``expanding_blocked``
+    applies); a skewed or AQE-coalesced layout still fans out to ≈n
+    blocks with no sub-chunk sliver. Each sid gives at most c/chunk + ½
+    blocks, or one block when c < chunk/2, so the layout has at most
+    n + sids/2 blocks plus ½ per sid under half a chunk (≤ n + sids).
+    With ``pos``, attach column ``pos`` = the global 0-based position,
+    rows in earlier sids + offset. Both are ONE sid-keyed
+    ``_attach_table`` lookup: no percentile job, no window; a layout
+    where some sid splits adds its k and c to the lookup. Returns
     ``(sdf, cnts)``, the row count of each block in block order."""
     import math
 
@@ -583,17 +633,24 @@ def _attach_sid(sdf: SparkDataFrame, order_col: Column, sid_stats,
     ids = [int(s) for s, *_ in sid_stats]
     counts = [int(c) for _s, c, *_ in sid_stats]
     chunk = max(1, math.ceil(sum(counts) / n)) if n else 0
-    firsts, cnts, before, acc = [], [], [], 0
+    firsts, ks, cnts, before, acc = [], [], [], [], 0
     for c in counts:
         before.append(acc)
         acc += c
         if n:
+            k = max(1, (2 * c + chunk) // (2 * chunk))  # round half up
             firsts.append(len(cnts))
-            cnts.extend(min(chunk, c - j * chunk)
-                        for j in range(max(1, math.ceil(c / chunk))))
+            ks.append(k)
+            # offsets ⌈j·c/k⌉ .. ⌈(j+1)·c/k⌉-1 form block j of the sid
+            cnts.extend(-(-(j + 1) * c // k) + (-j * c // k)
+                        for j in range(k))
     cols = {}
     if n:
         cols["__sfirst__"] = (firsts, "bigint")
+    split = any(k > 1 for k in ks)
+    if split:
+        cols["__sk__"] = (ks, "bigint")
+        cols["__sc__"] = (counts, "bigint")
     if pos:
         cols[pos] = (before, "bigint")
     sdf = _attach_table(sdf, sid, cols, slots=ids)
@@ -601,9 +658,11 @@ def _attach_sid(sdf: SparkDataFrame, order_col: Column, sid_stats,
         sdf = sdf.withColumn(pos, F.col(pos) + off)
     if n:
         blk = F.col("__sfirst__")
-        if any(c > chunk for c in counts):  # some sid subdivides
-            blk = blk + F.floor(off / F.lit(chunk))
-        sdf = sdf.withColumn(BLK, blk.cast("int")).drop("__sfirst__")
+        if split:
+            # off·k < 2³³·n is exact in a double, so the floor is too
+            blk = blk + F.floor(off * F.col("__sk__") / F.col("__sc__"))
+        sdf = sdf.withColumn(BLK, blk.cast("int")).drop(
+            "__sfirst__", "__sk__", "__sc__")
     return sdf, cnts
 
 
@@ -683,8 +742,8 @@ def _blocked_base(sdf: SparkDataFrame, order_col: Column,
                 c for _b, c, _l, _h in stats) <= _ALIGNED_ROWS_CAP:
             blk = F.shiftright(F.col(OC), 33).cast("int")
             return base0.withColumn(BLK, blk), True, len(stats)
-        # subdividing layouts split ≤ n_sids source runs to the target
-        # parallelism: block count ≤ target + one remainder per sid
+        # the sid layout (_attach_sid) has ≤ target + sids/2 blocks,
+        # plus ½ per sid under half a chunk: ≤ target + sids
         nb_est = _n_blocks(sdf) + (len(stats) if stats else 0)
         return block_partition(
             base0, F.col(OC), n_blocks, monotonic_id=True,
@@ -1022,9 +1081,10 @@ def expanding_blocked(sdf: SparkDataFrame, order_col: Column,
     # Block layout + totals: on the monotonic-id path ONE groupBy(sid)
     # job returns the contiguity stats AND every sid's totals (r9 — the
     # split stats-then-totals pair was half of each call's build latency
-    # on small/chained inputs). When no sid subdivides, blocks == sids
-    # and those totals are the block totals; a subdividing or
-    # value-derived layout aggregates its block totals in a second job.
+    # on small/chained inputs). When no sid splits (every sid under 1.5
+    # chunks, ``_attach_sid``), blocks == sids and those totals are the
+    # block totals; a layout with a skewed sid, or a value-derived one,
+    # aggregates its block totals in a second job.
     base = None
     trows: list[tuple[int, dict]] | None = None  # (blk, totals row) asc
     tot_schema = None

@@ -109,7 +109,8 @@ def table_stamp(path: str, children: dict | None = None):
 
 
 # LAZY-PLAN memo for read_parquet: one entry per (session, path)
-# holding (table_stamp, plan). Repeated reads of an unchanged table
+# holding (table_stamp, plan, footer schema, Spark schema as read
+# before the ns truncation). Repeated reads of an unchanged table
 # reuse the already-built logical plan (file listing + footer schema +
 # ns-truncation projection) instead of paying ~4-6 driver round-trips
 # per read. This caches NO data and NO results: every action over the
@@ -118,9 +119,52 @@ def table_stamp(path: str, children: dict | None = None):
 # built (paths, lengths), so the entry is only served while the tree's
 # stamp is unchanged; a rewrite (even in place, same file name) builds
 # a fresh plan that replaces the stale entry. The stamp is taken BEFORE
-# the build, so a file changed while listing misses next time. Bounded
-# FIFO.
+# the build, so a file changed while listing misses next time. A stale
+# entry whose data files still carry the footer schema it was inferred
+# from (``_footer_schema``) is rebuilt over that schema: Spark's
+# inference is a job (one task reading a footer), which also kept a
+# suite query that reads the table from being memoized on its first
+# build after a rewrite. Bounded FIFO.
 _PLAN_MEMO: dict = {}
+
+
+def _footer_schema(path: str):
+    """The parquet schema and Spark row metadata that every data file of
+    ``path`` (one file, or a flat directory of them) carries in its
+    footer, or None: files that disagree, subdirectories (partition
+    discovery adds columns), a glob, or an unreadable footer. Equal
+    values mean Spark's inference, whichever file it reads, gives the
+    schema it gave before."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    if "*" in path:
+        return None
+    try:
+        if os.path.isdir(path):
+            files = []
+            with os.scandir(path) as it:
+                for e in it:
+                    if e.name.startswith(("_", ".")):
+                        continue  # _SUCCESS, checksums: Spark skips them
+                    if not e.is_file():
+                        return None
+                    files.append(e.path)
+        else:
+            files = [path]
+        out = None
+        for f in files:
+            md = pq.read_metadata(f)
+            kv = md.metadata or {}
+            sig = (md.schema,
+                   kv.get(b"org.apache.spark.sql.parquet.row.metadata"))
+            if out is not None and sig != out:
+                return None
+            out = sig
+        return out
+    except Exception:  # noqa: BLE001 — unreadable footer: infer as Spark does
+        return None
 
 
 def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = None) -> Frame:
@@ -131,7 +175,12 @@ def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = Non
     if stamp is not None and hit is not None and hit[0] == stamp:
         sdf = hit[1]
     else:
-        sdf = spark.read.parquet(path)
+        footer = _footer_schema(path) if stamp is not None else None
+        reader = spark.read
+        if footer is not None and hit is not None and hit[2] == footer:
+            reader = reader.schema(hit[3])  # no inference job
+        sdf = reader.parquet(path)
+        raw_schema = sdf.schema
         # datetime64[ns] columns land as long (nanosAsLong) — truncate to µs
         # timestamps (the reference's ns precision is a deliberate delta,
         # SURVEY.md §1.3). Column detection reads one footer, not data.
@@ -152,7 +201,7 @@ def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = Non
         if stamp is not None:
             while len(_PLAN_MEMO) >= 32:
                 _PLAN_MEMO.pop(next(iter(_PLAN_MEMO)))
-            _PLAN_MEMO[key] = (stamp, sdf)
+            _PLAN_MEMO[key] = (stamp, sdf, footer, raw_schema)
     if columns:
         sdf = sdf.select(*columns)  # pruned into the parquet scan by Catalyst
     # NOTE: single-row-group files scan as ONE task; we deliberately do

@@ -1,6 +1,8 @@
 #!/usr/bin/env python3
 """Per-query profiling for the optimization rounds: warm time, number
-of Spark jobs, number of stages/tasks, shuffle exchange count in the
+of Spark jobs (all of them, and ``build_jobs``: those launched while
+the query's DataFrame is built, before the action — perfbench's
+``build_jobs``), number of stages/tasks, shuffle exchange count in the
 final plan, and the suite plan memo's decision for the timed build
 (``suite.memo_decisions()``: hit, miss, or skip and why).
 
@@ -25,6 +27,7 @@ def main() -> int:
     register_all()
     spark = get_spark("profile")
     sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # JVM warmup
 
     names = [n for n in QUERIES
@@ -43,9 +46,14 @@ def main() -> int:
         t0 = time.time()
         df = fn(spark, sf_dir)
         t_plan = time.time() - t0
+        bus.waitUntilEmpty()  # the status store sees every build job
+        build_jobs = len(tracker.getJobIdsForGroup(f"prof_{name}"))
         memo = memo_decisions().get(name)
+        t1 = time.time()
         df.count()
-        wall = time.time() - t0
+        t_action = time.time() - t1
+        wall = t_plan + t_action
+        bus.waitUntilEmpty()
         jobs = tracker.getJobIdsForGroup(f"prof_{name}")
         n_stages = 0
         n_tasks = 0
@@ -67,12 +75,16 @@ def main() -> int:
                 + plan.count("MapInArrow"))
         out[name] = {"warm_sec": round(wall, 3),
                      "plan_sec": round(t_plan, 3),
-                     "jobs": len(jobs), "stages": n_stages,
+                     "action_sec": round(t_action, 3),
+                     "jobs": len(jobs), "build_jobs": build_jobs,
+                     "stages": n_stages,
                      "tasks": n_tasks,
                      "exchange": n_exch - n_reuse, "reused_exchange": n_reuse,
                      "python_nodes": n_py, "memo": memo}
         sys.stderr.write(f"{name}: {wall:.2f}s plan={t_plan:.2f}s "
-                         f"jobs={len(jobs)} stages={n_stages} tasks={n_tasks} "
+                         f"action={t_action:.2f}s "
+                         f"jobs={len(jobs)} build_jobs={build_jobs} "
+                         f"stages={n_stages} tasks={n_tasks} "
                          f"exch={n_exch - n_reuse}+{n_reuse}r py={n_py} "
                          f"memo={memo}\n")
     print(json.dumps(out, indent=1, sort_keys=True))

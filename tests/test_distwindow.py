@@ -1810,10 +1810,10 @@ def test_series_order_ops_escalate_past_literal_cap(spark):
 
 def test_expanding_fused_stats_totals_path(spark):
     """The r9 monotonic no-subdivision layout computes block stats AND
-    totals in ONE groupBy(sid) job. It engages when source partitions
-    >= target blocks (the common cluster case; local tests usually
-    subdivide onto the generic path) — force it with n_blocks below
-    the partition count and pin parity for every carry fold kind."""
+    totals in ONE groupBy(sid) job. A sorted frame's range-partitioned
+    sids are all under 1.5 chunks, so blocks ≡ sids and the fused path
+    runs at the default block target; pin parity for every carry fold
+    kind."""
     rng = np.random.RandomState(71)
     n = 4_000
     v = rng.normal(3, 2, n)
@@ -1826,7 +1826,7 @@ def test_expanding_fused_stats_totals_path(spark):
         f._sdf, F.col(I.ORDER_COL),
         {"s": ("v", "sum"), "mn": ("v", "min"), "mx": ("v", "max"),
          "vv": ("v", "var"), "p": ("v", "prod"), "c": ("v", "count")},
-        min_periods=2, n_blocks=8).toPandas().sort_values("k")
+        min_periods=2).toPandas().sort_values("k")
     e = pdf["v"].expanding(min_periods=2)
     assert np.allclose(out["s"], e.sum(), rtol=1e-9, equal_nan=True)
     assert np.allclose(out["mn"], e.min(), rtol=1e-12, equal_nan=True)
@@ -1839,6 +1839,113 @@ def test_expanding_fused_stats_totals_path(spark):
     el = np.log(np.abs(ep.to_numpy()))
     m = ~np.isnan(el) & np.isfinite(el) & (np.abs(el) < 500)
     assert np.allclose(gl[m], el[m], rtol=1e-6)
+
+
+def _sid_frame(spark, counts, seed=0):
+    """Rows keyed by an engine-style id (sid << 33 | offset) whose sid
+    ``i`` holds ``counts[i]`` rows with offsets 0..c-1, plus ``v``."""
+    oc = np.concatenate([(s << 33) + np.arange(c, dtype=np.int64)
+                         for s, c in enumerate(counts)])
+    v = np.random.RandomState(seed).normal(0, 1, len(oc))
+    return spark.createDataFrame(pd.DataFrame({I.ORDER_COL: oc, "v": v}))
+
+
+def _blk_counts(sdf):
+    from go_pandas_spark.operators.distwindow import BLK
+
+    rows = sdf.groupBy(BLK).agg(F.count(F.lit(1)).alias("c"),
+                                F.min(I.ORDER_COL).alias("lo"),
+                                F.max(I.ORDER_COL).alias("hi")).collect()
+    rows = sorted(rows, key=lambda r: r[BLK])
+    assert [r[BLK] for r in rows] == list(range(len(rows)))
+    # blocks are consecutive id ranges, in block order
+    assert all(a["hi"] < b["lo"] for a, b in zip(rows, rows[1:]))
+    return [r["c"] for r in rows]
+
+
+def test_sid_layout_balanced_sids_are_blocks(spark):
+    """Sids within ±49 % of the chunk (⌈rows/n⌉) are one block each:
+    no sliver block beside a sid just over the chunk."""
+    from go_pandas_spark.operators import distwindow as dw
+
+    counts = [510, 1490, 1000, 1000]  # chunk = 4000 / 4 = 1000
+    stats = [(s, c, 0, c - 1) for s, c in enumerate(counts)]
+    out, cnts = dw._attach_sid(_sid_frame(spark, counts),
+                               F.col(I.ORDER_COL), stats, 4)
+    assert cnts == counts
+    assert _blk_counts(out) == counts
+
+
+def test_sid_layout_splits_skewed_sid_evenly(spark):
+    """A sid of ~3× the mean splits into 3 near-equal blocks, none
+    below ⌊c/k⌋ rows (3001 rows: 1001/1000/1000, not 1001/1001/999)."""
+    from go_pandas_spark.operators import distwindow as dw
+
+    counts = [600] * 5 + [3001]  # chunk = ⌈6001 / 6⌉ = 1001
+    stats = [(s, c, 0, c - 1) for s, c in enumerate(counts)]
+    out, cnts = dw._attach_sid(_sid_frame(spark, counts),
+                               F.col(I.ORDER_COL), stats, 6)
+    assert cnts == [600] * 5 + [1001, 1000, 1000]
+    assert min(cnts[5:]) >= 3001 // 3
+    assert _blk_counts(out) == cnts
+
+
+def test_series_order_ops_on_skewed_sids_match_pandas(spark):
+    """cumsum / cummax / rolling(5).sum() / expanding().var() over a
+    16-partition input whose first sid holds half the rows (so the sid
+    layout splits it) and ~10 % NaNs match pandas in frame order."""
+    import math
+
+    from go_pandas_spark.operators import distwindow as dw
+
+    rng = np.random.RandomState(91)
+    n = 4_000
+    v = rng.normal(5, 2, n)
+    v[rng.random(n) < 0.1] = np.nan
+    k = np.arange(n)
+    pdf = pd.DataFrame({"k": k, "v": v,
+                        "bucket": np.where(k < n // 2, 0, 1 + k % 15)})
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(16, "bucket"))
+    stats = dw.collect_sid_layout(f._sdf, F.col(I.ORDER_COL))[0]
+    chunk = math.ceil(n / dw._n_blocks(f._sdf))
+    assert max(c for _s, c, *_ in stats) >= 1.5 * chunk  # a sid splits
+    s = f["v"]
+    out = f.assign(cs=s.cumsum(), cm=s.cummax(), rs=s.rolling(5).sum(),
+                   ev=s.expanding().var()).to_pandas()
+    x = out["v"]
+    assert sorted(out["k"]) == list(range(n))
+    assert np.allclose(out["cs"], x.cumsum(), rtol=1e-9, equal_nan=True)
+    assert np.allclose(out["cm"], x.cummax(), rtol=1e-12, equal_nan=True)
+    assert np.allclose(out["rs"], x.rolling(5).sum(), rtol=1e-9,
+                       equal_nan=True)
+    assert np.allclose(out["ev"], x.expanding().var(), rtol=1e-9,
+                       equal_nan=True)
+
+
+def test_expanding_balanced_sids_run_one_collect(spark):
+    """Over a leaf of 4 sids within 1 % of the chunk, expanding_blocked's
+    build is ONE driver collect: the fused layout+totals groupBy(sid).
+    A sid one row over the chunk used to split off a sliver block and
+    send the totals through a second groupBy(BLK) collect."""
+    from go_pandas_spark.operators import distwindow as dw
+
+    leaf = I.materialize(_sid_frame(spark, [1010, 990, 1000, 1000]))
+    leaf.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("expanding_one_collect", "expanding_one_collect")
+    try:
+        out = dw.expanding_blocked(leaf, F.col(I.ORDER_COL),
+                                   {"s": ("v", "sum")}, n_blocks=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    sites = {tracker.getStageInfo(st).name
+             for j in tracker.getJobIdsForGroup("expanding_one_collect")
+             for st in tracker.getJobInfo(j).stageIds}
+    assert len(sites) == 1 and "distwindow.py" in next(iter(sites)), sites
+    exp = leaf.toPandas().sort_values(I.ORDER_COL)["v"].cumsum()
+    got = out.toPandas().sort_values(I.ORDER_COL)["s"]
+    assert np.allclose(got, exp, rtol=1e-9)
 
 
 def test_ewm_noadjust_cov_degenerate_gap_exact_fraction_oracle(spark):
@@ -2100,6 +2207,53 @@ def test_non_numeric_carry_keeps_join_path(spark):
     exp = ts["t"].cummin().ffill()  # prefix min at every row
     eq = (got == exp) | (got.isna() & exp.isna())
     assert bool(eq.all())
+
+
+def test_broadcast_table_is_local_relation(spark, monkeypatch):
+    """A table above the literal rule broadcasts a JVM LocalTableScan,
+    not a Python-RDD scan: its broadcast job runs no Python worker, and
+    the action runs at most that one job more than the literal form.
+    Values (NULL, NaN, -0.0, int64 extremes, a struct key) match."""
+    from go_pandas_spark.operators import distwindow as dw
+
+    sdf = spark.range(64).withColumn("k", F.col("id") % 9)  # 8: no slot
+    vals = [None, float("nan"), -0.0, 1.5, -2.25, 1e300, 7.0, 8.0]
+    ints = [-(2 ** 63), 2 ** 63 - 1, 0, None, 5, 6, 7, 8]
+    cols = {"d": (vals, "double"), "i": (ints, "bigint")}
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(tag):
+        out = dw._attach_table(sdf, F.col("k"), cols).orderBy("id")
+        sc.setJobGroup(tag, tag)
+        try:
+            rows = out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return rows, len(tracker.getJobIdsForGroup(tag)), plan
+
+    lit, lit_jobs, lit_plan = run("attach_lit")
+    assert "Broadcast" not in lit_plan
+    monkeypatch.setattr(dw, "_ATTACH_LIT_SLOTS", 0)
+    dw._LOCAL_TBLS.clear()
+    bc, bc_jobs, bc_plan = run("attach_bcast")
+    assert "BroadcastExchange" in bc_plan and "LocalTableScan" in bc_plan
+    assert "ExistingRDD" not in bc_plan
+    assert bc_jobs <= lit_jobs + 1
+    tbl = next(iter(dw._LOCAL_TBLS.values()))
+    assert "PythonRDD" not in tbl._jdf.queryExecution().toRdd().toDebugString()
+    assert repr(bc) == repr(lit)
+    import math
+    assert math.copysign(1.0, bc[2]["d"]) < 0  # k == 2: -0.0 kept
+
+    # a struct key (group keys) rides the same LocalRelation
+    skey = [(i, f"g{i}") for i in range(8)]
+    keyed = sdf.withColumn("sk", F.struct(
+        F.col("k").alias("a"), F.concat(F.lit("g"), F.col("k")).alias("b")))
+    out = dw._attach_table(keyed, F.col("sk"), {"d": (vals, "double")},
+                           slots=skey).orderBy("id").collect()
+    assert [repr(r["d"]) for r in out] == [repr(r["d"]) for r in lit]
 
 
 def _nan_series_frame(spark, seed: int, n: int = 3_000):

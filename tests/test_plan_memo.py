@@ -56,9 +56,11 @@ def _entries(name):
 
 
 def _stored(q, spark, sf_dir):
-    """Build until the memo stores the plan: the first read of a new or
-    rewritten table runs Spark's parquet schema-inference job, so that
-    build is never stored; the next one reuses read_parquet's plan."""
+    """Build until the memo stores the plan: the first read of a new
+    table, or of one rewritten with another schema, runs Spark's parquet
+    schema-inference job, so that build is never stored; the next one
+    reuses read_parquet's plan. A same-schema rewrite is read over the
+    stored schema, so its first build is stored."""
     q(spark, sf_dir)
     df = q(spark, sf_dir)
     assert q(spark, sf_dir) is df
@@ -83,7 +85,6 @@ def test_rewrite_or_added_file_rebuilds(spark, sf):
     q = suite._memoized_query("memo_a_rewrite", _sum_by_k)
     first = _stored(q, spark, sf)
     _write(f"{sf}/a.parquet", _table(6, scale=10))  # in place, same name
-    suite.load(spark, sf, "a")  # the new table's schema job, outside q
     second = q(spark, sf)
     assert second is not first
     assert suite.memo_decisions()["memo_a_rewrite"] == \
@@ -95,7 +96,10 @@ def test_rewrite_or_added_file_rebuilds(spark, sf):
     assert third is not second
     both = pd.concat([_table(6, scale=10), _table(5, scale=100)])
     assert _rows(third) == _expected(both)
-    assert _stored(q, spark, sf) is not third
+    # an added file with the same schema: stored on its first build
+    assert suite.memo_decisions()["memo_a_rewrite"] == \
+        f"miss:stale {sf}/a.parquet"
+    assert _stored(q, spark, sf) is third
 
 
 def test_join_misses_on_either_table(spark, sf):
@@ -168,3 +172,62 @@ def test_refresh_through_to_parquet(spark, sf):
     assert len(_entries("memo_refresh_b")) == 1
     assert _rows(a0) == _expected(_table(6))
 
+
+def _read_jobs(spark, path):
+    """``gp.read_parquet(path)`` and the Spark jobs the read launched."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs0 = sched.nextJobId()
+    f = gp.read_parquet(spark, path)
+    return f, sched.nextJobId() - jobs0
+
+
+def test_same_schema_rewrite_reads_without_inference_job(spark, sf):
+    path = f"{sf}/a.parquet"
+    gp.read_parquet(spark, path)
+    for i in range(2):
+        _write(path, _table(7 + i, scale=3 + i))  # in place, same schema
+        f, jobs = _read_jobs(spark, path)
+        assert jobs == 0
+        got = f.to_pandas().sort_values("v").reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, _table(7 + i, scale=3 + i),
+                                      check_dtype=False)
+
+
+def test_schema_changing_rewrite_is_read_with_new_schema(spark, sf):
+    path = f"{sf}/a.parquet"
+    gp.read_parquet(spark, path)
+    wider = _table(5).assign(w=np.arange(5) * 0.5)  # an added column
+    _write(path, wider)
+    f, jobs = _read_jobs(spark, path)
+    assert jobs > 0  # inferred again
+    assert f.columns == ["k", "v", "w"]
+    got = f.to_pandas().sort_values("v").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, wider, check_dtype=False)
+
+    typed = pd.DataFrame({"k": np.arange(4) % 3, "v": np.arange(4) + 0.25,
+                          "w": np.arange(4) * 2.0})  # v: int64 -> double
+    _write(path, typed)
+    f, jobs = _read_jobs(spark, path)
+    assert jobs > 0
+    assert dict(f._sdf.dtypes)["v"] == "double"
+    got = f.to_pandas().sort_values("v").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, typed, check_dtype=False)
+
+
+def test_nanos_column_keeps_micros_after_schema_reuse(spark, tmp_path):
+    path = str(tmp_path / "ev.parquet")
+
+    def write(base):
+        ts = pd.to_datetime(base) + pd.to_timedelta(np.arange(4) * 1_001, "ns")
+        pq.write_table(pa.table({"i": np.arange(4),
+                                 "ts": pa.array(ts, pa.timestamp("ns"))}), path)
+        return ts.floor("us")
+
+    write("2024-01-01")
+    gp.read_parquet(spark, path)
+    exp = write("2025-06-30 12:00")
+    f, jobs = _read_jobs(spark, path)
+    assert jobs == 0  # read over the stored schema
+    assert dict(f._sdf.dtypes)["ts"] == "timestamp"
+    got = f.to_pandas().sort_values("i")["ts"].reset_index(drop=True)
+    assert list(got) == list(exp)
