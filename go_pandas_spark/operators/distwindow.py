@@ -1988,27 +1988,60 @@ def rank_blocked(sdf: SparkDataFrame, col_name: str, method: str = "average",
 
 
 # ------------------------------------------------------------------ #
-# ungrouped EWM mean: per-block partials + driver-chained carry        #
+# ungrouped EWM: one blocked kernel for mean/var/std/cov/corr          #
 # ------------------------------------------------------------------ #
-# The reference kernel (window.pyx:1732 ewma) is a sequential
-# recursion. It decomposes over order blocks:
-#   adjust=True   y_t = num_t / den_t with num_t = w^δ·num_{t-1} + x_t,
-#                 den_t likewise — LINEAR in the incoming (num, den),
-#                 so a block's effect on any incoming state is
-#                 (num_local, den_local, total decay), three scalars.
-#   adjust=False  the average is AFFINE in the incoming average once
-#                 the (data-independent) weight sequence is known:
-#                 avg_out = A·avg'_first + B, with avg'_first the
-#                 update of the incoming state by the block's first
-#                 valid value.
-# Pass 1 computes those per-block scalars in parallel, the driver
-# chains ≤P states, pass 2 evaluates each block in parallel with its
-# exact incoming state. Nothing sequential ever touches more than one
-# block.
+# The reference kernels (window.pyx:1732 ewma, :1802 ewmcov) are
+# sequential recursions. Each decomposes over order blocks: pass 1
+# summarizes every block in parallel, the driver folds ≤P summaries,
+# pass 2 evaluates every block in parallel from its exact entry state.
+# Nothing sequential ever touches more than one block.
+#
+# A *component* is one (x, y) chain under the reference's pairwise
+# is_observation validity; a one-column statistic is the (x, x)
+# component. Its ``need`` set ("mean", and the covariance chains "xy",
+# "xx", "yy") keeps a var-only call off the pair sums. The summary
+# carries the component's observation count, so min_periods masks
+# inside evaluate — no second kernel. Two chain families share the
+# skeleton (``_EWM_FAMILIES``):
+#
+# sums    adjust=True with alpha < 1. The normalized weight depends on
+#         the history's observation count, so the update is linear
+#         only as discounted sums: S0, SX, SY, SXY, SXX, SYY centred at
+#         the block's first observation (re-centred by the affine
+#         identities at each carry) and the PAIRWISE sums
+#             T = Σ_{i<j} wᵢwⱼ,  U_ab = Σ_{i<j} wᵢwⱼ (aᵢ−aⱼ)(bᵢ−bⱼ),
+#         cov = U_xy/(2T), var = U_xx/(2T), corr = U_xy/√(U_xx·U_yy)
+#         (the bias=True ratio: the debias factor cancels), mean =
+#         ref + SX/S0. U_xx is a sum of NONNEGATIVE terms: no
+#         catastrophic cancellation when the history's weight decays
+#         toward machine epsilon, where the raw-sums form (and the
+#         reference's own kernel) returns fp noise several % off
+#         (fuzz-caught r7, seed 313370091); T > 0 is the exact
+#         one-effective-observation test. T and U are per-row affine
+#         chains with validity-only decay w²: each observation pairs
+#         with the decayed PRIOR-only sums (the shifted arrays —
+#         subtracting its own terms back out would reintroduce the
+#         cancellation), so block carries stay linear.
+# renorm  adjust=False, and alpha == 1 under either adjust (w = 0: both
+#         keep one effective observation, p = 0). The reference's
+#         per-observation update (window.pyx:1802)
+#             p = W/(W+α), q = 1−p, W = w^gap,
+#             mean' = p·mean + q·x,
+#             cov'  = p·(cov + Δmean_x·Δmean_y) + q·(x−mean'_x)(y−mean'_y)
+#         is affine in the state with validity-only coefficients. The
+#         debias denominator 1−Σw² is carried as its own complement
+#         dw' = p²·dw + 2pq — all-positive terms, never a 1−(≈1)
+#         difference (r10: the Σw² carry was 1.4e-4 off a 60-digit
+#         replication at the degenerate first-after-gap rows; dw is
+#         exact there). A block's tail transition is polynomial in the
+#         incoming centred means, recovered exactly by basis
+#         evaluation; its first observation is one exact scalar step
+#         in the fold, because its decay depends on the previous
+#         blocks' trailing gap.
 
 
 def _ewma_adjust_parts(x, valid, w: float, ignore_na: bool):
-    """Vectorized standalone discounted sums for adjust=True.
+    """Vectorized standalone discounted sums for adjust=True, 0 < w < 1.
 
     Returns (num, den, decay) arrays: num/den from zero state, decay[t]
     = w^{E_t} — the factor an incoming state carries at row t. Chunked
@@ -2026,17 +2059,7 @@ def _ewma_adjust_parts(x, valid, w: float, ignore_na: bool):
         return num, den, decay
     xx = np.where(valid, x, 0.0)
     v = valid.astype(np.float64)
-    if ignore_na:
-        e = np.cumsum(v)
-    else:
-        e = np.arange(1, n + 1, dtype=np.float64)
-    if w <= 0.0:
-        # alpha == 1: the mean is just the last valid value (ffill)
-        idx = np.where(valid, np.arange(n), -1)
-        np.maximum.accumulate(idx, out=idx)
-        num = np.where(idx >= 0, x[np.maximum(idx, 0)], np.nan)
-        den = np.where(idx >= 0, 1.0, 0.0)
-        return np.where(den > 0, num, 0.0), den, np.zeros(n)
+    e = _ewms_exponents(valid, ignore_na)
     L = max(8, min(4096, int(200.0 / max(1e-12, -math.log10(w)))))
     num_c = den_c = 0.0
     dec_c = 1.0
@@ -2057,399 +2080,39 @@ def _ewma_adjust_parts(x, valid, w: float, ignore_na: bool):
     return num, den, decay
 
 
-def _ewma_noadjust(x, valid, alpha: float, ignore_na: bool, state=None):
-    """Resumable replica of the reference adjust=False recursion
-    (window.pyx:1732: new_wt=alpha, old_wt resets to 1 per valid)."""
-    import numpy as np
-
-    w = 1.0 - alpha
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        avg, old_wt, have = np.nan, 1.0, False
-    else:
-        avg, old_wt = state
-        have = not np.isnan(avg)
-    for i in range(n):
-        if valid[i]:
-            if have:
-                old_wt *= w
-                if avg != x[i]:
-                    avg = (old_wt * avg + alpha * x[i]) / (old_wt + alpha)
-                old_wt = 1.0
-            else:
-                avg = x[i]
-                have = True
-                old_wt = 1.0
-            out[i] = avg
-        else:
-            if (not ignore_na) and have:
-                old_wt *= w
-            out[i] = avg if have else np.nan
-    return out, (avg, old_wt)
-
-
-def ewm_mean_blocked(sdf: SparkDataFrame, order_col: Column, cols: list[str],
-                     alpha: float, adjust: bool, ignore_na: bool,
-                     n_blocks: int | None = None) -> SparkDataFrame:
-    """Distributed ungrouped EWM mean. Replaces ``cols`` in place."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StringType,
-                                   StructField, StructType)
-
-    w = 1.0 - alpha
-    if w <= 0.0:
-        # alpha == 1: every variant degenerates to last-valid-carried
-        # (ffill) — the running-pick kernel is that exact shape
-        out = running_pick_blocked(sdf, [order_col], cols, back=True,
-                                   prefix="__ew_", block_key=order_col,
-                                   n_blocks=n_blocks, carry_order=order_col)
-        for c in cols:
-            out = (out.withColumn(c, F.col(f"__ew_{c}").cast("double"))
-                   .drop(f"__ew_{c}"))
-        return out
-    OC = "__ord__"
-    mono = _is_order_id(order_col)
-    sdf = _pin_if_order(sdf, order_col)
-    base, aligned, _ = _blocked_base(sdf, order_col, n_blocks, mono)
-    for c in cols:
-        base = base.withColumn(c, F.col(c).cast("double"))
-    in_schema = base.schema
-
-    sum_schema = StructType([
-        StructField("b", LongType()), StructField("col", StringType()),
-        StructField("s1", DoubleType()), StructField("s2", DoubleType()),
-        StructField("s3", DoubleType()),
-        StructField("n_rows", LongType()), StructField("n_valid", LongType()),
-        StructField("prefix", LongType()), StructField("trailing", LongType()),
-    ])
-
-    def summarize(key, pdf):
-        pdf = pdf.sort_values(OC)
-        rows = []
-        b = int(key[0])
-        for c in cols:
-            x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-            valid = ~np.isnan(x)
-            n = len(x)
-            nv = int(valid.sum())
-            if adjust:
-                num, den, decay = _ewma_adjust_parts(x, valid, w, ignore_na)
-                rows.append((b, c, float(num[-1]) if n else 0.0,
-                             float(den[-1]) if n else 0.0,
-                             float(decay[-1]) if n else 1.0, n, nv, 0, 0))
-            else:
-                if nv == 0:
-                    rows.append((b, c, 1.0, 0.0, np.nan, n, 0, n, n))
-                else:
-                    fv = int(np.argmax(valid))
-                    lv = n - 1 - int(np.argmax(valid[::-1]))
-                    tail_x, tail_v = x[fv + 1:], valid[fv + 1:]
-                    b0, _ = _ewma_noadjust(tail_x, tail_v, alpha, ignore_na, (0.0, 1.0))
-                    b1, _ = _ewma_noadjust(tail_x, tail_v, alpha, ignore_na, (1.0, 1.0))
-                    e0 = b0[-1] if len(b0) else 0.0
-                    e1 = b1[-1] if len(b1) else 1.0
-                    rows.append((b, c, float(e1 - e0), float(e0), float(x[fv]),
-                                 n, nv, fv, n - 1 - lv))
-        return pd.DataFrame(rows, columns=[f.name for f in sum_schema.fields])
-
-    # pass 1 ships only (block id, order, value columns) into the
-    # Python worker — opaque UDFs block Spark's pruning (guide §4.1)
-    summaries = _pass_summaries(base, [BLK, OC, *cols], summarize,
-                                sum_schema, aligned)
-    per = {}
-    for r in summaries:
-        per.setdefault(r["col"], {})[r["b"]] = r
-    blks = sorted({r["b"] for r in summaries})
-
-    # driver chain: ≤P steps per column
-    states: dict[str, dict[int, tuple]] = {c: {} for c in cols}
-    for c in cols:
-        percol = per.get(c, {})
-        if adjust:
-            num_in = den_in = 0.0
-            for b in blks:
-                states[c][b] = (num_in, den_in)
-                s = percol.get(b)
-                if s is not None:
-                    num_in = s["s1"] + s["s3"] * num_in
-                    den_in = s["s2"] + s["s3"] * den_in
-        else:
-            avg, old_wt, have = np.nan, 1.0, False
-            for b in blks:
-                states[c][b] = (avg if have else np.nan, old_wt)
-                s = percol.get(b)
-                if s is None:
-                    continue
-                if s["n_valid"] == 0:
-                    if (not ignore_na) and have:
-                        old_wt *= w ** s["n_rows"]
-                    continue
-                K = old_wt * (w ** (s["prefix"] if not ignore_na else 0)) * w
-                if have:
-                    avg1 = (K * avg + alpha * s["s3"]) / (K + alpha)
-                else:
-                    avg1 = s["s3"]
-                    have = True
-                avg = s["s1"] * avg1 + s["s2"]
-                old_wt = (w ** s["trailing"]) if not ignore_na else 1.0
-
-    def evaluate(key, pdf):
-        pdf = pdf.sort_values(OC)
-        b = int(key[0])
-        for c in cols:
-            x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-            valid = ~np.isnan(x)
-            st = states[c].get(b)
-            if adjust:
-                num, den, decay = _ewma_adjust_parts(x, valid, w, ignore_na)
-                if st is not None:
-                    num = num + decay * st[0]
-                    den = den + decay * st[1]
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    y = np.where(den > 0, num / den, np.nan)
-            else:
-                st = (np.nan, 1.0) if st is None else st
-                y, _ = _ewma_noadjust(x, valid, alpha, ignore_na,
-                                      None if np.isnan(st[0]) else st)
-            pdf[c] = y
-        return pdf
-
-    out = _pass_evaluate(base, evaluate, in_schema, aligned)
-    return out.drop(BLK, OC)
-
-
-def ewm_var_blocked(sdf: SparkDataFrame, order_col: Column, cols: list[str],
-                    alpha: float, ignore_na: bool, std: bool = False,
-                    n_blocks: int | None = None) -> SparkDataFrame:
-    """Distributed ungrouped EWM variance/std for ``adjust=True`` (the
-    pandas default). The debiased estimator is computed in its PAIRWISE
-    form
-
-        var_t = U_t / (2·T_t),
-        U_t = Σ_{i<j} wᵢwⱼ (xᵢ−xⱼ)²,   T_t = Σ_{i<j} wᵢwⱼ
-
-    (algebraically identical to (S0·S2−S1²)/(S0²−V2), but every term is
-    NONNEGATIVE: no catastrophic cancellation when the history's weight
-    decays toward machine epsilon — there the raw-sums form loses all
-    precision, and the reference's own kernel returns an fp-noise value
-    several % off the true one; fuzz-caught r7, seed 313370091). T and
-    U are per-row affine chains with validity-pattern-only decay w²:
-    the new observation pairs with the decayed prior mass, r_T = S0⁻,
-    r_U = S2⁻ − 2x·S1⁻ + x²·S0⁻ over the PRIOR-ONLY sums (the shifted
-    arrays — subtracting the own-observation terms back out would
-    reintroduce the cancellation). T > 0 is the EXACT one-effective-
-    observation test, replacing the r6 relative-epsilon guard. Block
-    carries stay linear: T/U pick up dec²·T_in plus coefficient sums
-    against the incoming S carries. Centering per block as before
-    (U, T are shift-invariant; S carries re-center with the affine
-    identities). Replaces ``cols`` in place; reference kernel
-    window.pyx:1801."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StringType,
-                                   StructField, StructType)
-
-    w = 1.0 - alpha
-    OC = "__ord__"
-    mono = _is_order_id(order_col)
-    sdf = _pin_if_order(sdf, order_col)
-    base, aligned, _ = _blocked_base(sdf, order_col, n_blocks, mono)
-    for c in cols:
-        base = base.withColumn(c, F.col(c).cast("double"))
-    in_schema = base.schema
-
-    sum_schema = StructType(
-        [StructField("b", LongType()), StructField("col", StringType())]
-        + [StructField(f, DoubleType()) for f in
-           ("s0", "s1", "s2", "dec", "ref", "has",
-            "ta", "tb", "ua", "ub1", "ub0")])
-
-    def _exponents(valid, n):
-        if ignore_na:
-            return np.cumsum(valid.astype(np.float64))
-        return np.arange(1, n + 1, dtype=np.float64)
-
-    def _parts(x, valid, ref):
-        xc = np.where(valid, x - ref, 0.0)
-        s1, s0, dec = _ewma_adjust_parts(xc, valid, w, ignore_na)
-        s2, _, _ = _ewma_adjust_parts(xc * xc, valid, w, ignore_na)
-        return xc, s0, s1, s2, dec
-
-    def _block_ref(x, valid):
-        return float(x[np.argmax(valid)]) if valid.any() else 0.0
-
-    def _pair_coeffs(xc, valid, s0, s1, s2, dec, e):
-        """Block-local pieces of the pairwise chains: shifted (prior-
-        only) local sums feed r; wrev = w^{2(E_n−E_t)} folds every row
-        to the block end; decb = w^{E_{t−1}} is the coefficient any
-        incoming S carry picks up inside r."""
-        sd = w ** np.diff(e, prepend=0.0)
-        S0b = sd * np.concatenate(([0.0], s0[:-1]))
-        S1b = sd * np.concatenate(([0.0], s1[:-1]))
-        S2b = sd * np.concatenate(([0.0], s2[:-1]))
-        wrev = w ** (2.0 * (e[-1] - e))
-        v = valid.astype(np.float64)
-        # an incoming S carry appears inside r_t as sd_t·dec_{t-1}·S_in
-        # = dec_t·S_in — the coefficient is the CURRENT row's decay
-        ta = float(np.sum(wrev * v * S0b))
-        tb = float(np.sum(wrev * v * dec))
-        ua = float(np.sum(wrev * v * (S2b - 2.0 * xc * S1b + xc * xc * S0b)))
-        ub1 = float(np.sum(wrev * v * dec * (-2.0 * xc)))
-        ub0 = float(np.sum(wrev * v * dec * xc * xc))
-        return ta, tb, ua, ub1, ub0
-
-    def summarize(key, pdf):
-        pdf = pdf.sort_values(OC)
-        b = int(key[0])
-        rows = []
-        for c in cols:
-            x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-            valid = ~np.isnan(x)
-            n = len(x)
-            if n == 0:
-                rows.append((b, c, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0,
-                             0.0, 0.0, 0.0, 0.0, 0.0))
-                continue
-            ref = _block_ref(x, valid)
-            xc, s0, s1, s2, dec = _parts(x, valid, ref)
-            e = _exponents(valid, n)
-            ta, tb, ua, ub1, ub0 = _pair_coeffs(xc, valid, s0, s1, s2, dec, e)
-            rows.append((b, c, float(s0[-1]), float(s1[-1]), float(s2[-1]),
-                         float(dec[-1]), ref, float(valid.any()),
-                         ta, tb, ua, ub1, ub0))
-        return pd.DataFrame(rows, columns=[f.name for f in sum_schema.fields])
-
-    # pass 1 ships only (block id, order, value columns) — guide §4.1
-    summaries = _pass_summaries(base, [BLK, OC, *cols], summarize,
-                                sum_schema, aligned)
-    per: dict = {}
-    for r in summaries:
-        per.setdefault(r["col"], {})[r["b"]] = r
-    blks = sorted({r["b"] for r in summaries})
-
-    # state[b] = (S0, S1, S2, T, U, ref): S sums centered at the SAME
-    # reference the block uses; T/U are shift-invariant
-    states: dict[str, dict[int, tuple]] = {c: {} for c in cols}
-    for c in cols:
-        S0 = S1 = S2 = T = U = 0.0
-        cur_ref = None
-        for b in blks:
-            s = per.get(c, {}).get(b)
-            ref = (s["ref"] if s is not None and s["has"] > 0
-                   else (cur_ref if cur_ref is not None else 0.0))
-            if cur_ref is not None and cur_ref != ref:
-                d = cur_ref - ref
-                S2 = S2 + 2.0 * d * S1 + d * d * S0
-                S1 = S1 + d * S0
-            states[c][b] = (S0, S1, S2, T, U, ref)
-            if s is not None:
-                dec2 = s["dec"] * s["dec"]
-                # T/U first: their r terms use the INCOMING S carries
-                T = dec2 * T + s["ta"] + s["tb"] * S0
-                U = (dec2 * U + s["ua"] + s["ub1"] * S1 + s["ub0"] * S0
-                     + s["tb"] * S2)
-                S0 = s["s0"] + s["dec"] * S0
-                S1 = s["s1"] + s["dec"] * S1
-                S2 = s["s2"] + s["dec"] * S2
-            cur_ref = ref
-
-    def evaluate(key, pdf):
-        pdf = pdf.sort_values(OC)
-        b = int(key[0])
-        for c in cols:
-            x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-            valid = ~np.isnan(x)
-            n = len(x)
-            if n == 0:
-                continue
-            st = states[c].get(b)
-            if st is not None and (st[0] > 0 or st[5] != 0.0):
-                ref = st[5]
-            else:
-                ref = _block_ref(x, valid)
-            S0in, S1in, S2in, Tin, Uin = (st[:5] if st is not None
-                                          else (0.0, 0.0, 0.0, 0.0, 0.0))
-            xc, s0, s1, s2, dec = _parts(x, valid, ref)
-            s0 = s0 + dec * S0in
-            s1 = s1 + dec * S1in
-            s2 = s2 + dec * S2in
-            e = _exponents(valid, n)
-            sd = w ** np.diff(e, prepend=0.0)
-            S0b = sd * np.concatenate(([S0in], s0[:-1]))
-            S1b = sd * np.concatenate(([S1in], s1[:-1]))
-            S2b = sd * np.concatenate(([S2in], s2[:-1]))
-            v = valid.astype(np.float64)
-            p = sd * sd
-            T = _chain_solve(p, v * S0b, Tin)
-            U = _chain_solve(p, v * (S2b - 2.0 * xc * S1b + xc * xc * S0b),
-                             Uin)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                var = np.where(T > 0.0, np.maximum(U, 0.0) / (2.0 * T),
-                               np.nan)
-            seen = (np.maximum.accumulate(valid.astype(np.int8)) > 0) \
-                | (st is not None and st[0] > 0)
-            var = np.where(seen, var, np.nan)
-            pdf[c] = np.sqrt(var) if std else var
-        return pdf
-
-    out = _pass_evaluate(base, evaluate, in_schema, aligned)
-    return out.drop(BLK, OC)
-
-
-# ---------------------------------------------------------------------------
-# EWM second moments, distributed: pairwise cov/corr (both adjust modes)
-# and adjust=False var/std. Closes the last unguarded single-task surface
-# (pre-r7 these fell back to coalesce(1) in window.EWM._run/_run_pairwise).
-# Reference kernel: window.pyx:1802 ewmcov — per-observation recursion
-#   p = W/(W+a) (adjust=False, W = w^gap; old_wt renormalized to 1) or
-#   p = ow*W/(ow*W+1) (adjust=True), q = 1-p,
-#   mean' = p*mean + q*x,
-#   cov'  = p*(cov + (mean-mean')*(omean-omean')) + q*(x-mean')*(y-mean'),
-#   sum_wt' / sum_wt2' track the debias factor sw^2/(sw^2-sw2).
-# Debias denominator: with adjust=False renormalization sw == 1, so the
-# reference's den = sw^2 - sw2 is 1-(≈1) — catastrophic right after a
-# long gap (one effective observation, sw2 -> 1). This engine carries
-# the COMPLEMENT dw = 1-sw2 through its own recursion instead:
-#   dw' = 1 - (p^2*sw2 + q^2) = p^2*dw + 2pq      (p+q = 1)
-# — all-positive terms, cancellation-free, same affine shape (multiplier
-# p^2) as the sw2 chain it replaces. r10: at the degenerate rows the
-# sw2 form was 1.4e-4 off a 60-digit replication of the reference
-# recursion across a block carry; the dw form is exact there.
-# adjust=True is a pure discounted-sum computation (no renormalization), so
-# it rides the ewm_var_blocked machinery extended to pair sums.
-# adjust=False renormalizes per observation, which breaks pure sums when
-# NaN gaps meet ignore_na=False — but every per-observation update is
-# AFFINE in the state with coefficients that depend only on the validity
-# pattern, so per-block transitions are exactly representable: affine in
-# (mean, sum_wt, cov) with a quadratic/bilinear mean correction captured
-# by basis evaluation. Parallel summarize -> <=P-step driver fold ->
-# parallel evaluate; no task ever sees more than one block.
-# ---------------------------------------------------------------------------
-
-
 def _chain_solve(p, r, init=0.0):
     """Vectorized s_j = p_j*s_{j-1} + r_j with s_{-1}=init, 0 <= p_j < 1.
 
     Log-space chunking keeps the cumulative-product trick in fp range:
     chunks are cut when the accumulated decay exceeds e^-250 (older
-    contributions are < 1e-108 relative — below double noise), and an
-    exact p_j == 0 (a gap long enough that w^gap underflowed) is an
-    exact reset handled as a scalar step."""
+    contributions are < 1e-108 relative — below double noise). A step
+    with p_j below 2^-52 runs alone as an exact scalar step: inside a
+    chunk it would be cp·(carry + r/cp), which rounds the carry away —
+    an absolute error of eps·|r| where the true s_j − r_j is only
+    p_j·carry (after a long gap, adjust=False's x − mean is that small,
+    and the blown-up error reached var ≈ 1e64). A run of exact zeros
+    (resets) is s = r."""
     import numpy as np
 
     k = len(p)
     out = np.empty(k, dtype=np.float64)
     if k == 0:
         return out
-    with np.errstate(divide="ignore"):
-        lp = np.where(p > 0.0, np.log(p), -1e9)
+    tiny = p < 2.0 ** -52
+    lp = np.where(tiny, -1e9, np.log(np.where(tiny, 1.0, p)))
     cl = np.cumsum(-lp)
+    nonzero = np.flatnonzero(p != 0.0)
     carry = float(init)
     start = 0
     CLOG = 250.0
     while start < k:
+        if p[start] == 0.0:
+            i = int(np.searchsorted(nonzero, start))
+            stop = int(nonzero[i]) if i < len(nonzero) else k
+            out[start:stop] = r[start:stop]
+            carry = float(out[stop - 1])
+            start = stop
+            continue
         base = cl[start - 1] if start else 0.0
         stop = int(np.searchsorted(cl, base + CLOG, side="right"))
         if stop <= start:
@@ -2466,15 +2129,176 @@ def _chain_solve(p, r, init=0.0):
     return out
 
 
-def _ewmf_scalar_step(state, x, y, d, alpha):
-    """One observation of the adjust=False recursion (window.pyx:1802),
-    applied driver-side at a block boundary. d = decay steps since the
-    previous observation."""
-    mx, my, cxy, cxx, cyy, sw, dw = state
+# ---- sums family (adjust=True, alpha < 1) ---------------------------
+
+_EWMS_SUMS = ("s0", "sx", "sy", "sxy", "sxx", "syy")
+# pairwise chain -> its product sum
+_EWMS_PAIRS = {"xy": "sxy", "xx": "sxx", "yy": "syy"}
+
+
+def _ewms_sums(x, y, valid, need, rx, ry, w, ignore_na):
+    """One block's local discounted sums centred at (rx, ry) — only
+    those ``need`` reads — plus the centred operands and the decay."""
+    import numpy as np
+
+    xc = np.where(valid, x - rx, 0.0)
+    yc = np.where(valid, y - ry, 0.0)
+
+    def disc(v):
+        return _ewma_adjust_parts(v, valid, w, ignore_na)[0]
+
+    sx, s0, dec = _ewma_adjust_parts(xc, valid, w, ignore_na)
+    S = {"s0": s0, "sx": sx}
+    if need & {"xy", "yy"}:
+        S["sy"] = disc(yc)
+    if "xy" in need:
+        S["sxy"] = disc(xc * yc)
+    if "xx" in need:
+        S["sxx"] = disc(xc * xc)
+    if "yy" in need:
+        S["syy"] = disc(yc * yc)
+    return S, xc, yc, dec
+
+
+def _ewms_terms(pair, xc, yc):
+    """How one row's pairwise-chain input reads the centred PRIOR sums
+    besides the pair's product sum (factor 1): r = P_ab + Σ factor·P_k,
+    the new observation paired with the decayed prior mass."""
+    if pair == "xy":
+        return {"sx": -yc, "sy": -xc, "s0": xc * yc}
+    a, k = (xc, "sx") if pair == "xx" else (yc, "sy")
+    return {k: -2.0 * a, "s0": a * a}
+
+
+def _ewms_r(pair, xc, yc, P):
+    r = P[_EWMS_PAIRS[pair]]
+    for k, f in _ewms_terms(pair, xc, yc).items():
+        r = r + f * P[k]
+    return r
+
+
+def _ewms_exponents(valid, ignore_na):
+    import numpy as np
+
+    if ignore_na:
+        return np.cumsum(valid.astype(np.float64))
+    return np.arange(1, len(valid) + 1, dtype=np.float64)
+
+
+def _ewms_summary(x, y, valid, need, alpha, ignore_na):
+    """Block summary from zero state: end sums, total decay, centring
+    refs, and the pairwise chains' end values plus their coefficients
+    against every incoming sum (the carry stays linear)."""
+    import numpy as np
+
+    w = 1.0 - alpha
+    if not valid.any():
+        return {"dec": w ** (0 if ignore_na else len(x))}
+    fv = int(np.argmax(valid))
+    rx, ry = float(x[fv]), float(y[fv])
+    S, xc, yc, dec = _ewms_sums(x, y, valid, need, rx, ry, w, ignore_na)
+    out = {k: float(a[-1]) for k, a in S.items()}
+    out.update(dec=float(dec[-1]), rx=rx, ry=ry)
+    pairs = need & _EWMS_PAIRS.keys()
+    if pairs:
+        e = _ewms_exponents(valid, ignore_na)
+        sd = w ** np.diff(e, prepend=0.0)
+        # wv folds each row to the block end; an incoming sum appears
+        # inside r_t as sd_t·dec_{t-1}·S_in = dec_t·S_in
+        wv = w ** (2.0 * (e[-1] - e)) * valid
+        wd = wv * dec
+        P = {k: sd * np.concatenate(([0.0], a[:-1])) for k, a in S.items()}
+        out["ta"] = float(np.sum(wv * P["s0"]))
+        out["tb"] = float(np.sum(wd))
+        for pair in pairs:
+            out[f"u{pair}"] = float(np.sum(wv * _ewms_r(pair, xc, yc, P)))
+            for k, f in _ewms_terms(pair, xc, yc).items():
+                out[f"u{pair}_{k}"] = float(np.sum(wd * f))
+    return out
+
+
+def _ewms_fold(st, s, n, k, alpha, ignore_na):
+    """Entry state of this block (sums re-centred at its refs) and the
+    state after it; the summary's decay already holds alpha and the gap
+    rule."""
+    st = dict(st or {"rx": None, "t": 0.0, "uxy": 0.0, "uxx": 0.0,
+                     "uyy": 0.0, **dict.fromkeys(_EWMS_SUMS, 0.0)})
+    if k:
+        ref = (s["rx"], s["ry"])
+    else:
+        ref = (st["rx"], st["ry"]) if st["rx"] is not None else (0.0, 0.0)
+    if st["rx"] is not None and (st["rx"], st["ry"]) != ref:
+        dx, dy = st["rx"] - ref[0], st["ry"] - ref[1]
+        st["sxy"] = st["sxy"] + dy * st["sx"] + dx * st["sy"] + dx * dy * st["s0"]
+        st["sxx"] = st["sxx"] + 2.0 * dx * st["sx"] + dx * dx * st["s0"]
+        st["syy"] = st["syy"] + 2.0 * dy * st["sy"] + dy * dy * st["s0"]
+        st["sx"] = st["sx"] + dx * st["s0"]
+        st["sy"] = st["sy"] + dy * st["s0"]
+    st["rx"], st["ry"] = ref
+    entry = dict(st)
+    dec = s.get("dec", 1.0)
+    d2 = dec * dec
+    tb = s.get("tb", 0.0)
+    # T/U first: their carry terms read the INCOMING sums
+    st["t"] = d2 * st["t"] + s.get("ta", 0.0) + tb * st["s0"]
+    for pair, prod in _EWMS_PAIRS.items():
+        u = d2 * st[f"u{pair}"] + s.get(f"u{pair}", 0.0)
+        for r in ("sx", "sy", "s0"):
+            u = u + s.get(f"u{pair}_{r}", 0.0) * st[r]
+        st[f"u{pair}"] = u + tb * st[prod]
+    for key in _EWMS_SUMS:
+        st[key] = s.get(key, 0.0) + dec * st[key]
+    return entry, st
+
+
+def _ewms_evaluate(x, y, valid, need, st, alpha, ignore_na):
+    """Per-row statistics of one block from its entry state ``st``."""
+    import numpy as np
+
+    w = 1.0 - alpha
+    S, xc, yc, dec = _ewms_sums(x, y, valid, need, st["rx"], st["ry"], w,
+                                ignore_na)
+    S = {k: a + dec * st[k] for k, a in S.items()}
+    out = {}
+    with np.errstate(invalid="ignore", divide="ignore"):
+        if "mean" in need:
+            out["mean"] = np.where(S["s0"] > 0.0, st["rx"] + S["sx"] / S["s0"],
+                                   np.nan)
+        pairs = need & _EWMS_PAIRS.keys()
+        if not pairs:
+            return out
+        sd = w ** np.diff(_ewms_exponents(valid, ignore_na), prepend=0.0)
+        P = {k: sd * np.concatenate(([st[k]], a[:-1])) for k, a in S.items()}
+        p2 = sd * sd
+        T = _chain_solve(p2, valid * P["s0"], st["t"])
+        U = {pair: _chain_solve(p2, valid * _ewms_r(pair, xc, yc, P),
+                                st[f"u{pair}"]) for pair in pairs}
+        if "xy" in U:
+            out["cov"] = np.where(T > 0.0, U["xy"] / (2.0 * T), np.nan)
+        if "xx" in U:
+            out["var"] = np.where(T > 0.0, np.maximum(U["xx"], 0.0) / (2.0 * T),
+                                  np.nan)
+        if "yy" in U:
+            out["corr"] = U["xy"] / np.sqrt(np.maximum(U["xx"], 0.0)
+                                            * np.maximum(U["yy"], 0.0))
+    return out
+
+
+# ---- renorm family (adjust=False, or alpha == 1) --------------------
+
+
+def _ewmr_pq(d, alpha):
     w = 1.0 - alpha
     W = w ** d
-    p = W / (W + alpha)
-    q = alpha / (W + alpha)
+    return W / (W + alpha), alpha / (W + alpha)
+
+
+def _ewmr_scalar_step(state, x, y, d, alpha):
+    """One observation of the renormalized recursion (window.pyx:1802),
+    applied driver-side at a block boundary. d = decay steps since the
+    previous observation."""
+    mx, my, cxy, cxx, cyy, dw = state
+    p, q = _ewmr_pq(d, alpha)
     # reference guards each mean INDEPENDENTLY (window.pyx:1871-1878:
     # `if mean_x != cur_x`, `if mean_y != cur_y` — modern pandas
     # ewmcov keeps the same two separate guards): a value exactly
@@ -2485,580 +2309,320 @@ def _ewmf_scalar_step(state, x, y, d, alpha):
     ncxy = p * (cxy + (mx - nmx) * (my - nmy)) + q * (x - nmx) * (y - nmy)
     ncxx = p * (cxx + (mx - nmx) ** 2) + q * (x - nmx) ** 2
     ncyy = p * (cyy + (my - nmy) ** 2) + q * (y - nmy) ** 2
-    return (nmx, nmy, ncxy, ncxx, ncyy, p * sw + q,
-            p * p * dw + 2.0 * p * q)
+    return nmx, nmy, ncxy, ncxx, ncyy, p * p * dw + 2.0 * p * q
 
 
-def _ewmf_chains(xo, yo, d, alpha, cold, state, covs):
-    """Per-observation chains of the adjust=False recursion over one
+def _ewmr_cov_input(which, p, q, xo, yo, mx, my, mx0, my0):
+    """Per-observation input of one covariance chain given the mean
+    chains (and their incoming values mx0/my0)."""
+    import numpy as np
+
+    mxm1 = np.concatenate(([mx0], mx[:-1]))
+    if which == "xx":
+        return p * (mxm1 - mx) ** 2 + q * (xo - mx) ** 2
+    mym1 = np.concatenate(([my0], my[:-1]))
+    if which == "yy":
+        return p * (mym1 - my) ** 2 + q * (yo - my) ** 2
+    return p * (mxm1 - mx) * (mym1 - my) + q * (xo - mx) * (yo - my)
+
+
+def _ewmr_chains(xo, yo, d, alpha, cold, state, need):
+    """Per-observation chains of the renormalized recursion over one
     block. xo/yo are CENTERED observation values (centering shifts both
     the data and the incoming means, to which every covariance is
     invariant — the constant-series case then stays exactly zero).
-    state = centered (mx, my, cxy, cxx, cyy, sw, dw); ignored when
-    cold (dw = 1 - sum_wt2, the cancellation-free debias complement).
-    Returns per-obs arrays for mx, my, sw, dw + requested covs."""
-    import numpy as np
-
-    w = 1.0 - alpha
-    W = w ** d
-    p = W / (W + alpha)
-    q = alpha / (W + alpha)
+    state = centered (mx, my, cxy, cxx, cyy, dw); ignored when cold.
+    Returns per-obs arrays: mx, plus my, dw and the covariance chains
+    ``need`` asks for."""
+    p, q = _ewmr_pq(d, alpha)
     if cold:
         p[0], q[0] = 0.0, 1.0
-    mx0, my0, cxy0, cxx0, cyy0, sw0, dw0 = state
-    mx = _chain_solve(p, q * xo, mx0)
-    my = _chain_solve(p, q * yo, my0)
-    mxm1 = np.concatenate(([mx0], mx[:-1]))
-    mym1 = np.concatenate(([my0], my[:-1]))
-    out = {"mx": mx, "my": my}
-    if "xy" in covs:
-        rc = p * (mxm1 - mx) * (mym1 - my) + q * (xo - mx) * (yo - my)
-        out["xy"] = _chain_solve(p, rc, cxy0)
-    if "xx" in covs:
-        rc = p * (mxm1 - mx) ** 2 + q * (xo - mx) ** 2
-        out["xx"] = _chain_solve(p, rc, cxx0)
-    if "yy" in covs:
-        rc = p * (mym1 - my) ** 2 + q * (yo - my) ** 2
-        out["yy"] = _chain_solve(p, rc, cyy0)
-    out["sw"] = _chain_solve(p, q, sw0)
-    out["dw"] = _chain_solve(p * p, 2.0 * p * q, dw0)
+    mx0, my0, cxy0, cxx0, cyy0, dw0 = state
+    out = {"mx": _chain_solve(p, q * xo, mx0)}
+    if need & {"xy", "yy"}:
+        out["my"] = _chain_solve(p, q * yo, my0)
+    for which, c0 in (("xy", cxy0), ("xx", cxx0), ("yy", cyy0)):
+        if which in need:
+            rc = _ewmr_cov_input(which, p, q, xo, yo, out["mx"],
+                                 out.get("my"), mx0, my0)
+            out[which] = _chain_solve(p, rc, c0)
+    if need & {"xy", "xx"}:
+        out["dw"] = _chain_solve(p * p, 2.0 * p * q, dw0)
     return out
 
 
-def _ewmf_tail_transition(xo, yo, d, alpha, covs):
+def _ewmr_tail_transition(xo, yo, d, alpha, need):
     """Block transition over the tail observations (everything after the
-    block's first observation; the first observation is applied by the
-    driver fold as one exact scalar step, because its decay gap depends
-    on the still-unknown cross-block pregap).
+    block's first observation, which the fold applies as one exact
+    scalar step).
 
     Every chain is affine in its own incoming value with a coefficient
-    A = prod(p_j) that depends only on the validity pattern; the cov
+    a = prod(p_j) that depends only on the validity pattern; the cov
     chains additionally pick up a quadratic (xx/yy) or bilinear (xy)
     correction in the incoming CENTERED means, recovered exactly by
     basis evaluation (the transition is a polynomial, so finitely many
     evaluations determine it)."""
     import numpy as np
 
-    k = len(xo)
-    res = {"a": 1.0, "a2": 1.0, "bx": 0.0, "by": 0.0, "bs": 0.0, "bs2": 0.0,
-           "gxy": (0.0, 0.0, 0.0, 0.0), "gxx": (0.0, 0.0, 0.0),
-           "gyy": (0.0, 0.0, 0.0)}
-    if k == 0:
+    res = {"a": 1.0, "a2": 1.0}
+    if len(xo) == 0:
         return res
-    w = 1.0 - alpha
-    W = w ** d
-    p = W / (W + alpha)
-    q = alpha / (W + alpha)
+    p, q = _ewmr_pq(d, alpha)
     with np.errstate(divide="ignore"):
         lp = np.where(p > 0.0, np.log(p), -np.inf)
     res["a"] = a = float(np.exp(np.sum(lp)))
     res["a2"] = a * a
-    bx_arr = _chain_solve(p, q * xo, 0.0)
-    by_arr = _chain_solve(p, q * yo, 0.0)
-    res["bx"] = float(bx_arr[-1])
-    res["by"] = float(by_arr[-1])
-    res["bs"] = float(_chain_solve(p, q, 0.0)[-1])
-    # dw-chain tail constant (see module comment: dw' = p²·dw + 2pq)
-    res["bs2"] = float(_chain_solve(p * p, 2.0 * p * q, 0.0)[-1])
+    bx = _chain_solve(p, q * xo, 0.0)
+    by = _chain_solve(p, q * yo, 0.0) if need & {"xy", "yy"} else None
+    res["bx"] = float(bx[-1])
+    if by is not None:
+        res["by"] = float(by[-1])
+    if need & {"xy", "xx"}:
+        res["bs2"] = float(_chain_solve(p * p, 2.0 * p * q, 0.0)[-1])
     with np.errstate(invalid="ignore"):
         cp = np.exp(np.cumsum(lp))
 
     def covF(a0, b0, which):
-        mx = cp * a0 + bx_arr
-        my = cp * b0 + by_arr
-        mxm1 = np.concatenate(([a0], mx[:-1]))
-        mym1 = np.concatenate(([b0], my[:-1]))
-        if which == "xy":
-            rc = p * (mxm1 - mx) * (mym1 - my) + q * (xo - mx) * (yo - my)
-        elif which == "xx":
-            rc = p * (mxm1 - mx) ** 2 + q * (xo - mx) ** 2
-        else:
-            rc = p * (mym1 - my) ** 2 + q * (yo - my) ** 2
+        rc = _ewmr_cov_input(which, p, q, xo, yo, cp * a0 + bx,
+                             None if by is None else cp * b0 + by, a0, b0)
         return float(_chain_solve(p, rc, 0.0)[-1])
 
     # basis scale ~ data magnitude so the finite differences don't
     # cancel significant digits
     s = max(1.0, float(np.max(np.abs(xo))), float(np.max(np.abs(yo))))
-    if "xy" in covs:
+    if "xy" in need:
         f00 = covF(0.0, 0.0, "xy")
         f10 = covF(s, 0.0, "xy")
         f01 = covF(0.0, s, "xy")
         f11 = covF(s, s, "xy")
-        res["gxy"] = (f00, (f10 - f00) / s, (f01 - f00) / s,
-                      (f11 - f10 - f01 + f00) / (s * s))
-    if "xx" in covs:
-        f0 = covF(0.0, 0.0, "xx")
-        f1 = covF(s, 0.0, "xx")
-        f2 = covF(2.0 * s, 0.0, "xx")
-        h2 = (f2 - 2.0 * f1 + f0) / (2.0 * s * s)
-        res["gxx"] = (f0, (f1 - f0) / s - h2 * s, h2)
-    if "yy" in covs:
-        f0 = covF(0.0, 0.0, "yy")
-        f1 = covF(0.0, s, "yy")
-        f2 = covF(0.0, 2.0 * s, "yy")
-        h2 = (f2 - 2.0 * f1 + f0) / (2.0 * s * s)
-        res["gyy"] = (f0, (f1 - f0) / s - h2 * s, h2)
+        res.update(gxy0=f00, gxy1=(f10 - f00) / s, gxy2=(f01 - f00) / s,
+                   gxy3=(f11 - f10 - f01 + f00) / (s * s))
+    for which, basis in (("xx", (1.0, 0.0)), ("yy", (0.0, 1.0))):
+        if which in need:
+            f0 = covF(0.0, 0.0, which)
+            f1 = covF(s * basis[0], s * basis[1], which)
+            f2 = covF(2.0 * s * basis[0], 2.0 * s * basis[1], which)
+            h2 = (f2 - 2.0 * f1 + f0) / (2.0 * s * s)
+            res.update({f"g{which}0": f0, f"g{which}1": (f1 - f0) / s - h2 * s,
+                        f"g{which}2": h2})
     return res
 
 
-def _ewmf_stat(stat, sw, dw, xy=None, xx=None, yy=None):
+def _ewmr_stat(stat, dw, xy=None, xx=None, yy=None):
     """Final statistic from chain values (arrays or scalars). The
-    reference's debias factor is sw²/(sw²−sw2); adjust=False keeps
-    sw ≡ 1 (p+q = 1), so the denominator is exactly the carried
-    complement dw = 1−sw2 — evaluated directly, never as a 1−(≈1)
-    difference (r10 precision fix). corr is the bias=True ratio (the
-    factor cancels)."""
+    reference's debias factor is sw²/(sw²−sw2); the renormalized
+    recursion keeps sw ≡ 1 (p+q = 1), so the denominator is exactly the
+    carried complement dw = 1−sw2 — evaluated directly, never as a
+    1−(≈1) difference. corr is the bias=True ratio (the factor
+    cancels)."""
     import numpy as np
 
     with np.errstate(invalid="ignore", divide="ignore"):
         if stat == "corr":
-            out = np.asarray(xy) / np.sqrt(np.asarray(xx) * np.asarray(yy))
-        else:
-            src = xx if stat in ("var", "std") else xy
-            den = np.asarray(dw, dtype=np.float64)
-            out = np.where(den > 0.0, np.asarray(src) / den, np.nan)
-            if stat == "std":
-                out = np.sqrt(out)
+            return np.asarray(xy) / np.sqrt(np.asarray(xx) * np.asarray(yy))
+        src = xx if stat == "var" else xy
+        den = np.asarray(dw, dtype=np.float64)
+        return np.where(den > 0.0, np.asarray(src) / den, np.nan)
+
+
+def _ewm_stats(need):
+    """Statistics a component's chains yield (std is sqrt(var))."""
+    return [stat for stat, chain in (("mean", "mean"), ("var", "xx"),
+                                     ("cov", "xy"), ("corr", "yy"))
+            if chain in need]
+
+
+def _ewmr_obs(x, y, valid, ignore_na):
+    """A block's observation positions, its first observation (x0, y0)
+    and the decay steps between consecutive observations."""
+    import numpy as np
+
+    pos = np.flatnonzero(valid)
+    d = (np.diff(pos).astype(np.float64) if not ignore_na
+         else np.ones(len(pos) - 1))
+    return pos, float(x[pos[0]]), float(y[pos[0]]), d
+
+
+def _ewmr_summary(x, y, valid, need, alpha, ignore_na):
+    """Block summary: the first observation (applied by the fold) and
+    the tail transition over the rest."""
+    if not valid.any():
+        return {}
+    pos, x0, y0, d = _ewmr_obs(x, y, valid, ignore_na)
+    xo = x[pos[1:]] - x0
+    yo = y[pos[1:]] - y0
+    out = _ewmr_tail_transition(xo, yo, d, alpha, need)
+    out.update(x0=x0, y0=y0, pos0=float(pos[0]),
+               trail=float(len(x) - 1 - pos[-1]))
     return out
 
 
-def ewm_noadjust_blocked(sdf: SparkDataFrame, order_col: Column, specs,
-                         alpha: float, ignore_na: bool,
-                         n_blocks: int | None = None) -> SparkDataFrame:
-    """Distributed ungrouped ``ewm(adjust=False)`` second moments.
+def _ewmr_fold(st, s, n, k, alpha, ignore_na):
+    """Entry (uncentered state or None, pregap) of this block and the
+    one after it: ≤P exact scalar steps + affine tail transitions."""
+    st = st or (None, 0)
+    state, pregap = st
+    if not k:
+        if (not ignore_na) and state is not None:
+            pregap += n
+        return st, (state, pregap)
+    x0, y0 = s["x0"], s["y0"]
+    if state is None:
+        # after the first observation: sw = 1, dw = 1-sw2 = 0
+        state = (x0, y0, 0.0, 0.0, 0.0, 0.0)
+    else:
+        d0 = 1.0 if ignore_na else float(pregap + s["pos0"] + 1)
+        state = _ewmr_scalar_step(state, x0, y0, d0, alpha)
+    g = s.get
+    a = s["a"]
+    cx, cy = state[0] - x0, state[1] - y0
+    state = (a * cx + g("bx", 0.0) + x0,
+             a * cy + g("by", 0.0) + y0,
+             a * state[2] + g("gxy0", 0.0) + g("gxy1", 0.0) * cx
+             + g("gxy2", 0.0) * cy + g("gxy3", 0.0) * cx * cy,
+             a * state[3] + g("gxx0", 0.0) + g("gxx1", 0.0) * cx
+             + g("gxx2", 0.0) * cx * cx,
+             a * state[4] + g("gyy0", 0.0) + g("gyy1", 0.0) * cy
+             + g("gyy2", 0.0) * cy * cy,
+             s["a2"] * state[5] + g("bs2", 0.0))
+    return st, (state, 0 if ignore_na else int(s["trail"]))
 
-    specs: list of ("var"|"std", col, out_col) or
-    ("cov"|"corr", col_x, col_y, out_col); out_col == source col
-    replaces in place. All specs share one block partition, one
-    summarize job and one evaluation pass. Replaces the pre-r7
-    coalesce(1) fallback (window.py EWM._run) — the last unguarded
-    single-task surface. Reference recursion: window.pyx:1802 ewmcov."""
+
+def _ewmr_evaluate(x, y, valid, need, st, alpha, ignore_na):
+    """Per-row statistics of one block from its entry ``st``: every
+    chain runs over the observations, rows between them keep the last
+    observation's value (the incoming one before the first)."""
+    import numpy as np
+
+    state, pregap = st
+    n = len(x)
+    stats = _ewm_stats(need)
+    if state is None:
+        vin = dict.fromkeys(stats, np.nan)
+    else:
+        vin = {"mean": state[0]}
+        vin.update({stat: float(_ewmr_stat(stat, state[5], state[2],
+                                           state[3], state[4]))
+                    for stat in stats if stat != "mean"})
+    if not valid.any():
+        return {stat: np.full(n, vin[stat]) for stat in stats}
+    pos, x0, y0, d = _ewmr_obs(x, y, valid, ignore_na)
+    if state is None:
+        d0 = 1.0
+        cstate = (0.0,) * 6
+    else:
+        d0 = 1.0 if ignore_na else float(pregap + pos[0] + 1)
+        cstate = (state[0] - x0, state[1] - y0) + tuple(state[2:])
+    ch = _ewmr_chains(x[pos] - x0, y[pos] - y0, np.concatenate(([d0], d)),
+                      alpha, state is None, cstate, need)
+    idx = np.searchsorted(pos, np.arange(n), side="right")
+    out = {}
+    for stat in stats:
+        obs = (ch["mx"] + x0 if stat == "mean" else
+               _ewmr_stat(stat, ch.get("dw"), ch.get("xy"), ch.get("xx"),
+                          ch.get("yy")))
+        out[stat] = np.concatenate(([vin[stat]], obs))[idx]
+    return out
+
+
+# family -> (summary, fold, evaluate)
+_EWM_FAMILIES = {
+    "sums": (_ewms_summary, _ewms_fold, _ewms_evaluate),
+    "renorm": (_ewmr_summary, _ewmr_fold, _ewmr_evaluate),
+}
+_EWM_NEED = {"mean": {"mean"}, "var": {"xx"}, "std": {"xx"}, "cov": {"xy"},
+             "corr": {"xy", "xx", "yy"}}
+
+
+def ewm_blocked(sdf: SparkDataFrame, order_col: Column, specs, alpha: float,
+                adjust: bool, ignore_na: bool, min_periods: int = 0,
+                n_blocks: int | None = None) -> SparkDataFrame:
+    """Distributed ungrouped EWM: every statistic and adjust mode on one
+    layout, one summary pass, one driver fold and one evaluate pass.
+
+    specs: list of (stat, x, y, out) with stat in mean/var/std/cov/corr;
+    a one-column statistic passes y == x. out == an input column
+    replaces it in place; input columns come back as double. Rows with
+    fewer than min_periods observations of their component (pairwise
+    for cov/corr) are NaN."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (BooleanType, DoubleType, LongType,
-                                   StringType, StructField, StructType)
+    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                                   MapType, StringType, StructField,
+                                   StructType)
 
-    # component = one (x, y, validity) chain family; specs may share
-    comps: dict[str, tuple] = {}
-    for sp in specs:
-        if sp[0] in ("var", "std"):
-            key, cx, cy, need = f"v:{sp[1]}", sp[1], sp[1], ("xx",)
-        else:
-            key, cx, cy = f"p:{sp[1]}:{sp[2]}", sp[1], sp[2]
-            need = ("xy",) if sp[0] == "cov" else ("xy", "xx", "yy")
-        if key in comps:
-            old = comps[key]
-            comps[key] = (old[0], old[1], tuple(sorted(set(old[2]) | set(need))))
-        else:
-            comps[key] = (cx, cy, need)
-
-    if alpha >= 1.0:
-        # w == 0: one effective observation forever -> every unbiased
-        # second moment (and corr = 0/0) is NaN, as the reference
-        out = sdf
-        for sp in specs:
-            oc = sp[2] if sp[0] in ("var", "std") else sp[3]
-            out = out.withColumn(oc, F.lit(None).cast("double"))
-        return out
+    needs: dict[tuple, set] = {}
+    for stat, cx, cy, _ in specs:
+        needs.setdefault((cx, cy), set()).update(_EWM_NEED[stat])
+    comps = sorted(needs.items())
+    outs = [[(stat, oc) for stat, cx, cy, oc in specs if (cx, cy) == comp]
+            for comp, _ in comps]
+    summary, fold, evaluate_comp = _EWM_FAMILIES[
+        "sums" if adjust and alpha < 1.0 else "renorm"]
+    minp = max(int(min_periods), 1)
+    cols = sorted({c for (cx, cy), _ in comps for c in (cx, cy)})
 
     OC = "__ord__"
-    mono = _is_order_id(order_col)
     sdf = _pin_if_order(sdf, order_col)
-    base, aligned, _ = _blocked_base(sdf, order_col, n_blocks, mono)
-    for c in {c for cx, cy, _ in comps.values() for c in (cx, cy)}:
-        base = base.withColumn(c, F.col(c).cast("double"))
+    base, aligned, _ = _blocked_base(sdf, order_col, n_blocks,
+                                     _is_order_id(order_col))
+    base = base.withColumns({c: F.col(c).cast("double") for c in cols})
     in_schema = base.schema
-    comp_items = sorted(comps.items())
-
-    sum_schema = StructType(
-        [StructField("b", LongType()), StructField("comp", StringType()),
-         StructField("n_rows", LongType()), StructField("k", LongType()),
-         StructField("pos0", LongType()), StructField("trail", LongType()),
-         StructField("x0", DoubleType()), StructField("y0", DoubleType()),
-         StructField("has", BooleanType())]
-        + [StructField(f, DoubleType()) for f in
-           ("a", "a2", "bx", "by", "bs", "bs2",
-            "gxy0", "gxy1", "gxy2", "gxy3",
-            "gxx0", "gxx1", "gxx2", "gyy0", "gyy1", "gyy2")])
 
     def _obs(pdf, cx, cy):
         x = pdf[cx].to_numpy(dtype=np.float64, na_value=np.nan)
-        y = pdf[cy].to_numpy(dtype=np.float64, na_value=np.nan)
-        valid = ~(np.isnan(x) | np.isnan(y))
-        pos = np.flatnonzero(valid)
-        return x, y, pos
-
-    def summarize(key, pdf):
-        pdf = pdf.sort_values(OC)
-        b = int(key[0])
-        n = len(pdf)
-        rows = []
-        for ckey, (cx, cy, need) in comp_items:
-            x, y, pos = _obs(pdf, cx, cy)
-            if len(pos) == 0:
-                rows.append((b, ckey, n, 0, 0, 0, 0.0, 0.0, False)
-                            + (1.0, 1.0) + (0.0,) * 14)
-                continue
-            p0 = int(pos[0])
-            x0, y0 = float(x[p0]), float(y[p0])
-            xo = x[pos] - x0
-            yo = y[pos] - y0
-            d_tail = (np.diff(pos).astype(np.float64) if not ignore_na
-                      else np.ones(len(pos) - 1))
-            t = _ewmf_tail_transition(xo[1:], yo[1:], d_tail, alpha, need)
-            rows.append((b, ckey, n, len(pos), p0, n - 1 - int(pos[-1]),
-                         x0, y0, True,
-                         t["a"], t["a2"], t["bx"], t["by"], t["bs"], t["bs2"])
-                        + tuple(t["gxy"]) + tuple(t["gxx"]) + tuple(t["gyy"]))
-        return pd.DataFrame(rows, columns=[f.name for f in sum_schema.fields])
-
-    # pass 1 ships only (block id, order, chain input columns) —
-    # guide §4.1
-    summaries = _pass_summaries(
-        base,
-        [BLK, OC, *sorted({c for cx, cy, _ in comps.values()
-                           for c in (cx, cy)})],
-        summarize, sum_schema, aligned)
-    per: dict = {}
-    for r in summaries:
-        per.setdefault(r["comp"], {})[r["b"]] = r
-    blks = sorted({r["b"] for r in summaries})
-
-    # driver fold: <=P exact scalar steps + affine tail transitions.
-    # incoming[comp][b] = (uncentered state tuple or None, pregap)
-    incoming: dict[str, dict[int, tuple]] = {}
-    for ckey, _ in comp_items:
-        state, pregap = None, 0
-        incoming[ckey] = {}
-        for b in blks:
-            incoming[ckey][b] = (state, pregap)
-            s = per.get(ckey, {}).get(b)
-            if s is None:
-                continue
-            if not s["has"]:
-                if (not ignore_na) and state is not None:
-                    pregap += s["n_rows"]
-                continue
-            x0, y0 = s["x0"], s["y0"]
-            if state is None:
-                # after the first observation: sw = 1, dw = 1-sw2 = 0
-                st = (x0, y0, 0.0, 0.0, 0.0, 1.0, 0.0)
-            else:
-                d0 = 1.0 if ignore_na else float(pregap + s["pos0"] + 1)
-                st = _ewmf_scalar_step(state, x0, y0, d0, alpha)
-            cx_, cy_ = st[0] - x0, st[1] - y0
-            mx = s["a"] * cx_ + s["bx"] + x0
-            my = s["a"] * cy_ + s["by"] + y0
-            cxy = (s["a"] * st[2] + s["gxy0"] + s["gxy1"] * cx_
-                   + s["gxy2"] * cy_ + s["gxy3"] * cx_ * cy_)
-            cxx = (s["a"] * st[3] + s["gxx0"] + s["gxx1"] * cx_
-                   + s["gxx2"] * cx_ * cx_)
-            cyy = (s["a"] * st[4] + s["gyy0"] + s["gyy1"] * cy_
-                   + s["gyy2"] * cy_ * cy_)
-            sw = s["a"] * st[5] + s["bs"]
-            dw = s["a2"] * st[6] + s["bs2"]
-            state = (mx, my, cxy, cxx, cyy, sw, dw)
-            pregap = 0 if ignore_na else int(s["trail"])
-
-    out_schema = StructType(
-        in_schema.fields
-        + [StructField(sp[3], DoubleType()) for sp in specs
-           if sp[0] in ("cov", "corr") and sp[3] not in in_schema.fieldNames()])
-
-    def evaluate(key, pdf):
-        pdf = pdf.sort_values(OC)
-        b = int(key[0])
-        n = len(pdf)
-        cvals: dict[str, dict] = {}
-        for ckey, (cx, cy, need) in comp_items:
-            x, y, pos = _obs(pdf, cx, cy)
-            state, pregap = incoming[ckey].get(b, (None, 0))
-            cold = state is None
-            # incoming output value carried through obs-free prefixes
-            if cold:
-                in_vals = {t: np.nan for t in ("sw", "dw", "xy", "xx", "yy")}
-            else:
-                in_vals = {"xy": state[2], "xx": state[3], "yy": state[4],
-                           "sw": state[5], "dw": state[6]}
-            if len(pos) == 0:
-                cvals[ckey] = {"pos": pos, "chains": None, "in": in_vals}
-                continue
-            p0 = int(pos[0])
-            x0, y0 = float(x[p0]), float(y[p0])
-            xo = x[pos] - x0
-            yo = y[pos] - y0
-            d = (np.diff(pos).astype(np.float64) if not ignore_na
-                 else np.ones(len(pos) - 1))
-            if cold:
-                d0 = 1.0
-                cstate = (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-            else:
-                d0 = 1.0 if ignore_na else float(pregap + p0 + 1)
-                cstate = (state[0] - x0, state[1] - y0, state[2], state[3],
-                          state[4], state[5], state[6])
-            d = np.concatenate(([d0], d))
-            cvals[ckey] = {"pos": pos,
-                           "chains": _ewmf_chains(xo, yo, d, alpha, cold,
-                                                  cstate, need),
-                           "in": in_vals}
-        out_cols = {}
-        for sp in specs:
-            stat = sp[0]
-            ckey = (f"v:{sp[1]}" if stat in ("var", "std")
-                    else f"p:{sp[1]}:{sp[2]}")
-            ocol = sp[2] if stat in ("var", "std") else sp[3]
-            cv = cvals[ckey]
-            iv = cv["in"]
-            in_val = float(_ewmf_stat(stat, iv["sw"], iv["dw"], iv["xy"],
-                                      iv["xx"], iv["yy"]))
-            ch = cv["chains"]
-            if ch is None:
-                out_cols[ocol] = np.full(n, in_val)
-                continue
-            obs_out = _ewmf_stat(stat, ch["sw"], ch["dw"], ch.get("xy"),
-                                 ch.get("xx"), ch.get("yy"))
-            idx = np.searchsorted(cv["pos"], np.arange(n), side="right")
-            vals = np.concatenate(([in_val], np.asarray(obs_out)))
-            out_cols[ocol] = vals[idx]
-        for ocol, vals in out_cols.items():
-            pdf[ocol] = vals
-        return pdf
-
-    out = _pass_evaluate(base, evaluate, out_schema, aligned)
-    return out.drop(BLK, OC)
-
-
-def ewm_pairwise_adjust_blocked(sdf: SparkDataFrame, order_col: Column,
-                                col_x: str, col_y: str, out_col: str,
-                                alpha: float, ignore_na: bool,
-                                corr: bool = False,
-                                n_blocks: int | None = None,
-                                specs: list | None = None) -> SparkDataFrame:
-    """Distributed ungrouped ``ewm(adjust=True).cov/corr`` in PAIRWISE
-    form (see ewm_var_blocked):
-
-        cov_t  = U_t / (2·T_t),   U_t = Σ_{i<j} wᵢwⱼ (xᵢ−xⱼ)(yᵢ−yⱼ),
-        corr_t = Uxy / sqrt(Uxx·Uyy)   (the bias=True ratio — the
-                 debias factor cancels),
-        T_t    = Σ_{i<j} wᵢwⱼ
-
-    — algebraically identical to the raw-sums estimator but without
-    catastrophic cancellation when history weight decays toward machine
-    epsilon, and with T > 0 as the EXACT one-effective-observation NaN
-    rule. An observation requires BOTH columns (the reference's
-    is_observation). NOTE a deliberate divergence from the 0.24-dev
-    reference for corr: the reference composes corr from ewmcov(x, x)
-    variance legs with SINGLE-column validity (core/window.py:2326),
-    while this engine masks ALL THREE components pairwise — the
-    behavior of modern pandas 2.x, which the test oracle pins. Do not
-    "fix" the legs back to single-column validity.
-    Per-row chains with validity-pattern-only w² decay; linear block
-    carries with coefficient sums against the incoming centered S
-    carries. Reference kernel: window.pyx:1802."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (BooleanType, DoubleType, LongType,
-                                   StructField, StructType)
-
-    # specs: [(stat, out_col), ...] computes cov AND corr on the pair
-    # in ONE pass (r9 — every sum corr needs is already produced; the
-    # chained two-call form paid two summarize+evaluate passes)
-    specs = specs if specs is not None else [("corr" if corr else "cov",
-                                              out_col)]
-    corr_any = any(st == "corr" for st, _ in specs)
-    w = 1.0 - alpha
-    if w <= 0.0:
-        # one effective observation forever: unbiased cov and corr NaN
-        for _, oc in specs:
-            sdf = sdf.withColumn(oc, F.lit(None).cast("double"))
-        return sdf
-    OC = "__ord__"
-    mono = _is_order_id(order_col)
-    sdf = _pin_if_order(sdf, order_col)
-    base, aligned, _ = _blocked_base(sdf, order_col, n_blocks, mono)
-    for c in {col_x, col_y}:
-        base = base.withColumn(c, F.col(c).cast("double"))
-    in_schema = base.schema
-
-    sum_schema = StructType(
-        [StructField("b", LongType()), StructField("has", BooleanType())]
-        + [StructField(f, DoubleType()) for f in
-           ("s0", "sx", "sy", "sxy", "sxx", "syy", "dec", "refx", "refy",
-            "ta", "tb", "uaxy", "ubx_y", "uby_x", "ub0xy",
-            "uaxx", "ubx1", "ubx0", "uayy", "uby1", "uby0")])
-
-    def _exponents(valid, n):
-        if ignore_na:
-            return np.cumsum(valid.astype(np.float64))
-        return np.arange(1, n + 1, dtype=np.float64)
-
-    def _valid(pdf):
-        x = pdf[col_x].to_numpy(dtype=np.float64, na_value=np.nan)
-        y = pdf[col_y].to_numpy(dtype=np.float64, na_value=np.nan)
+        y = x if cy == cx else pdf[cy].to_numpy(dtype=np.float64,
+                                                na_value=np.nan)
         return x, y, ~(np.isnan(x) | np.isnan(y))
 
-    def _parts(x, y, valid, refx, refy):
-        xc = np.where(valid, x - refx, 0.0)
-        yc = np.where(valid, y - refy, 0.0)
-        sx, s0, dec = _ewma_adjust_parts(xc, valid, w, ignore_na)
-        sy, _, _ = _ewma_adjust_parts(yc, valid, w, ignore_na)
-        sxy, _, _ = _ewma_adjust_parts(xc * yc, valid, w, ignore_na)
-        sxx, _, _ = _ewma_adjust_parts(xc * xc, valid, w, ignore_na)
-        syy, _, _ = _ewma_adjust_parts(yc * yc, valid, w, ignore_na)
-        return xc, yc, s0, sx, sy, sxy, sxx, syy, dec
-
-    def _shift(arr, first, sd):
-        return sd * np.concatenate(([first], arr[:-1]))
+    sum_schema = StructType([
+        StructField("b", LongType()), StructField("comp", IntegerType()),
+        StructField("n", LongType()), StructField("k", LongType()),
+        StructField("s", MapType(StringType(), DoubleType()))])
 
     def summarize(key, pdf):
         pdf = pdf.sort_values(OC)
-        b = int(key[0])
-        x, y, valid = _valid(pdf)
-        n = len(x)
-        cols_ = [f.name for f in sum_schema.fields]
-        if n == 0 or not valid.any():
-            row = ([b, False] + [0.0] * 6
-                   + [float(w ** (0 if ignore_na else n)), 0.0, 0.0]
-                   + [0.0] * 12)
-            return pd.DataFrame([row], columns=cols_)
-        fv = int(np.argmax(valid))
-        refx, refy = float(x[fv]), float(y[fv])
-        xc, yc, s0, sx, sy, sxy, sxx, syy, dec = _parts(x, y, valid, refx, refy)
-        e = _exponents(valid, n)
-        sd = w ** np.diff(e, prepend=0.0)
-        wrev = w ** (2.0 * (e[-1] - e))
-        v = valid.astype(np.float64)
-        S0b = _shift(s0, 0.0, sd)
-        SXb = _shift(sx, 0.0, sd)
-        SYb = _shift(sy, 0.0, sd)
-        SXYb = _shift(sxy, 0.0, sd)
-        SXXb = _shift(sxx, 0.0, sd)
-        SYYb = _shift(syy, 0.0, sd)
-        wv = wrev * v
-        wd = wv * dec  # carry coefficient (= sd_t * dec_{t-1})
-        row = [b, True, float(s0[-1]), float(sx[-1]), float(sy[-1]),
-               float(sxy[-1]), float(sxx[-1]), float(syy[-1]),
-               float(dec[-1]), refx, refy,
-               float(np.sum(wv * S0b)),                       # ta
-               float(np.sum(wd)),                             # tb
-               float(np.sum(wv * (SXYb - xc * SYb - yc * SXb
-                                  + xc * yc * S0b))),         # uaxy
-               float(np.sum(wd * (-yc))),                     # ubx_y (SX_in)
-               float(np.sum(wd * (-xc))),                     # uby_x (SY_in)
-               float(np.sum(wd * xc * yc)),                   # ub0xy (S0_in)
-               float(np.sum(wv * (SXXb - 2.0 * xc * SXb
-                                  + xc * xc * S0b))),         # uaxx
-               float(np.sum(wd * (-2.0 * xc))),               # ubx1
-               float(np.sum(wd * xc * xc)),                   # ubx0
-               float(np.sum(wv * (SYYb - 2.0 * yc * SYb
-                                  + yc * yc * S0b))),         # uayy
-               float(np.sum(wd * (-2.0 * yc))),               # uby1
-               float(np.sum(wd * yc * yc))]                   # uby0
-        return pd.DataFrame([row], columns=cols_)
+        rows = []
+        for i, ((cx, cy), need) in enumerate(comps):
+            x, y, valid = _obs(pdf, cx, cy)
+            rows.append((int(key[0]), i, len(pdf), int(valid.sum()),
+                         summary(x, y, valid, need, alpha, ignore_na)))
+        return pd.DataFrame(rows, columns=sum_schema.fieldNames())
 
-    # pass 1 ships only (block id, order, x, y) — guide §4.1
-    summaries = _pass_summaries(base, [BLK, OC, *sorted({col_x, col_y})],
-                                summarize, sum_schema, aligned)
-    per = {r["b"]: r for r in summaries}
-    blks = sorted(per)
+    # pass 1 ships only (block id, order, input columns) — guide §4.1
+    per = {(r["comp"], r["b"]): r for r in
+           _pass_summaries(base, [BLK, OC, *cols], summarize, sum_schema,
+                           aligned)}
+    blks = sorted({b for _, b in per})
+    entries = {}
+    for i in range(len(comps)):
+        st, nobs = None, 0
+        for b in blks:
+            r = per[i, b]
+            entry, st = fold(st, r["s"], r["n"], r["k"], alpha, ignore_na)
+            entries[i, b] = (entry, nobs)
+            nobs += r["k"]
 
-    # states[b] = (S0, SX, SY, SXY, SXX, SYY, T, Uxy, Uxx, Uyy, refx,
-    # refy) — S centered at the block's refs; T/U shift-invariant
-    states: dict[int, tuple] = {}
-    S0 = SX = SY = SXY = SXX = SYY = T = Uxy = Uxx = Uyy = 0.0
-    cur = None
-    for b in blks:
-        s = per[b]
-        ref = ((s["refx"], s["refy"]) if s["has"]
-               else (cur if cur is not None else (0.0, 0.0)))
-        if cur is not None and cur != ref:
-            dx, dy = cur[0] - ref[0], cur[1] - ref[1]
-            SXY = SXY + dy * SX + dx * SY + dx * dy * S0
-            SXX = SXX + 2.0 * dx * SX + dx * dx * S0
-            SYY = SYY + 2.0 * dy * SY + dy * dy * S0
-            SX = SX + dx * S0
-            SY = SY + dy * S0
-        states[b] = (S0, SX, SY, SXY, SXX, SYY, T, Uxy, Uxx, Uyy,
-                     ref[0], ref[1])
-        dec2 = s["dec"] * s["dec"]
-        # T/U first: their carry terms use the INCOMING S sums
-        T = dec2 * T + s["ta"] + s["tb"] * S0
-        Uxy = (dec2 * Uxy + s["uaxy"] + s["ubx_y"] * SX + s["uby_x"] * SY
-               + s["ub0xy"] * S0 + s["tb"] * SXY)
-        Uxx = (dec2 * Uxx + s["uaxx"] + s["ubx1"] * SX + s["ubx0"] * S0
-               + s["tb"] * SXX)
-        Uyy = (dec2 * Uyy + s["uayy"] + s["uby1"] * SY + s["uby0"] * S0
-               + s["tb"] * SYY)
-        S0 = s["s0"] + s["dec"] * S0
-        SX = s["sx"] + s["dec"] * SX
-        SY = s["sy"] + s["dec"] * SY
-        SXY = s["sxy"] + s["dec"] * SXY
-        SXX = s["sxx"] + s["dec"] * SXX
-        SYY = s["syy"] + s["dec"] * SYY
-        cur = ref
-
-    out_schema = StructType(in_schema.fields
-                            + [StructField(oc, DoubleType())
-                               for _, oc in specs
-                               if oc not in in_schema.fieldNames()])
+    out_schema = StructType(
+        in_schema.fields + [StructField(oc, DoubleType())
+                            for oc in dict.fromkeys(sp[3] for sp in specs)
+                            if oc not in in_schema.fieldNames()])
 
     def evaluate(key, pdf):
         pdf = pdf.sort_values(OC)
         b = int(key[0])
-        x, y, valid = _valid(pdf)
-        n = len(x)
-        if n == 0:
-            for _, oc in specs:
-                pdf[oc] = np.empty(0)
-            return pdf
-        st = states.get(b)
-        if st is not None and st[0] > 0:
-            refx, refy = st[10], st[11]
-        elif valid.any():
-            fv = int(np.argmax(valid))
-            refx, refy = float(x[fv]), float(y[fv])
-        else:
-            for _, oc in specs:
-                pdf[oc] = np.full(n, np.nan)
-            return pdf
-        (S0in, SXin, SYin, SXYin, SXXin, SYYin,
-         Tin, Uxyin, Uxxin, Uyyin) = (st[:10] if st is not None
-                                      else (0.0,) * 10)
-        xc, yc, s0, sx, sy, sxy, sxx, syy, dec = _parts(x, y, valid, refx, refy)
-        s0 = s0 + dec * S0in
-        sx = sx + dec * SXin
-        sy = sy + dec * SYin
-        sxy = sxy + dec * SXYin
-        sxx = sxx + dec * SXXin
-        syy = syy + dec * SYYin
-        e = _exponents(valid, n)
-        sd = w ** np.diff(e, prepend=0.0)
-        S0b = _shift(s0, S0in, sd)
-        SXb = _shift(sx, SXin, sd)
-        SYb = _shift(sy, SYin, sd)
-        SXYb = _shift(sxy, SXYin, sd)
-        v = valid.astype(np.float64)
-        p = sd * sd
-        T = _chain_solve(p, v * S0b, Tin)
-        Uxy = _chain_solve(
-            p, v * (SXYb - xc * SYb - yc * SXb + xc * yc * S0b), Uxyin)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            if corr_any:
-                SXXb = _shift(sxx, SXXin, sd)
-                SYYb = _shift(syy, SYYin, sd)
-                Uxx = _chain_solve(
-                    p, v * (SXXb - 2.0 * xc * SXb + xc * xc * S0b), Uxxin)
-                Uyy = _chain_solve(
-                    p, v * (SYYb - 2.0 * yc * SYb + yc * yc * S0b), Uyyin)
-            seen = (np.maximum.accumulate(valid.astype(np.int8)) > 0) \
-                | (st is not None and st[0] > 0)
-            for stat, oc in specs:
-                if stat == "corr":
-                    out = Uxy / np.sqrt(np.maximum(Uxx, 0.0)
-                                        * np.maximum(Uyy, 0.0))
-                else:
-                    out = np.where(T > 0.0, Uxy / (2.0 * T), np.nan)
-                pdf[oc] = np.where(seen, out, np.nan)
+        res = {}
+        for i, ((cx, cy), need) in enumerate(comps):
+            x, y, valid = _obs(pdf, cx, cy)
+            entry, nobs = entries[i, b]
+            vals = evaluate_comp(x, y, valid, need, entry, alpha, ignore_na)
+            ok = nobs + np.cumsum(valid) >= minp
+            for stat, oc in outs[i]:
+                v = vals["var" if stat == "std" else stat]
+                res[oc] = np.where(ok, np.sqrt(v) if stat == "std" else v,
+                                   np.nan)
+        for oc, v in res.items():
+            pdf[oc] = v
         return pdf
 
     out = _pass_evaluate(base, evaluate, out_schema, aligned)

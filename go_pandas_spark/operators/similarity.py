@@ -497,12 +497,16 @@ def ivf_probe_topk(spark, path: str, queries: SparkDataFrame,
               .filter(F.col("__pr__") <= n_probe)
               .select("query_id", "__qv__", "cell"))
     # the probe table is tiny by construction (n_queries × n_probe):
-    # collect it ONCE and rebuild a local relation — deriving the
+    # collect it ONCE and rebuild a JVM local relation — deriving the
     # IN-list with .collect() and then joining the original subplan
-    # would execute the query-side scan + window twice
+    # would execute the query-side scan + window twice, and a
+    # Python-list createDataFrame would run a Python-worker job in
+    # every action that broadcasts it
+    from .distwindow import _local_table
+
     rows = probes.collect()
     probed_cells = sorted({r["cell"] for r in rows})
-    probes = spark.createDataFrame(rows, probes.schema)
+    probes = _local_table(spark, rows, probes.schema)
     idx = spark.read.parquet(path).filter(F.col("cell").isin(probed_cells))
     cand = (idx.join(F.broadcast(probes), "cell")
             .filter(F.col(id_col) != F.col("query_id")))

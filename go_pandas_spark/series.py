@@ -418,12 +418,11 @@ class Series:
 
     def ewm(self, com=None, span=None, halflife=None, alpha=None,
             min_periods: int = 0, adjust: bool = True, ignore_na: bool = False):
-        """``s.ewm(...)`` — runs the BLOCKED frame kernels
-        (distwindow.ewm_mean_blocked / ewm_var_blocked) on a derived
-        single-column frame; the result Series is anchored to that
-        derived frame (standalone use and index-aligned assignment
-        work; positional assignment into the original frame needs the
-        frame API ``df.ewm(...)``)."""
+        """``s.ewm(...)`` — runs the BLOCKED frame kernel
+        (distwindow.ewm_blocked) on a derived single-column frame; the
+        result Series is anchored to that derived frame (standalone
+        use and index-aligned assignment work; positional assignment
+        into the original frame needs the frame API ``df.ewm(...)``)."""
         from .frame import Frame
         from .window import EWM
 

@@ -177,17 +177,19 @@ _MODULES = ["tpch", "tpch2", "relational", "aggregation", "windows", "reshape", 
 # The driver hash-verifies the FIRST 50 entries of queries() each
 # round. Contract: the window leads with every query whose engine path
 # the round changed, then the stalest driver evidence. Current window:
-# every query whose plan holds a blocked kernel's driver-built tables
+# the queries that run the ungrouped EWM kernel, then every query
+# whose plan holds a blocked kernel's driver-built tables
 # (block ids, positions, carries, offsets, borrow tables, all attached
 # through ``distwindow._attach_table``), then the rows whose last
 # recorded verification is oldest (r10, then r11).
 _VERIFY_FIRST = [
-    # blocked kernels' table attach (this round's path)
+    # the one ungrouped EWM kernel (distwindow.ewm_blocked)
+    "ewm_var_noadjust_global", "ewm_cov_corr_global",
+    # blocked kernels' table attach
     "cumulative_ungrouped_global", "series_rolling_expression",
     "expanding_moments_global", "ffill_global_limit",
     "merge_asof_global_noby", "rolling_ungrouped_global",
     "expanding_median_approx_global", "expanding_median_approx_grouped",
-    "ewm_var_noadjust_global", "ewm_cov_corr_global",
     "interpolate_global_linear", "resample_upsample_ffill",
     "merge_ordered_ffill", "pack_sequences_chunked", "frame_pct_change",
     # last verified r10

@@ -2070,13 +2070,16 @@ def fam_ewm_second_moments(spark, rng):
         exp = getattr(pew, stat)(pdf["y"]).to_numpy()
     # at extreme alpha (w -> 0) the REFERENCE kernel accumulates fp
     # error ~1e-5+ per its own recursion — the loose band covers
-    # PANDAS' noise, not the engine's: both engine forms are exact
-    # (adjust=True pairwise — test_ewm_var_degenerate_gap_is_exact;
-    # adjust=False since the r10 dw-complement fix: a 60-digit
-    # replication of the reference recursion at seed 88160087 shows
-    # the engine ≤4e-14 off the true estimator on every row — incl.
-    # the unbias-degenerate first-obs-after-gap rows where pandas
-    # float64 is 2.4e-5 off — while the pre-fix 1−Σw² carry was 1.4e-4)
+    # PANDAS' noise, not the engine's. adjust=True's pairwise form is
+    # exact in the degenerate regime (test_ewm_var_degenerate_gap_is_exact).
+    # adjust=False carries the debias complement dw (r10: a 60-digit
+    # replication at seed 88160087 puts the engine ≤4e-14 off on every
+    # row, where pandas float64 is 2.4e-5 off), but it was NOT exact
+    # past the gap cap above: a chain chunk starting on a step with
+    # decay below 2^-52 made var after a long gap depend on the block
+    # layout (up to 1e64). Such steps now run as exact scalar steps —
+    # test_ewm_noadjust_gap_rows_independent_of_block_layout pins that
+    # regime, which this family's draws never reach.
     rtol = 1e-4 if alpha > 0.9 else 1e-6
     okm = (np.isnan(got) & np.isnan(exp)) | np.isclose(
         got, exp, rtol=rtol, atol=1e-9, equal_nan=True)

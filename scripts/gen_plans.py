@@ -126,9 +126,10 @@ NOTES = {
         "applyInPandas passes hash-partitioned on __blk__; no "
         "Coalesce(1), no global window."),
     "ewm_cov_corr_global": (
-        "Ungrouped ewm cov/corr (adjust=True): six discounted sums with "
-        "linear block carries (pairwise ewm_var_blocked shape). Same "
-        "blocked two-pass plan; cov and corr each run one engine pass."),
+        "Ungrouped ewm cov/corr (adjust=True): centred discounted sums "
+        "and pairwise T/U sums with linear block carries (the one EWM "
+        "kernel, distwindow.ewm_blocked). Same blocked two-pass plan; "
+        "cov and corr share one engine pass."),
     "ngram_bigram_top50": (
         "Bigram vocabulary head: tokenization + adjacent-pair zip in the "
         "scan project, one wordcount shuffle (partial+final hash "

@@ -120,9 +120,9 @@ def main() -> None:
                   f._sdf, F.col(I.ORDER_COL), {"v": ("v", "sum")},
                   n_blocks=nb)))
         probe(f"ewm_var_nblocks_{nb}",
-              lambda nb=nb: gp.Frame(dw.ewm_var_blocked(
-                  f._sdf, F.col(I.ORDER_COL), ["v"], alpha=0.1,
-                  ignore_na=False, n_blocks=nb)))
+              lambda nb=nb: gp.Frame(dw.ewm_blocked(
+                  f._sdf, F.col(I.ORDER_COL), [("var", "v", "v", "v")],
+                  alpha=0.1, adjust=True, ignore_na=False, n_blocks=nb)))
 
     def _nblocks_1024_parity():
         import numpy as np
@@ -133,9 +133,10 @@ def main() -> None:
         assert nblk > 256, f"expected >256 blocks, got {nblk}"
         results["nblocks_1024_distinct_blocks"] = {"blocks": nblk}
         pv = f[["v"]].to_pandas().reset_index(drop=True)["v"]
-        got = (gp.Frame(dw.ewm_var_blocked(f._sdf, F.col(I.ORDER_COL), ["v"],
-                                           alpha=0.1, ignore_na=False,
-                                           n_blocks=1024))[["v"]]
+        got = (gp.Frame(dw.ewm_blocked(f._sdf, F.col(I.ORDER_COL),
+                                       [("var", "v", "v", "v")], alpha=0.1,
+                                       adjust=True, ignore_na=False,
+                                       n_blocks=1024))[["v"]]
                .to_pandas().reset_index(drop=True)["v"].to_numpy())
         exp = pv.ewm(alpha=0.1).var().to_numpy()
         assert np.allclose(got, exp, rtol=1e-6, atol=1e-9, equal_nan=True), \

@@ -1223,27 +1223,26 @@ def test_blocked_kernels_high_block_count(spark):
     exp = tdf.sort_values(["t", "k"])["v"].ffill().to_numpy()
     assert np.allclose(got, exp, rtol=1e-12, equal_nan=True)
 
-    out = dw.ewm_mean_blocked(sdf, oc, ["v"], alpha=0.2, adjust=True,
-                              ignore_na=False, n_blocks=1024)
+    out = dw.ewm_blocked(sdf, oc, [("mean", "v", "v", "v")], alpha=0.2,
+                         adjust=True, ignore_na=False, n_blocks=1024)
     got = out.toPandas().sort_values("k")["v"].to_numpy()
     assert np.allclose(got, base["v"].ewm(alpha=0.2).mean(), rtol=1e-8,
                        equal_nan=True)
 
-    out = dw.ewm_var_blocked(sdf, oc, ["v"], alpha=0.2, ignore_na=False,
-                             n_blocks=1024)
+    out = dw.ewm_blocked(sdf, oc, [("var", "v", "v", "v")], alpha=0.2,
+                         adjust=True, ignore_na=False, n_blocks=1024)
     got = out.toPandas().sort_values("k")["v"].to_numpy()
     assert np.allclose(got, base["v"].ewm(alpha=0.2).var(), rtol=1e-7,
                        atol=1e-10, equal_nan=True)
 
-    out = dw.ewm_noadjust_blocked(sdf, oc, [("var", "v", "v")], alpha=0.2,
-                                  ignore_na=False, n_blocks=1024)
+    out = dw.ewm_blocked(sdf, oc, [("var", "v", "v", "v")], alpha=0.2,
+                         adjust=False, ignore_na=False, n_blocks=1024)
     got = out.toPandas().sort_values("k")["v"].to_numpy()
     exp = base["v"].ewm(alpha=0.2, adjust=False).var()
     assert np.allclose(got, exp, rtol=1e-7, atol=1e-10, equal_nan=True)
 
-    out = dw.ewm_pairwise_adjust_blocked(sdf, oc, "v", "w", "o", alpha=0.2,
-                                         ignore_na=False, corr=True,
-                                         n_blocks=1024)
+    out = dw.ewm_blocked(sdf, oc, [("corr", "v", "w", "o")], alpha=0.2,
+                         adjust=True, ignore_na=False, n_blocks=1024)
     got = out.toPandas().sort_values("k")["o"].to_numpy()
     exp = base["v"].ewm(alpha=0.2).corr(base["w"])
     assert np.allclose(got, exp, rtol=1e-6, atol=1e-8, equal_nan=True)
@@ -2015,6 +2014,126 @@ def test_ewm_noadjust_cov_degenerate_gap_exact_fraction_oracle(spark):
         assert np.allclose(got, exp, rtol=1e-12, atol=1e-15, equal_nan=True)
 
 
+def _ewm_gap_frame():
+    rng = np.random.RandomState(3)
+    n = 20_000
+    x = np.round(rng.uniform(-10, 10, n), 3)
+    for s in (1234, 5678, 9012, 13456, 17890):
+        x[s:s + 61] = np.nan
+    return pd.DataFrame({"rid": np.arange(n, dtype="int64"), "x": x})
+
+
+# ewm(adjust=False).var at the first row after each 61-row gap: the
+# reference recursion (window.pyx:1802) replicated in 120-digit
+# arithmetic on the same doubles
+_EWM_GAP_ROWS = [1295, 5739, 9073, 13517, 17951]
+_EWM_GAP_VAR = {
+    0.97: [24.722138244947067, 4.0021404162269596, 0.8584375220110442,
+           78.882456910976878, 84.468130702775542],
+    0.7: [18.939539666452348, 9.8823113806742342, 4.8381381577877194,
+          80.805921439001065, 68.947004163581746],
+}
+
+
+def test_ewm_noadjust_gap_rows_independent_of_block_layout(spark):
+    """adjust=False var after a long NaN gap must not depend on where
+    the blocks fall. There the true x − mean is only p·Δ with p < 2⁻⁵²;
+    a chain chunk that starts on such a row computed it as
+    cp·(carry + r/cp), an eps·|x| error that the debias divide blew up
+    to ~1e64 under some layouts. pandas returns NaN at these rows, so
+    the oracle is the high-precision replication."""
+    from go_pandas_spark.operators import distwindow as dw
+
+    pdf = _ewm_gap_frame()
+    for alpha, exp in _EWM_GAP_VAR.items():
+        runs = []
+
+        def check(got, layout):
+            assert np.allclose(got[_EWM_GAP_ROWS], exp, rtol=1e-9), \
+                (alpha, layout, got[_EWM_GAP_ROWS])
+            if runs:
+                assert np.allclose(got, runs[0], rtol=1e-9, atol=1e-12,
+                                   equal_nan=True), (alpha, layout)
+            runs.append(got)
+
+        for parts in (1, 4):
+            f = gp.Frame.from_pandas(spark, pdf).repartition(parts) \
+                .sort_values("rid")
+            check(f.ewm(alpha=alpha, adjust=False).var(cols=["x"])
+                  .to_pandas().sort_values("rid")["x"].to_numpy(),
+                  f"{parts} partitions")
+        sdf = gp.Frame.from_pandas(spark, pdf).sort_values("rid")._sdf
+        for nb in (3, 7, 40):
+            out = dw.ewm_blocked(sdf, F.col(I.ORDER_COL),
+                                 [("var", "x", "x", "x")], alpha,
+                                 adjust=False, ignore_na=False, n_blocks=nb)
+            check(out.toPandas().sort_values(I.ORDER_COL)["x"].to_numpy(),
+                  f"{nb} blocks")
+
+
+def test_ewm_min_periods_costs_no_build_job(spark):
+    """min_periods masks by the kernel's own observation count: the
+    build runs exactly the jobs of min_periods=0 (it used to run a
+    second blocked kernel for the count)."""
+    rng = np.random.RandomState(41)
+    n = 20_000
+    v = rng.normal(5, 2, n)
+    v[rng.random(n) < 0.1] = np.nan
+    pdf = pd.DataFrame({"k": np.arange(n), "v": v})
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(8)).sort_values("k")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    f.ewm(alpha=0.3).var(cols=["v"])  # pins the sorted input once
+
+    def build_jobs(minp):
+        tag = f"ewm_build_minp{minp}"
+        sc.setJobGroup(tag, tag)
+        try:
+            out = f.ewm(alpha=0.3, min_periods=minp).var(cols=["v"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store sees every build job once the bus drains
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(tracker.getJobIdsForGroup(tag))
+
+    out0, jobs0 = build_jobs(0)
+    out5, jobs5 = build_jobs(5)
+    assert jobs0 > 0 and jobs5 == jobs0, (jobs0, jobs5)
+    got = out5.to_pandas().sort_values("k")["v"].to_numpy()
+    exp = pdf["v"].ewm(alpha=0.3, min_periods=5).var().to_numpy()
+    assert np.allclose(got, exp, rtol=1e-7, atol=1e-10, equal_nan=True)
+
+
+def test_ungrouped_ewm_alpha_one_matches_pandas(spark):
+    """alpha = 1 keeps one effective observation under either adjust:
+    mean is the last valid value, var/std/cov/corr are NaN — on the
+    renormalized chains like any other alpha, no special path."""
+    rng = np.random.RandomState(17)
+    n = 600
+    x = np.round(rng.uniform(-10, 10, n), 3)
+    y = rng.normal(0, 3, n)
+    x[rng.random(n) < 0.15] = np.nan
+    y[rng.random(n) < 0.1] = np.nan
+    x[200:260] = np.nan
+    pdf = pd.DataFrame({"k": np.arange(n), "x": x, "y": y})
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(6)).sort_values("k")
+    for adjust in (True, False):
+        for ignore_na in (True, False):
+            ew = f.ewm(alpha=1.0, adjust=adjust, ignore_na=ignore_na)
+            pe = pdf["x"].ewm(alpha=1.0, adjust=adjust, ignore_na=ignore_na)
+            for stat in ("mean", "var", "std"):
+                got = (getattr(ew, stat)(cols=["x"]).to_pandas()
+                       .sort_values("k")["x"].to_numpy())
+                assert np.allclose(got, getattr(pe, stat)(), rtol=1e-12,
+                                   equal_nan=True), (stat, adjust, ignore_na)
+            out = (ew.cov_corr("x", "y", cov_col="c", corr_col="r")
+                   .to_pandas().sort_values("k"))
+            for stat, col in (("cov", "c"), ("corr", "r")):
+                exp = getattr(pe, stat)(pdf["y"])
+                assert np.allclose(out[col], exp, rtol=1e-12,
+                                   equal_nan=True), (stat, adjust, ignore_na)
+
+
 def test_first_valid_refs_anchor_contract(spark):
     """r12 (VERDICT r11 #2): the deterministic-sample contract is
     self-enforcing — no engine ORDER_COL and no order_by= raises
@@ -2062,7 +2181,7 @@ def test_moment_chain_repins_nothing_on_rerun(spark):
 
 def test_aligned_two_pass_zero_shuffle(spark):
     """r13: when every sid lives wholly in one physical partition of
-    the pinned relation (collect_sid_layout aligned=True), the five
+    the pinned relation (collect_sid_layout aligned=True), the two
     summarize/evaluate kernels run both passes as mapInPandas with
     ZERO exchanges — and match pandas exactly. A filtered frame
     (offset gaps) must fall back and stay correct."""
@@ -2092,17 +2211,20 @@ def test_aligned_two_pass_zero_shuffle(spark):
         got = out.toPandas().sort_values("k")[col].to_numpy()
         assert np.allclose(got, exp, rtol=1e-7, atol=1e-10, equal_nan=True)
 
-    run(dw.ewm_mean_blocked, "v", base["v"].ewm(alpha=0.2).mean(),
-        cols=["v"], alpha=0.2, adjust=True, ignore_na=False)
-    run(dw.ewm_var_blocked, "v", base["v"].ewm(alpha=0.2).var(),
-        cols=["v"], alpha=0.2, ignore_na=False)
-    run(dw.ewm_noadjust_blocked, "v",
+    run(dw.ewm_blocked, "v", base["v"].ewm(alpha=0.2).mean(),
+        specs=[("mean", "v", "v", "v")], alpha=0.2, adjust=True,
+        ignore_na=False)
+    run(dw.ewm_blocked, "v", base["v"].ewm(alpha=0.2).var(),
+        specs=[("var", "v", "v", "v")], alpha=0.2, adjust=True,
+        ignore_na=False)
+    run(dw.ewm_blocked, "v",
         base["v"].ewm(alpha=0.2, adjust=False).var(),
-        specs=[("var", "v", "v")], alpha=0.2, ignore_na=False)
-    run(dw.ewm_pairwise_adjust_blocked, "o",
+        specs=[("var", "v", "v", "v")], alpha=0.2, adjust=False,
+        ignore_na=False)
+    run(dw.ewm_blocked, "o",
         base["v"].ewm(alpha=0.2).corr(base["w"]),
-        col_x="v", col_y="w", out_col="o", alpha=0.2, ignore_na=False,
-        corr=True)
+        specs=[("corr", "v", "w", "o")], alpha=0.2, adjust=True,
+        ignore_na=False)
 
     # approx expanding median through the aligned path: error stays
     # within ~one grid cell of the exact expanding median
@@ -2122,8 +2244,8 @@ def test_aligned_two_pass_zero_shuffle(spark):
     fm = f[f["w"] > -1.0]
     stats2, aligned2 = dw.collect_sid_layout(fm._sdf, oc)
     assert stats2 is None and not aligned2
-    got = (dw.ewm_mean_blocked(fm._sdf, oc, ["v"], alpha=0.3, adjust=True,
-                               ignore_na=False)
+    got = (dw.ewm_blocked(fm._sdf, oc, [("mean", "v", "v", "v")], alpha=0.3,
+                          adjust=True, ignore_na=False)
            .toPandas().sort_values("k")["v"].to_numpy())
     exp = (base[base["w"] > -1.0]
            .sort_values("k")["v"].ewm(alpha=0.3).mean().to_numpy())

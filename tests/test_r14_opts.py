@@ -60,8 +60,8 @@ def test_aligned_rows_cap_is_hard_precondition(spark, monkeypatch):
         base2, aligned2, _ = dw._blocked_base(sdf, oc, None, True)
         assert not aligned2
         # and the fallback layout still computes the right answer
-        out = dw.ewm_mean_blocked(sdf, oc, ["v"], alpha=0.3, adjust=True,
-                                  ignore_na=False)
+        out = dw.ewm_blocked(sdf, oc, [("mean", "v", "v", "v")], alpha=0.3,
+                             adjust=True, ignore_na=False)
         got = out.toPandas().sort_values("k")["v"].to_numpy()
         exp = base["v"].ewm(alpha=0.3).mean().to_numpy()
         assert np.allclose(got, exp, rtol=1e-8, equal_nan=True)

@@ -136,3 +136,7 @@ def test_ivf_at_rest_index_partition_pruning(spark, tmp_path):
     assert "PartitionFilters: [" in plan
     seg = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "cell" in seg
+    # the broadcast probe table is a JVM LocalTableScan, not a
+    # Python-RDD scan that runs a Python-worker job per action
+    bcast = plan.split("BroadcastExchange", 1)[1]
+    assert "LocalTableScan" in bcast and "ExistingRDD" not in plan
